@@ -28,14 +28,18 @@ Here the same capability is set-oriented and scales to 10^12 turns:
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import pipeline
 from ..operators.canonicalize import build_edges, build_nodes
+from .iceberg import LINEAGE_COLS
 
 
 class ResumableKGWriter:
@@ -115,7 +119,10 @@ class ResumableKGWriter:
     def _lineage_missing(self, e: Exception) -> bool:
         """True iff the error means the lineage table/path doesn't exist
         (first run against this warehouse), checked against the actual
-        filesystem/catalog state rather than by parsing error strings."""
+        filesystem/catalog state rather than by parsing error strings.
+        A parquet directory without ``part-*`` files counts as absent: a
+        crash inside the very first lineage append leaves only
+        ``_temporary`` behind, and no data file means no commit."""
         if self.ice is not None:
             try:
                 names = {r["tableName"] for r in self.spark.sql(
@@ -124,15 +131,18 @@ class ResumableKGWriter:
                 return "lineage" not in names
             except Exception:
                 return False  # catalog itself unreachable: not "absent"
-        return not os.path.exists(self.lineage_path)
+        return not glob.glob(os.path.join(self.lineage_path, "part-*"))
 
     def _commit(self, bucket: int, rows_in: int, n_triples: int,
                 wall_ms: int) -> None:
-        row = [(self.run_id, bucket, rows_in, n_triples, wall_ms, "ok",
-                time.strftime("%Y-%m-%dT%H:%M:%S"))]
-        df = self.spark.createDataFrame(
-            row, "run_id string, bucket int, rows_in long, n_triples long, "
-                 "wall_ms long, status string, finished_at string")
+        # an Arrow table becomes a local relation; a list of tuples
+        # would go through a pickled Python RDD
+        row = pa.table({
+            "run_id": [self.run_id], "bucket": [bucket],
+            "rows_in": [rows_in], "n_triples": [n_triples],
+            "wall_ms": [wall_ms], "status": ["ok"],
+            "finished_at": [time.strftime("%Y-%m-%dT%H:%M:%S")]})
+        df = self.spark.createDataFrame(row, LINEAGE_COLS)
         if self.ice is not None:
             self.ice.append_lineage(df)
             return
@@ -162,16 +172,20 @@ class ResumableKGWriter:
         The bucket lands in its own ``bucket=K/`` directory (partition
         discovery reads it back as a partition column) so concurrent
         bucket writers never share an output ``_temporary`` dir and a
-        re-run cleanly replaces a crashed attempt's partial files."""
-        from pyspark.sql import Observation
+        re-run cleanly replaces a crashed attempt's partial files.
 
+        A bucket with no conversations writes an empty ``bucket=K/``
+        directory and returns ``(0, 0)``. AQE prunes the observed input
+        count together with the empty statement cache, so a bucket
+        without statements pays one extra scan job to recount it."""
         from ..operators.extraction import extract_statements
 
         d = pipeline.load_synth(self.spark, self.synth_path)
         t = self._bucketed_transcripts().filter(F.col("bucket") == bucket)
         obs_in, obs_out = Observation(), Observation()
-        t = t.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        statements = extract_statements(t.drop("bucket")).persist()
+        statements = extract_statements(
+            t.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+            .drop("bucket")).persist()
         triples = pipeline.triples_from_statements(
             statements, d["alias_dim"], d["pred_dim"])
         out = triples.observe(obs_out,
@@ -183,7 +197,13 @@ class ResumableKGWriter:
             (out.write.mode("overwrite")
              .parquet(os.path.join(self.triples_path, f"bucket={bucket}")))
         statements.unpersist()
-        return int(obs_in.get["rows_in"]), int(obs_out.get["n_triples"])
+        try:
+            rows_in = int(obs_in.get["rows_in"])
+        except Py4JJavaError:
+            # AQE replaced the empty statement cache, observed scan
+            # included, with an empty relation: no metrics row to read
+            rows_in = t.count()
+        return rows_in, int(obs_out.get["n_triples"])
 
     def run(self, fail_after: int | None = None,
             concurrency: int = 4) -> dict:
@@ -251,24 +271,19 @@ class ResumableKGWriter:
         deleted, and every lineage consumer is duplicate-tolerant
         (``committed_buckets`` reads a distinct set), so a crash at any
         point leaves a readable, at-worst-over-complete directory —
-        never a missing or partial one. Rows ride through the driver:
-        lineage is metadata-sized (one row per bucket commit), so the
-        collect is bounded by bucket count, not data size. Returns the
-        number of files removed."""
+        never a missing or partial one. The rows are materialized with
+        ``localCheckpoint`` (no driver round trip) and keep the schema
+        they were written with, so a lineage column change cannot be
+        miswritten here. Returns the number of files removed."""
         if self.ice is not None:
             return 0
         if min_files is None:
             min_files = self.LINEAGE_COMPACT_MIN_FILES
-        import glob
         old = sorted(glob.glob(os.path.join(self.lineage_path,
                                             "part-*")))
         if len(old) < min_files:
             return 0
-        rows = self.spark.read.parquet(self.lineage_path).collect()
-        df = self.spark.createDataFrame(
-            rows,
-            "run_id string, bucket int, rows_in long, n_triples long, "
-            "wall_ms long, status string, finished_at string")
+        df = self.spark.read.parquet(self.lineage_path).localCheckpoint()
         df.coalesce(1).write.mode("append").parquet(self.lineage_path)
         for p in old:
             for victim in (p, os.path.join(os.path.dirname(p),

@@ -1,11 +1,29 @@
-"""Iterative hash-min connected components (DataFrame self-join loop).
+"""Connected components: contract in the JVM, finish on the driver or
+in a distributed loop.
 
 Stands in for the reference's Neo4j MERGE-based canonical dedup (unique
 ``wid`` constraint + swallowed ConstraintError, db/db_connection.py:51-56,
 143-146): entities that share a normalized alias collapse into one
 canonical cluster whose id is the minimum qid of the component.
 
-Algorithm (hash-min label propagation):
+``connected_components`` runs in three steps:
+
+1. **Contract.** One hash-to-min round (the local contraction of Łącki
+   et al., "Connected Components at Scale via Local Contractions",
+   2018): ``m(v) = min(v, min neighbour)`` in one ``groupBy``, then the
+   label graph ``(least(m_a, m_b), greatest(m_a, m_b))`` over the edges
+   with ``m_a != m_b``, deduplicated. The label graph has the input's
+   components on fewer vertices and edges; a star around its minimum
+   contracts away entirely.
+2. **Finish.** A bounded ``take(DRIVER_CC_THRESHOLD + 1)`` probes the
+   label graph. If it fits, union-find finishes on the driver and its
+   result goes back to the JVM as an Arrow table (a local relation, no
+   pickled Python RDD and no Python worker pool left running). If not,
+   the distributed loop below runs on the label graph.
+3. **Compose.** ``component(v) = coalesce(comp[m(v)], m(v))``, so the
+   contraction round is never wasted work.
+
+The distributed loop is hash-min label propagation:
     label(v) <- min(label(v), min over neighbors u of label(u))
 iterated to fixpoint. Each iteration is one shuffle (groupBy id); the
 frontier DataFrame is ``localCheckpoint``-ed every iteration to truncate
@@ -14,7 +32,8 @@ dies long before 100 TB. Convergence is a single (count, hash-sum)
 aggregate over the new label set — labels only ever decrease, so an
 unchanged signature IS the fixpoint; no join against the previous
 labels and no changed-set shuffle (r3 verdict #4; same detector as the
-twostar variant).
+twostar variant). ``force_distributed=True`` runs it on the raw edges,
+without contraction.
 
 Iterations are bounded by the graph diameter; alias-sharing graphs are
 shallow (star-ish around hub aliases), so typical convergence is <10
@@ -27,23 +46,29 @@ output contract, selectable via ``algorithm="twostar"``.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StringType, StructField, StructType
 
 
-DRIVER_CC_THRESHOLD = 100_000  # default edge cap for the driver-side
-# path; config-driven via the ``driver_threshold`` parameter (r2 verdict:
-# the old 2M default was a real driver-memory bite). Below the cap a
-# driver union-find beats a distributed loop by orders of magnitude
-# (each distributed iteration costs a shuffle + action; a
-# dimension-sized graph is one bounded take). Mirrors the reference's
-# own judgment call of keeping Dominant-Set clustering driver-side on
-# small subgraphs (services/app.py:342-392).
+DRIVER_CC_THRESHOLD = 100_000  # default cap on label-graph edges (the
+# graph after contraction) for the driver-side finish; config-driven via
+# the ``driver_threshold`` parameter (r2 verdict: the old 2M default was
+# a real driver-memory bite). Below the cap a driver union-find beats a
+# distributed loop by orders of magnitude (each distributed iteration
+# costs a shuffle + action; a dimension-sized graph is one bounded take).
+# Mirrors the reference's own judgment call of keeping Dominant-Set
+# clustering driver-side on small subgraphs (services/app.py:342-392).
 
 
-def _union_find(pairs, spark) -> DataFrame:
+def _union_find(pairs, spark,
+                id_type: DataType = StringType()) -> DataFrame:
     """Union-find over collected (a, b) rows; identical output contract
-    to the distributed variant."""
+    to the distributed variant. The result is handed to the JVM as an
+    Arrow table (a local relation): a list of tuples would become a
+    pickled Python RDD and keep a Python worker pool alive afterwards,
+    and an empty pandas frame would take that path too."""
     parent: dict = {}
 
     def find(x):
@@ -57,17 +82,17 @@ def _union_find(pairs, spark) -> DataFrame:
         if a != b:
             parent[max(a, b)] = min(a, b)
     comp = {x: find(x) for x in list(parent)}
-    if not comp:
-        return spark.createDataFrame([], "id string, component string")
     return spark.createDataFrame(
-        [(k, v) for k, v in comp.items()], ["id", "component"])
+        pa.table({"id": list(comp), "component": list(comp.values())}),
+        StructType([StructField("id", id_type),
+                    StructField("component", id_type)]))
 
 
 def connected_components_driver(edges: DataFrame, src: str = "src",
                                 dst: str = "dst") -> DataFrame:
     """Union-find on the driver for dimension-sized graphs."""
     return _union_find(edges.select(src, dst).collect(),
-                       edges.sparkSession)
+                       edges.sparkSession, edges.schema[src].dataType)
 
 
 def connected_components_twostar(edges: DataFrame, src: str = "src",
@@ -149,33 +174,10 @@ def connected_components_twostar(edges: DataFrame, src: str = "src",
             .select("id", F.coalesce("v", "id").alias("component")))
 
 
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 50,
-                         force_distributed: bool = False,
-                         driver_threshold: int | None = None,
-                         algorithm: str = "hashmin") -> DataFrame:
-    """Return (id, component) where component = min id reachable.
-
-    ``edges`` is undirected input (each pair listed once is enough).
-    Size-aware: small graphs short-circuit to driver union-find; large
-    graphs run the iterative hash-min loop below (or large-star/small-
-    star when ``algorithm="twostar"`` — pick it when the component
-    diameter may exceed the iteration budget; alias graphs are shallow
-    so hash-min stays the default). The probe is a single bounded
-    ``take(threshold + 1)`` — Spark scans partitions incrementally and
-    stops at the bound, and the fetched rows ARE the union-find input,
-    so the common small-graph path costs exactly one job and one bounded
-    transfer (the old probe ran a limit+count job and then
-    re-collected).
-    """
-    thr = DRIVER_CC_THRESHOLD if driver_threshold is None \
-        else driver_threshold
-    if not force_distributed:
-        head = edges.select(src, dst).take(thr + 1)
-        if len(head) <= thr:
-            return _union_find(head, edges.sparkSession)
-    if algorithm == "twostar":
-        return connected_components_twostar(edges, src, dst, max_iter)
+def _hash_min(edges: DataFrame, src: str, dst: str,
+              max_iter: int) -> DataFrame:
+    """The distributed hash-min loop: (id, component) over the vertices
+    of the non-self-loop edges."""
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
            .filter(F.col("a") != F.col("b"))
@@ -215,6 +217,76 @@ def connected_components(edges: DataFrame, src: str = "src",
     return labels
 
 
+def _contract(edges: DataFrame, src: str,
+              dst: str) -> tuple[DataFrame, DataFrame]:
+    """One hash-to-min round in the JVM: ``m(v) = min(v, min neighbour)``
+    for every vertex (self-loop-only vertices included), and the label
+    graph ``(least(m_a, m_b), greatest(m_a, m_b))`` over the edges whose
+    endpoints got different labels, deduplicated. Both ends of an edge
+    share a component, so the label graph has the same components as
+    the input, each one's minimum is its own label, and a vertex's
+    component is its label's component."""
+    # both directions of each edge out of one pass over ``edges``
+    sym = edges.select(F.explode(F.array(
+        F.struct(F.col(src).alias("id"), F.col(dst).alias("n")),
+        F.struct(F.col(dst).alias("id"), F.col(src).alias("n")))).alias("p"))
+    m = (sym.groupBy("p.id").agg(F.min("p.n").alias("n"))
+         .select("id", F.least("id", "n").alias("m")))
+    label = (edges.select(src, dst)
+             .join(m.select(F.col("id").alias(src),
+                            F.col("m").alias("_ma")), src)
+             .join(m.select(F.col("id").alias(dst),
+                            F.col("m").alias("_mb")), dst)
+             .select(F.least("_ma", "_mb").alias("src"),
+                     F.greatest("_ma", "_mb").alias("dst"))
+             .filter(F.col("src") != F.col("dst"))
+             .distinct())
+    return m, label
+
+
+def connected_components(edges: DataFrame, src: str = "src",
+                         dst: str = "dst", max_iter: int = 50,
+                         force_distributed: bool = False,
+                         driver_threshold: int | None = None,
+                         algorithm: str = "hashmin") -> DataFrame:
+    """Return (id, component) where component = min id reachable.
+
+    ``edges`` is undirected input (each pair listed once is enough).
+    The default path contracts first, then finishes on the label graph:
+    one hash-to-min round (``_contract``) runs in the JVM, a single
+    bounded ``take(threshold + 1)`` probes the label graph, and a label
+    graph within the cap finishes by driver union-find (its rows ARE the
+    union-find input). A larger one runs the distributed loop on the
+    label graph instead: hash-min, or large-star/small-star when
+    ``algorithm="twostar"`` (pick it when the component diameter may
+    exceed the iteration budget; alias graphs are shallow so hash-min
+    stays the default). Either way the answer is composed with the
+    contraction as ``coalesce(comp[m(v)], m(v))``, so the contraction
+    round is never wasted work. Every vertex of ``edges`` is labelled,
+    self-loop-only ones as singletons.
+
+    ``force_distributed=True`` skips contraction and the probe and runs
+    the chosen loop on the raw edges; it drops self-loop-only vertices.
+    """
+    thr = DRIVER_CC_THRESHOLD if driver_threshold is None \
+        else driver_threshold
+    if force_distributed:
+        if algorithm == "twostar":
+            return connected_components_twostar(edges, src, dst, max_iter)
+        return _hash_min(edges, src, dst, max_iter)
+    m, label = _contract(edges, src, dst)
+    head = label.take(thr + 1)
+    if len(head) <= thr:
+        comp = F.broadcast(_union_find(head, edges.sparkSession,
+                                       edges.schema[src].dataType))
+    elif algorithm == "twostar":
+        comp = connected_components_twostar(label, max_iter=max_iter)
+    else:
+        comp = _hash_min(label, "src", "dst", max_iter)
+    return (m.join(comp.withColumnRenamed("id", "m"), "m", "left")
+            .select("id", F.coalesce("component", "m").alias("component")))
+
+
 def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
     """Shares-an-alias graph: for every alias, edges from each member qid to
     the alias-minimum qid (star per alias — linear, not quadratic, in
@@ -229,23 +301,17 @@ def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
 
 def canonical_map(alias_dim: DataFrame) -> DataFrame:
     """qid -> canonical_id (min qid of the shares-an-alias component);
-    singleton entities map to themselves. Memoized per logical plan ON the
-    owning SparkSession — the dimension is computed once per run, not once
-    per consumer, and a memoized localCheckpoint can never leak into a
-    different session."""
-    sess = alias_dim.sparkSession
-    memo = getattr(sess, "_kg_canon_memo", None)
-    if memo is None:
-        memo = {}
-        sess._kg_canon_memo = memo
-    key = alias_dim.semanticHash()
-    if key in memo:
-        return memo[key]
-    cc = connected_components(alias_component_edges(alias_dim))
-    all_qids = alias_dim.select("qid").distinct()
-    out = (all_qids.join(cc.withColumnRenamed("id", "qid"), "qid", "left")
-           .select("qid", F.coalesce("component", "qid")
-                   .alias("canonical_id"))
-           .localCheckpoint())
-    memo[key] = out
-    return out
+    singleton entities map to themselves. Memoized on the owning
+    SparkSession by ``memo.dim_memo``, keyed on the plan AND the source
+    files, so a dimension regenerated in place gets a fresh map."""
+    from .memo import df_key, dim_memo
+
+    def _build():
+        cc = connected_components(alias_component_edges(alias_dim))
+        return (alias_dim.select("qid").distinct()
+                .join(cc.withColumnRenamed("id", "qid"), "qid", "left")
+                .select("qid", F.coalesce("component", "qid")
+                        .alias("canonical_id")))
+
+    return dim_memo(alias_dim.sparkSession, "_kg_canon_memo",
+                    df_key(alias_dim), _build)

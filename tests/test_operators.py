@@ -121,3 +121,57 @@ def test_synth_edge_cases():
     assert texts.str.contains('"quoted"', regex=False).any()
     assert texts.str.contains("a\\b", regex=False).any()
     assert texts.str.contains("café", regex=False).any()
+
+
+def test_contracted_cc_job_count(spark):
+    """A graph past the driver cap whose label graph fits under it
+    finishes on the driver after one contraction round, in a bounded
+    number of jobs. The hash-min loop on the raw edges would need
+    several jobs per round, one round per hop of the hub chain."""
+    import pyarrow as pa
+
+    # 20 stars of 30 leaves each, hubs chained: 619 raw edges; the
+    # contraction folds each star into its hub, leaving 19 label edges
+    src, dst = [], []
+    for h in range(20):
+        for leaf in range(30):
+            src.append(f"h{h:02d}")
+            dst.append(f"l{h:02d}_{leaf:02d}")
+        if h:
+            src.append(f"h{h - 1:02d}")
+            dst.append(f"h{h:02d}")
+    edges = spark.createDataFrame(pa.table({"src": src, "dst": dst}))
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-jobs", "contracted connected components")
+    try:
+        rows = connected_components(edges, driver_threshold=100).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == 620
+    assert {r["component"] for r in rows} == {"h00"}
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-jobs")
+    assert 0 < len(jobs) <= 12, len(jobs)
+
+
+def test_canonical_map_follows_rewritten_dimension(spark, tmp_path):
+    """A dimension rewritten in place under the same path and plan gets
+    a fresh canonical map in the same session: the memo key includes
+    the source files' mtime and size, not only the plan."""
+    from memex_kg_spark.operators.components import canonical_map
+
+    path = str(tmp_path / "alias_dim.parquet")
+
+    def write(groups):
+        pd.DataFrame(
+            [(f"a{i}", q) for i, qs in enumerate(groups) for q in qs],
+            columns=["norm_alias", "qid"]).to_parquet(path, index=False)
+        return {r["qid"]: r["canonical_id"]
+                for r in canonical_map(spark.read.parquet(path)).collect()}
+
+    before = write([["Q1", "Q2"], ["Q3", "Q4"], ["Q5"]])
+    assert before == {"Q1": "Q1", "Q2": "Q1", "Q3": "Q3", "Q4": "Q3",
+                      "Q5": "Q5"}
+    after = write([["Q1", "Q2"], ["Q2", "Q3", "Q4"], ["Q4", "Q5"],
+                   ["Q6"]])
+    assert after == {q: "Q1" for q in ("Q1", "Q2", "Q3", "Q4", "Q5")} | {
+        "Q6": "Q6"}

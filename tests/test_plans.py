@@ -5,7 +5,9 @@ Each test pins a property that matters at 100 TB:
 - entity linking is a broadcast hash join (fact side never shuffles);
 - the extraction stage is narrow (no Exchange anywhere in its plan);
 - top-k queries plan as TakeOrderedAndProject (no global sort);
-- parquet scans get filters pushed down and columns pruned.
+- parquet scans get filters pushed down and columns pruned;
+- the connected-components driver finish hands its result back without
+  a pickled Python RDD.
 """
 
 from __future__ import annotations
@@ -104,3 +106,24 @@ def test_salted_counts_two_phase(spark, sf_dir_smoke):
     plan = _plan(salted_counts(mentions, "norm_surface"))
     assert plan.count("HashAggregate") >= 4  # partial+final x two phases
     assert "_salt" in plan
+
+
+def test_cc_driver_finish_has_no_python_rdd(spark):
+    """The driver finish of connected components hands its union-find
+    result back as an Arrow local relation. A Python list would plan as
+    ``Scan ExistingRDD`` over pickled rows and leave a Python worker
+    pool running for the rest of the session."""
+    import pyarrow as pa
+
+    from memex_kg_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(pa.table({
+        "src": ["q1", "q2", "q4", "q5", "q7"],
+        "dst": ["q2", "q3", "q5", "q6", "q7"]}))
+    cc = connected_components(edges)
+    got = {r["id"]: r["component"] for r in cc.collect()}
+    assert got == {"q1": "q1", "q2": "q1", "q3": "q1", "q4": "q4",
+                   "q5": "q4", "q6": "q4", "q7": "q7"}
+    plan = _plan(cc)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

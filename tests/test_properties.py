@@ -11,7 +11,8 @@ representative:
   strip pass removes — a genuine reference quirk we preserve for parity,
   pinned here rather than "fixed").
 - Connected components (reference grouping logic; SURVEY §2 G2): the
-  driver union-find and the distributed hash-min loop must agree with a
+  driver union-find, the distributed hash-min loop and the contracted
+  default path (driver finish or composed fallback) must agree with a
   brute-force BFS on arbitrary graphs, and the representative must be
   the component minimum (id stability across resumes depends on it).
 - Upsert/MERGE (reference edit_story, db/db_connection.py:305-330):
@@ -102,6 +103,26 @@ def test_distributed_cc_matches_bfs(spark, pairs):
            for r in connected_components(edges, force_distributed=True)
            .collect()}
     assert got == _brute_components(pairs)
+
+
+@given(_edges)
+@_SPARK_SETTINGS
+def test_contracted_cc_matches_bfs(spark, pairs):
+    """The default path (one contraction round, then the label graph)
+    agrees with BFS on arbitrary graphs, self-loops included, whether
+    the label graph finishes on the driver (a cap no label graph can
+    exceed: it has at most one edge per input edge) or in the composed
+    distributed loop (a cap of 0, which only an empty label graph
+    fits)."""
+    from memex_kg_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    want = _brute_components(pairs)
+    for thr in (len(pairs), 0):
+        got = {r["id"]: r["component"]
+               for r in connected_components(edges, driver_threshold=thr)
+               .collect()}
+        assert got == want, thr
 
 
 @given(_edges.map(lambda ps: [(a, b) for a, b in ps if a != b])

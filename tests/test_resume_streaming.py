@@ -230,3 +230,63 @@ def test_lineage_compaction_preserves_resume(spark, sf_dir_smoke):
         assert stats["processed"] == 0 and stats["skipped"] == 6
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_empty_buckets_commit_and_run_completes(spark, sf_dir_smoke):
+    """A bucket with no conversations writes nothing, returns (0, 0)
+    and still commits its lineage row, so run() finishes. AQE prunes
+    the observed input count together with the empty stage, and
+    ``Observation.get`` used to fail on the missing row."""
+    from pyspark.sql import functions as F
+
+    tmp = tempfile.mkdtemp(prefix="kgwh-empty-")
+    try:
+        w = ResumableKGWriter(spark, sf_dir_smoke,
+                              os.path.join(tmp, "wide"), n_buckets=64,
+                              run_id="wide")
+        bucketed = w._bucketed_transcripts()
+        assert bucketed.filter(F.col("bucket") == 7).count() == 0
+        assert w.process_bucket(7) == (0, 0)
+
+        # a corpus that fills one bucket of four: run() must commit all
+        # four and match the batch pipeline on the non-empty one
+        src = load_synth(spark, sf_dir_smoke)
+        synth = os.path.join(tmp, "synth")
+        one = bucketed.filter(F.col("bucket") % 16 == 0).drop("bucket")
+        for name, df in (("transcripts", one),
+                         ("alias_dim", src["alias_dim"]),
+                         ("pred_dim", src["pred_dim"])):
+            df.write.parquet(os.path.join(synth, f"{name}.parquet"))
+        w4 = ResumableKGWriter(spark, synth, os.path.join(tmp, "narrow"),
+                               n_buckets=4, run_id="narrow")
+        assert w4.run()["processed"] == 4
+        assert w4.committed_buckets() == set(range(4))
+        m = w4.metrics().toPandas().set_index("bucket")
+        d = load_synth(spark, synth)
+        assert int(m["rows_in"].sum()) == d["transcripts"].count()
+        assert (m["rows_in"] == 0).sum() == 3
+        assert (m.loc[m["rows_in"] == 0, "n_triples"] == 0).all()
+        assert _triple_set(w4.triples()) == _triple_set(extract_triples(
+            d["transcripts"], d["alias_dim"], d["pred_dim"]))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_lineage_with_only_temporary_is_missing(spark, sf_dir_smoke):
+    """A crash inside the very first lineage append leaves a lineage
+    directory holding only ``_temporary``. That is no commit at all:
+    resume must treat it as a fresh lineage, not raise on every run."""
+    tmp = tempfile.mkdtemp(prefix="kgwh-tmp-")
+    try:
+        w = ResumableKGWriter(spark, sf_dir_smoke, tmp, n_buckets=6,
+                              run_id="crashed")
+        attempt = os.path.join(w.lineage_path, "_temporary", "0",
+                               "_temporary", "attempt_0")
+        os.makedirs(attempt)
+        with open(os.path.join(attempt, "part-00000.parquet"), "w") as f:
+            f.write("half-written")
+        assert w.committed_buckets() == set()
+        w._commit(2, 10, 20, 5)
+        assert w.committed_buckets() == {2}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
