@@ -1,62 +1,39 @@
 #!/usr/bin/env python
-"""Benchmark: KG-construction throughput at two parallelism levels.
+"""Legacy one-line bench: KG-construction throughput at two parallelism levels.
 
-Prints ONE JSON line:
+Prints ONE final JSON line:
   {"metric": "kg_pipeline_wall", "value": <sec at local[CPUS]>,
    "unit": "sec", "queries": {...per-query sec...}, "sf": <sf>,
-   "triples_per_sec": ..., "scaling": {...N vs 4N evidence...}}
+   "triples_per_sec": ..., "scaling": {...this run's N vs 4N pair...}}
 
-The north_rule's two-cluster-size criterion is evidenced by running the
-SAME job at local[N] and local[4N] (sandbox stand-in for N vs 4N
-executors) on the SAME input; efficiency = (tput_4N / tput_N) / 4.
-Each level runs in its OWN subprocess (one JVM per "cluster size", the
-spark-submit analogue — also avoids PySpark's flaky in-process session
-restarts). Results are appended to BENCH/BASELINE.md.
+The gated, per-layer numbers come from ``python3 perfbench/run.py``; this
+script keeps the one-line JSON contract. Each level runs the same
+job on the same input in its OWN subprocess (one JVM per "cluster size",
+the spark-submit analogue): local[CPUS] for the headline, then
+local[N] and local[4N] for the scaling pair; efficiency =
+(tput_4N / tput_N) / 4. Nothing under BENCH/ is read or written; the
+files there are history.
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
-     BENCH_SF_MULT (default 30: testdata sf0.1 -> synthetic sf3.0,
-     ~1.9M turns / ~9M triples, so per-core work dominates the fixed
-     per-job overhead even at the 4N level — see the efficiency model in
-     BENCH/BASELINE.md).
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata directory),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+     BENCH_SF_MULT (default 30: testdata sf0.1 -> synthetic sf3.0),
+     BENCH_SCALE_N (default 2: the pair is local[2] vs local[8]).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
+import threading
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-
-def make_spark(cores: int):
-    from pyspark.sql import SparkSession
-    # Shuffle partitions are a JOB property, not a cluster property: a
-    # production job carries one partition count across cluster sizes.
-    # max(32, 2*cores) gives every pair level (2, 8) the same 32
-    # partitions — ≥4 task waves at the high level, so one straggler
-    # costs ~1/32 of the stage instead of 1/8 (partitions == cores means
-    # ONE wave: any straggler extends the wall 1:1 and caps strong
-    # scaling) — while the headline level keeps 2 waves per core.
-    return (SparkSession.builder
-            .master(f"local[{cores}]")
-            .appName(f"memex-kg-bench-{cores}")
-            .config("spark.sql.shuffle.partitions", str(max(32, 2 * cores)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.locality.wait", "0s")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+STAGES = ("extract_mentions", "link_and_triples", "nodes_edges")
 
 
 def noop_write(df) -> None:
@@ -64,8 +41,8 @@ def noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_pipeline(spark, synth_path: str, known_n_triples: int | None = None,
-                 probe=None) -> dict:
+def run_pipeline(spark, synth_path: str,
+                 known_n_triples: int | None = None) -> dict:
     """Run the flagship KG build end-to-end; per-stage wall seconds.
 
     Single-pass plan, as production would run it: the extraction scan
@@ -82,20 +59,14 @@ def run_pipeline(spark, synth_path: str, known_n_triples: int | None = None,
 
     d = pipeline.load_synth(spark, synth_path)
     out: dict = {}
-    cals: dict = {}
-    _p = probe if probe is not None else (lambda: 0.0)
 
     from concurrent.futures import ThreadPoolExecutor
 
-    c_pre = _p()
     t0 = time.time()
     statements = extract_statements(d["transcripts"]).persist()
     mentions = statements_to_mentions(statements, d["alias_dim"]).persist()
     noop_write(mentions)  # one chain: materializes statements AND mentions
     out["extract_mentions"] = round(time.time() - t0, 3)
-    c_post = _p()
-    cals["extract_mentions"] = max(c_pre, c_post)
-    c_pre = c_post
 
     # linked-mentions write overlaps the (heavier) triple build: both read
     # only cached inputs, and concurrent jobs let Spark fill the scheduling
@@ -118,10 +89,7 @@ def run_pipeline(spark, synth_path: str, known_n_triples: int | None = None,
                  else triples.count())
     out["link_and_triples"] = round(time.time() - t0, 3)
     out["n_triples"] = n_triples
-    c_post = _p()
-    cals["link_and_triples"] = max(c_pre, c_post)
 
-    c_pre = c_post
     t0 = time.time()
     nodes = build_nodes(triples, d["alias_dim"]).persist()
     edges = build_edges(triples, nodes, d["pred_dim"])
@@ -131,16 +99,12 @@ def run_pipeline(spark, synth_path: str, known_n_triples: int | None = None,
         f_n.result()
         f_e.result()
     out["nodes_edges"] = round(time.time() - t0, 3)
-    cals["nodes_edges"] = max(c_pre, _p())
     statements.unpersist()
     mentions.unpersist()
     triples.unpersist()
     nodes.unpersist()
 
-    out["pipeline_total"] = round(
-        out["extract_mentions"] + out["link_and_triples"]
-        + out["nodes_edges"], 3)
-    out["stage_cals"] = cals
+    out["pipeline_total"] = round(sum(out[k] for k in STAGES), 3)
     return out
 
 
@@ -166,232 +130,43 @@ def run_aux_queries(spark, sf_dir: str) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _acquire_measure_lock():
-    """Take the camps' advisory fire-lock (BENCH/.camp.lock) for THIS
-    process, cross-process, released on close/exit.
-
-    Camps poll-and-fire through this lock, so camp-vs-camp was always
-    interlocked — but stage_run (the driver's headline measurement) and
-    stage_gen (corpus generation) never held it, so a babysat camp
-    sitting on a warm JVM could fire a full multi-minute pipeline run
-    INTO the driver's headline or the driver's generation load: the camp
-    shot reads our load as host noise (wasted window, honest dirty
-    label), and worse, the headline's in-run watcher reads the camp's
-    shot as a storm (false-dirty headline — a likely contributor to
-    three rounds of dirty scaling_this_run). Every Spark-measuring
-    bench entry point now holds the lock for its whole invocation;
-    camps poll-wait meanwhile (their own gate probes already skip while
-    the lock is held, so they neither probe nor fire into our work)."""
-    import fcntl
-    f = open(os.path.join(REPO, "BENCH", ".camp.lock"), "w")
-    fcntl.flock(f, fcntl.LOCK_EX)
-    return f
-
-
 def stage_gen(bench_sf: float, cpus: int) -> None:
-    _lock = _acquire_measure_lock()  # noqa: F841 (held until exit)
-    spark = make_spark(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    from memex_kg_spark.session import get_spark
     from memex_kg_spark.synth.spark_gen import ensure_synth_spark
-    path = ensure_synth_spark(spark, bench_sf)
-    print("SYNTH_PATH=" + path)
+    spark = get_spark(f"memex-kg-bench-{cpus}", cpus,
+                      shuffle_partitions=max(32, 2 * cpus))
+    print("SYNTH_PATH=" + ensure_synth_spark(spark, bench_sf))
     spark.stop()
 
 
-import threading as _threading
-
-_CAL_LOCK = _threading.Lock()  # probes share _CAL_BUFS; two concurrent
-# sweeps contend for the same bandwidth and inflate each other ~2x,
-# falsely dirtying clean windows — serialize every probe.
+_CAL_BUFS: list = []
 
 
-def _calibrate(skip_if_busy: bool = False) -> float | None:
-    """Host-noise probe: time a fixed memory-bandwidth-bound sweep (copy +
-    reduce over a 128 MB buffer, 4 threads). The sandbox host shows
-    multi-minute phases where the VM's aggregate memory bandwidth drops
-    several-fold (noisy neighbor); during those phases Spark wall times
-    inflate 3-10x at EVERY core count while a register-only CPU probe
-    still reads clean — so the probe must be bandwidth-bound and
-    multi-threaded to see what Spark sees.
-
-    ``skip_if_busy`` (used by the in-run watcher) returns None instead
-    of queueing when another probe is mid-sweep, so a poll tick never
-    collides with a bracket probe."""
+def _calibrate() -> float:
+    """Host-noise probe: seconds for a fixed memory-bandwidth-bound sweep
+    (copy + reduce over a 128 MB buffer, 4 threads). A shared host can
+    show multi-minute phases where aggregate memory bandwidth drops
+    several-fold; Spark walls then inflate at EVERY core count while a
+    register-only CPU probe still reads clean, so the probe is
+    bandwidth-bound and multi-threaded to see what Spark sees."""
     import numpy as np
     from concurrent.futures import ThreadPoolExecutor
 
-    if not _CAL_LOCK.acquire(blocking=not skip_if_busy):
-        return None
-    try:
-        global _CAL_BUFS, _CAL_WARM
-        first = "_CAL_BUFS" not in globals()
-        if first:  # allocate once: page-fault cost out
-            _CAL_BUFS = [np.ones(4_000_000, dtype=np.float64)
-                         for _ in range(4)]
+    def sweep(b):
+        for _ in range(10):
+            b.sum()
+            b = b * 1.0000001  # forces a full write pass
 
-        def sweep(b):
-            s = 0.0
-            for _ in range(10):
-                s += float(b.sum())
-                b = b * 1.0000001  # forces a full write pass
-            return s
-
-        if first:
-            # untimed warm sweep: the first sweep in a process pays
-            # allocator mmap/page-fault costs ~10-40x the steady state
-            # and would poison the floor / the first run's ratio
-            with ThreadPoolExecutor(4) as ex:
-                list(ex.map(sweep, _CAL_BUFS))
-
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(4) as ex:  # numpy releases the GIL here
+    if not _CAL_BUFS:
+        # allocate once, then one untimed sweep: the first sweep in a
+        # process pays page-fault costs ~10-40x the steady state
+        _CAL_BUFS.extend(np.ones(4_000_000) for _ in range(4))
+        with ThreadPoolExecutor(4) as ex:
             list(ex.map(sweep, _CAL_BUFS))
-        return time.perf_counter() - t0
-    finally:
-        _CAL_LOCK.release()
-
-
-def _cal_floor(update: float | None = None) -> float:
-    """Persisted all-time-best calibration probe time for THIS host.
-
-    cal ratios are only meaningful against a truly clean denominator; a
-    stage that runs entirely inside a noise phase would otherwise report
-    ratio ~1 against its own (inflated) local minimum. The floor file
-    makes the denominator absolute across invocations and rounds."""
-    path = os.path.join(REPO, "BENCH", "cal_floor.json")
-    stored = None
-    try:
-        with open(path) as f:
-            stored = float(json.load(f)["floor_sec"])
-    except (OSError, ValueError, KeyError):
-        pass
-    if update is not None and (stored is None or update < stored):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump({"floor_sec": round(update, 4),
-                       "note": "all-time-best 4-thread bandwidth probe"},
-                      f, indent=1)
-        stored = update
-    return stored if stored is not None else (update or 1e9)
-
-
-def _merge_best_stages(cores: int, corpus_sf: float, stage_walls: dict,
-                       stage_cal_ratios: dict) -> dict:
-    """Accumulate the cleanest (then fastest) per-stage samples ACROSS
-    invocations in BENCH/best_stages.json, keyed by (workload hash,
-    corpus, cores).
-
-    Rationale: host noise storms can outlast any full-pipeline run, but
-    they flicker on the ~10 s scale — a single 3-20 s stage often fits a
-    quiet flicker when the 30-400 s pipeline cannot. Each stage sample is
-    bracketed by its own probes; a stage wall with bracket cal ≈ 1 is a
-    valid upper bound on that stage's clean time regardless of what the
-    rest of the run saw. Composite lo/hi totals from all-clean stage
-    samples give the scaling-efficiency evidence the north rule asks for,
-    harvested incrementally."""
-    path = os.path.join(REPO, "BENCH", "best_stages.json")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    key = f"{workload_hash()}|sf{corpus_sf:g}|c{cores}"
-    data = {}
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        pass
-    ent = data.get(key, {})
-    for st, wall in stage_walls.items():
-        cal = round(stage_cal_ratios.get(st, 99), 2)
-        cur = ent.get(st)
-        # clean samples beat dirty ones; within either class the LOWER
-        # WALL wins — noise only inflates, so any sample's wall is an
-        # upper bound on the clean time and the smallest bound is the
-        # tightest (a dirty sample's cal says nothing about bound quality)
-        cand_q = (cal > CAL_CLEAN_MAX, wall)
-        cur_q = None
-        if cur is not None:
-            cur_q = (cur["cal"] > CAL_CLEAN_MAX, cur["wall"])
-        if cur is None or cand_q < cur_q:
-            ent[st] = {"wall": wall, "cal": cal,
-                       "at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    data[key] = ent
-    with open(path, "w") as f:
-        json.dump(data, f, indent=1)
-    return ent
-
-
-def read_best_stages(cores: int, corpus_sf: float) -> dict | None:
-    path = os.path.join(REPO, "BENCH", "best_stages.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return None
-    return data.get(f"{workload_hash()}|sf{corpus_sf:g}|c{cores}")
-
-
-def stagewise_clean_summary(lo: int, hi: int, corpus_sf: float
-                            ) -> dict | None:
-    """Composite scaling evidence from per-stage clean samples, if every
-    stage at both levels has one."""
-    stages = ("extract_mentions", "link_and_triples", "nodes_edges")
-    ent_lo = read_best_stages(lo, corpus_sf)
-    ent_hi = read_best_stages(hi, corpus_sf)
-    if not ent_lo or not ent_hi:
-        return None
-    if any(st not in e or e[st]["cal"] > CAL_CLEAN_MAX
-           for e in (ent_lo, ent_hi) for st in stages):
-        return {"all_clean": False, "lo": ent_lo, "hi": ent_hi}
-    wall_lo = round(sum(ent_lo[st]["wall"] for st in stages), 3)
-    wall_hi = round(sum(ent_hi[st]["wall"] for st in stages), 3)
-    return {"all_clean": True, "lo": ent_lo, "hi": ent_hi,
-            "wall_lo_sec": wall_lo, "wall_hi_sec": wall_hi,
-            "efficiency": round((wall_lo / wall_hi) / (hi / lo), 3)}
-
-
-def headline_stagewise_bound(cpus: int, corpus_sf: float) -> dict | None:
-    """Clean headline bound from banked per-stage samples at local[cpus].
-
-    The full-pipeline headline rarely fits inside one quiet host window,
-    but each 3-20 s stage does; every stage sample bracketed cal ≈ 1 is
-    an upper bound on that stage's clean wall, so their sum bounds the
-    clean pipeline wall. Reported alongside (never instead of) the
-    directly measured headline."""
-    stages = ("extract_mentions", "link_and_triples", "nodes_edges")
-    ent = read_best_stages(cpus, corpus_sf)
-    if not ent or any(st not in ent for st in stages):
-        return None
-    all_clean = all(ent[st]["cal"] <= CAL_CLEAN_MAX for st in stages)
-    wall = round(sum(ent[st]["wall"] for st in stages), 3)
-    return {"cpus": cpus, "corpus_sf": corpus_sf, "all_clean": all_clean,
-            "wall_sec_bound": wall, "stages": ent}
-
-
-def all_stagewise_clean(lo: int, hi: int) -> dict:
-    """Stagewise-clean summaries for EVERY corpus size present in the
-    accumulator under the current workload hash — the driver's bench may
-    run at one corpus size while clean evidence was harvested at another;
-    report all of it."""
-    path = os.path.join(REPO, "BENCH", "best_stages.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    wh = workload_hash()
-    sfs = set()
-    for k in data:
-        parts = k.split("|")
-        if len(parts) == 3 and parts[0] == wh and parts[1].startswith("sf"):
-            try:
-                sfs.add(float(parts[1][2:]))
-            except ValueError:
-                pass
-    out = {}
-    for sf in sorted(sfs):
-        s = stagewise_clean_summary(lo, hi, sf)
-        if s is not None:
-            out[f"sf{sf:g}"] = s
-    return out
+    t0 = time.perf_counter()
+    with ThreadPoolExecutor(4) as ex:  # numpy releases the GIL here
+        list(ex.map(sweep, _CAL_BUFS))
+    return time.perf_counter() - t0
 
 
 def stage_run(cores: int, synth_path: str, sf_dir: str, with_aux: bool,
@@ -399,610 +174,49 @@ def stage_run(cores: int, synth_path: str, sf_dir: str, with_aux: bool,
     """One JVM per cluster size; the reported figure is the MIN over
     ``repeat`` in-JVM runs. Run 0 doubles as warm-up (JVM JIT,
     Python-worker spawn, broadcast builds — fixed costs a long-running
-    100 TB job amortizes away) and is never the min in practice. Min, not
-    mean: host noise phases inflate — never deflate — wall time, so the
-    min is the best estimator of true steady-state throughput. Before
-    each measured run a calibration probe checks for an ongoing noise
-    phase and waits (bounded) for it to pass; per-run probe ratios are
-    reported alongside the walls so a reader can judge each sample."""
-    stage_t0 = time.time()
-    _lock = _acquire_measure_lock()  # noqa: F841 — no camp may fire or
-    # probe into this invocation's measured runs (held until exit)
-    spark = make_spark(cores)
+    100 TB job amortizes away). Min, not mean: host noise inflates —
+    never deflates — wall time.
+
+    The ``_calibrate`` probe is recorded, never acted on: ``cal_s`` holds
+    the probe seconds read just before each run, ``cal_inrun_max_s`` the
+    largest reading a 5 s watcher took during any run."""
+    from memex_kg_spark.session import get_spark
+    t_start = time.time()
+    # Shuffle partitions are a JOB property, not a cluster property:
+    # max(32, 2*cores) gives both pair levels (2, 8) the same 32
+    # partitions, >=4 task waves at the high level, so one straggler
+    # costs ~1/32 of a stage instead of capping strong scaling 1:1.
+    spark = get_spark(f"memex-kg-bench-{cores}", cores,
+                      shuffle_partitions=max(32, 2 * cores))
     spark.sparkContext.setLogLevel("ERROR")
-    cal_best = min(_calibrate() for _ in range(2))
-    cal_best = min(cal_best, _cal_floor(update=cal_best))
     best: dict = {}
-    totals, ratios, inruns = [], [], []
-    stage_runs: dict[str, list[float]] = {}
+    totals, cals, inrun = [], [], []
     n_known = None
-    for i in range(repeat):
-        if best and time.time() - stage_t0 > budget_s:
+    for _ in range(repeat):
+        if best and time.time() - t_start > budget_s:
             break  # wall budget: keep the bench bounded on a noisy host
-        cal = _calibrate()
-        for _ in range(3):  # wait out a noise phase, up to ~2 min
-            if cal <= cal_best * 1.35:
-                break
-            time.sleep(40)
-            cal = _calibrate()
-        cal_best = min(cal_best, cal)
-        # in-run watcher: a storm can start after the pre-probe and end
-        # before the post-probe of a multi-minute run; sample during it
-        import threading
-        _samples: list[float] = []
-        _stop = threading.Event()
+        cals.append(round(_calibrate(), 4))
+        stop = threading.Event()
 
-        def _poll():
-            while not _stop.wait(5.0):
-                v = _calibrate(skip_if_busy=True)
-                if v is not None:  # bracket probe mid-sweep: skip tick
-                    _samples.append(v)
+        def watch():
+            while not stop.wait(5.0):
+                inrun.append(_calibrate())
 
-        _th = threading.Thread(target=_poll, daemon=True)
-        _th.start()
-        stages = run_pipeline(spark, synth_path, known_n_triples=n_known,
-                              probe=_calibrate)
-        _stop.set()
-        _th.join(timeout=2.0)
+        watcher = threading.Thread(target=watch, daemon=True)
+        watcher.start()
+        stages = run_pipeline(spark, synth_path, known_n_triples=n_known)
+        stop.set()
+        watcher.join()
         n_known = stages["n_triples"]
-        raw_stage_cals = stages.pop("stage_cals", {})
-        cal_post = _calibrate()
-        cal_best = min(cal_best, cal_post)
-        # a run is only as clean as its WORST moment: noise flickers on
-        # second granularity, so bracket each run with probes
-        ratio = round(max(cal, cal_post) / cal_best, 2)
-        floor_ref = min(cal_best, _cal_floor())
-        inrun = round((max(_samples) / floor_ref) if _samples else ratio, 2)
         totals.append(stages["pipeline_total"])
-        ratios.append(ratio)
-        inruns.append(inrun)
-        for k in ("extract_mentions", "link_and_triples", "nodes_edges"):
-            stage_runs.setdefault(k, []).append(stages[k])
-        # harvest per-stage samples with their own brackets (storms
-        # flicker: a stage can be clean inside a dirty run) — but only
-        # trust them when the in-run watcher saw no storm anywhere in
-        # the run (a storm wholly inside one stage passes that stage's
-        # brackets too)
-        floor_now = min(cal_best, _cal_floor())
-        stage_ratios = {k: (v / floor_now
-                            if inrun <= _inrun_gate(cores)
-                            else max(v / floor_now, inrun))
-                        for k, v in raw_stage_cals.items()}
-        import re as _re
-        m_sf = _re.search(r"sf([0-9.]+)", os.path.basename(
-            os.path.normpath(synth_path)))
-        if m_sf:
-            _merge_best_stages(cores, float(m_sf.group(1)),
-                               {k: stages[k] for k in stage_ratios},
-                               stage_ratios)
         if not best or stages["pipeline_total"] < best["pipeline_total"]:
             best = stages
-            best["cal_ratio"] = ratio
-            best["cal_inrun"] = inrun
-    _cal_floor(update=cal_best)
-    best["all_runs"] = totals
-    best["cal_ratios"] = ratios
-    best["cal_inruns"] = inruns
-    # per-stage minima ACROSS runs: noise storms hit runs unevenly, so
-    # the stage-wise minimum is a tighter estimate of the clean wall than
-    # any single run's total (each stage min is individually a valid
-    # upper bound on its clean time — noise only inflates)
-    best["stage_mins"] = {k: min(v) for k, v in stage_runs.items()}
-    best["stagemin_total"] = round(sum(best["stage_mins"].values()), 3)
+    best.update(all_runs=totals, cal_s=cals,
+                cal_inrun_max_s=round(max(inrun), 4) if inrun else None)
     if with_aux:
         best["_aux"] = run_aux_queries(spark, sf_dir)
     print("STAGES_JSON=" + json.dumps(best))
     spark.stop()
-
-
-def _inrun_gate(cores: int) -> float:
-    """Max acceptable IN-RUN probe ratio for a clean full run. The probe
-    contends with the measured Spark job itself, so in-run samples read
-    above 1 even on a quiet host (self-load: ~1.2 observed at local[8],
-    ~1.6 at local[2]); real storms read 3-400x. The gate sits between
-    those regimes per core count."""
-    if cores <= 2:
-        return 2.5
-    return 4.0 if cores <= 8 else 8.0
-
-
-# Self-load range observed on a quiet host: the in-run probe contends
-# with the measured Spark job, so even clean runs read ~1.3-1.9x over
-# ambient (level-dependent; see _inrun_gate docstring).
-SELF_LOAD_MAX = 0.9
-
-
-def fire_gate(cores: int) -> float:
-    """Max ambient probe/floor ratio at which a camp fires a shot — the
-    SINGLE source for the per-level trigger (ADVICE r4: this value was
-    hand-mirrored in scripts/camp_babysit.sh and main's camp launcher).
-
-    Derivation: a shot fired at ambient A reads at worst A +
-    SELF_LOAD_MAX in-run, so firing above _inrun_gate - SELF_LOAD_MAX
-    can only land a clean grade if self-load comes in under its
-    worst case — likely wasted windows, occasionally lucky. The c2
-    trigger therefore sits at 2.5 - 0.9 = 1.6; higher levels get
-    proportionally more headroom but keep conservative triggers (their
-    shots are cheap and mild phases are common, so there is little to
-    gain from firing deeper into noise)."""
-    if cores <= 2:
-        return round(_inrun_gate(cores) - SELF_LOAD_MAX, 2)  # 1.6
-    return 2.0 if cores <= 8 else 3.0
-
-
-# Neighborhood sanity bound for the probes that BRACKET a run: brackets
-# measure the host just before/after the run, not during it — the in-run
-# watcher is the primary evidence — but a run fired deep inside a storm
-# (bracket >> 1) is rejected even if its sparse in-run samples aliased
-# the storm's gaps.
-BRACKET_NEIGHBOR_MAX = 4.0
-
-
-def _fullrun_clean(entry: dict | None, cores: int) -> bool:
-    """A banked full run counts as clean iff the probes sampled DURING
-    the run (every ~5 s, self-load-aware gate) were quiet AND the runs'
-    bracket probes stay under the looser neighborhood bound. Entries
-    without an in-run reading (pre-watcher) are dirty: a multi-minute
-    run can hide a whole storm between two quiet brackets (observed: a
-    415 s local[2] run — 6x the clean wall — bracketed at cal 1.49).
-    The converse also holds and is why brackets are NOT the primary
-    gate: a run whose every in-run sample read quiet was observed with
-    a post-bracket flicker of 2.5 — the flicker happened after the
-    timed region ended."""
-    return bool(entry and entry.get("cal", 99) <= BRACKET_NEIGHBOR_MAX
-                and entry.get("cal_inrun", 99) <= _inrun_gate(cores))
-
-
-def _pair_clean(p: dict) -> bool:
-    """A scaling pair is clean only when both levels' best runs were
-    storm-free by the in-run watcher, with brackets under the
-    neighborhood bound (missing in-run readings = dirty, same rule as
-    _fullrun_clean)."""
-    return (max(p.get("cal_lo_best", 99), p.get("cal_hi_best", 99))
-            <= BRACKET_NEIGHBOR_MAX
-            and p.get("cal_inrun_lo", 99)
-            <= _inrun_gate(p.get("cores_lo", 2))
-            and p.get("cal_inrun_hi", 99)
-            <= _inrun_gate(p.get("cores_hi", 8)))
-
-
-def _merge_best_fullrun(cores: int, corpus_sf: float, wall: float,
-                        cal: float, n_triples: int,
-                        cal_inrun: float = 99.0) -> None:
-    """Bank the best (clean-class first, then lowest-wall) FULL-pipeline
-    camp run per (workload, corpus, cores) in BENCH/best_fullrun.json,
-    and when both pair levels (2 and 8) hold clean entries for a corpus,
-    synthesize the direct scaling pair and store it via _merge_best_pair
-    — the tier-1 evidence: one contiguous measured run per level, both
-    bracketed clean AND storm-free in-run (see _fullrun_clean)."""
-    path = os.path.join(REPO, "BENCH", "best_fullrun.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        data = {}
-    key = f"{workload_hash()}|sf{corpus_sf:g}|c{cores}"
-    cur = data.get(key)
-    # rolling shot history: every fired wall, clean or dirty, so wall
-    # CONSISTENCY across independent windows is recorded data (walls
-    # that agree to ~1% across quiet and mid-storm windows bound the
-    # noise contribution tightly — noise only ever inflates; see the
-    # sf6 c2 note in BENCH/BASELINE.md)
-    hist = ((cur.get("walls_seen", [cur["wall"]]) if cur else [])
-            + [round(wall, 3)])[-12:]
-    cand = {"wall": round(wall, 3), "cal": round(cal, 2),
-            "cal_inrun": round(cal_inrun, 2), "n_triples": n_triples,
-            "at": time.strftime("%Y-%m-%d %H:%M:%S")}
-    cand_q = (not _fullrun_clean(cand, cores), wall)
-    if cur is None or cand_q < (not _fullrun_clean(cur, cores),
-                                cur["wall"]):
-        data[key] = cand
-    data[key]["walls_seen"] = hist
-    with open(path, "w") as f:
-        json.dump(data, f, indent=1)
-    if cores == 32 and _fullrun_clean(cand, cores):
-        # a clean camped local[32] run IS a headline measurement
-        _merge_best_headline({
-            "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-            "corpus_sf": corpus_sf, "cpus": 32, "wall_sec": round(wall, 3),
-            "cal": round(cal, 2), "cal_inrun": round(cal_inrun, 2),
-            "triples_per_sec": round(n_triples / wall, 1) if wall else None,
-        })
-    lo = data.get(f"{workload_hash()}|sf{corpus_sf:g}|c2")
-    hi = data.get(f"{workload_hash()}|sf{corpus_sf:g}|c8")
-    if _fullrun_clean(lo, 2) and _fullrun_clean(hi, 8):
-        n = hi.get("n_triples") or lo.get("n_triples") or 0
-        _merge_best_pair({
-            "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-            "corpus_sf": corpus_sf, "cores_lo": 2, "cores_hi": 8,
-            "wall_lo_sec": lo["wall"], "wall_hi_sec": hi["wall"],
-            "cal_lo_best": lo["cal"], "cal_hi_best": hi["cal"],
-            "cal_inrun_lo": lo.get("cal_inrun"),
-            "cal_inrun_hi": hi.get("cal_inrun"),
-            "tput_lo": round(n / lo["wall"], 1) if n else None,
-            "tput_hi": round(n / hi["wall"], 1) if n else None,
-            "efficiency": round((lo["wall"] / hi["wall"]) / 4.0, 3),
-            "source": "full-run camp (one contiguous pipeline run per "
-                      "level, probes bracketing AND sampling in-run)",
-        })
-
-
-def stage_camp(cores: int, synth_path: str, budget_s: float = 1800.0,
-               gate: float | None = None, poll_s: float = 12.0,
-               polish: bool = False, full: bool = False,
-               this_run: bool = False) -> None:
-    """Warm-JVM clean-window sniper.
-
-    The host's clean windows are only minutes long; launching a fresh
-    bench invocation on window-open loses 20-30 s to JVM startup,
-    Python-worker spawn and broadcast builds, and the window often closes
-    mid-run (the v1 harvester failure mode). Camp instead: build the
-    session and run one untimed warm pass up front (any host state),
-    then idle-poll the bandwidth probe IN-PROCESS and fire a measured
-    run the instant the ratio vs the persisted floor reads clean — the
-    warm JVM turns a 2-minute window into a usable sample. Exits when
-    this (cores, corpus) level's banked entry is all-clean or the budget
-    runs out.
-
-    ``this_run`` (implies ``full``): the driver-bench mode (r3 verdict
-    "next #1" — scaling_this_run read dirty three rounds straight
-    because stage_run fires on a schedule instead of on a quiet window).
-    Ignores the bank for its exit condition: exits on the first clean
-    sample fired by THIS invocation; if the budget expires with no
-    sample at all, fires one unconditional run so the caller always has
-    data. Prints the invocation's best sample as a final
-    ``CAMP_BEST_JSON=`` line (clean-first, then lowest wall)."""
-    t0 = time.time()
-    if gate is None:
-        gate = fire_gate(cores)
-    import re as _re
-    m_sf = _re.search(r"sf([0-9.]+)", os.path.basename(
-        os.path.normpath(synth_path)))
-    corpus_sf = float(m_sf.group(1)) if m_sf else 0.0
-    stages = ("extract_mentions", "link_and_triples", "nodes_edges")
-
-    fired: list[dict] = []  # this-invocation full-run samples
-
-    def _sample_clean(s: dict) -> bool:
-        return (s["bracket"] <= BRACKET_NEIGHBOR_MAX
-                and s["inrun"] <= _inrun_gate(cores))
-
-    def entry_clean() -> bool:
-        if this_run:
-            return any(_sample_clean(s) for s in fired)
-        if polish:
-            return False  # polish: keep lowering clean walls until budget
-        if full:
-            try:
-                with open(os.path.join(REPO, "BENCH",
-                                       "best_fullrun.json")) as f:
-                    e = json.load(f).get(
-                        f"{workload_hash()}|sf{corpus_sf:g}|c{cores}")
-                return _fullrun_clean(e, cores)
-            except (OSError, ValueError):
-                return False
-        ent = read_best_stages(cores, corpus_sf) or {}
-        return all(st in ent and ent[st]["cal"] <= CAL_CLEAN_MAX
-                   for st in stages)
-
-    if entry_clean():
-        print(f"CAMP c{cores} sf{corpus_sf:g}: already clean", flush=True)
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    from memex_kg_spark import pipeline
-    from memex_kg_spark.operators.canonicalize import build_edges, build_nodes
-    from memex_kg_spark.operators.extraction import (
-        extract_statements, statements_to_mentions)
-    from memex_kg_spark.operators.linking import link_mentions
-
-    spark = make_spark(cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    d = pipeline.load_synth(spark, synth_path)
-    caches: dict = {}
-
-    # Stage bodies IDENTICAL to run_pipeline's — samples must stay
-    # comparable with stage_run's. Upstream inputs come from the same
-    # persisted frames a full run would have left in memory, so a
-    # re-timed stage measures exactly the work its full-run twin does.
-    def build_extract() -> None:
-        caches["statements"] = extract_statements(d["transcripts"]).persist()
-        caches["mentions"] = statements_to_mentions(
-            caches["statements"], d["alias_dim"]).persist()
-        noop_write(caches["mentions"])
-
-    def build_link() -> None:
-        caches["triples"] = pipeline.triples_from_statements(
-            caches["statements"], d["alias_dim"], d["pred_dim"]).persist()
-        with ThreadPoolExecutor(2) as ex:
-            f_link = ex.submit(
-                noop_write, link_mentions(caches["mentions"],
-                                          d["alias_dim"]))
-            f_tri = ex.submit(noop_write, caches["triples"])
-            f_link.result()
-            f_tri.result()
-
-    def build_nodes_edges() -> None:
-        nodes = build_nodes(caches["triples"], d["alias_dim"]).persist()
-        edges = build_edges(caches["triples"], nodes, d["pred_dim"])
-        with ThreadPoolExecutor(2) as ex:
-            f_n = ex.submit(noop_write, nodes)
-            f_e = ex.submit(noop_write, edges)
-            f_n.result()
-            f_e.result()
-        nodes.unpersist()
-
-    builders = {"extract_mentions": build_extract,
-                "link_and_triples": build_link,
-                "nodes_edges": build_nodes_edges}
-
-    def redo(stage: str) -> tuple[float, float]:
-        """Drop the stage's own caches and re-run it, bracketed by
-        probes; upstream caches stay warm so only this stage is timed."""
-        if stage == "extract_mentions":
-            for k in ("statements", "mentions"):
-                if k in caches:
-                    caches.pop(k).unpersist()
-        elif stage == "link_and_triples":
-            if "triples" in caches:
-                caches.pop("triples").unpersist()
-        c_pre = _calibrate()
-        t0s = time.time()
-        builders[stage]()
-        wall = round(time.time() - t0s, 3)
-        c_post = _calibrate()
-        return wall, max(c_pre, c_post)
-
-    n_triples_memo: list = []
-
-    def redo_full() -> tuple[dict, float, float, float]:
-        """Drop ALL stage caches and re-run the whole pipeline as one
-        contiguous timed unit (per-stage splits recorded too). Probes
-        BRACKET the run and a daemon thread SAMPLES the probe in-run
-        every ~5 s: a multi-minute run can hide an entire storm between
-        two quiet brackets, so the worst in-run sample gates cleanliness
-        (via _fullrun_clean; in-run reads ~1.5-2.5x from self-load even
-        on a quiet host, storms read 3-70x). Returns (stage walls, total
-        wall, bracket cal, worst in-run cal)."""
-        import threading
-        for k in list(caches):
-            caches.pop(k).unpersist()
-        samples: list[tuple[float, float]] = []
-        stop = threading.Event()
-
-        def poll():
-            while not stop.wait(5.0):
-                v = _calibrate(skip_if_busy=True)
-                if v is not None:  # bracket probe mid-sweep: skip tick
-                    samples.append((time.time(), v))
-
-        c_pre = _calibrate()
-        th = threading.Thread(target=poll, daemon=True)
-        th.start()
-        walls, bounds = {}, {}
-        t0s = time.time()
-        for st in stages:
-            t1 = time.time()
-            builders[st]()
-            t2 = time.time()
-            walls[st] = round(t2 - t1, 3)
-            bounds[st] = (t1, t2)
-        total = round(time.time() - t0s, 3)
-        stop.set()
-        th.join(timeout=2.0)
-        c_post = _calibrate()
-        if not n_triples_memo:  # count AFTER the post-probe: not timed
-            n_triples_memo.append(caches["triples"].count())
-        floor = _cal_floor()
-        bracket = max(c_pre, c_post) / floor
-        inrun = (max(v for _, v in samples) / floor) if samples else bracket
-        return walls, total, bracket, inrun
-
-    # warm pass in stage order (JIT, Python workers, broadcasts; the
-    # extract redo below rebuilds statements/mentions that link/nodes
-    # then reuse) — never banked. Hold the fire-lock meanwhile: another
-    # camp firing into our warm load would waste its window.
-    _warm_lock = _acquire_measure_lock()
-    warm_walls = {st: redo(st)[0] for st in stages}
-    _warm_lock.close()  # flock released on close; the fire loop below
-    # re-acquires per shot through its own handle
-    print(f"CAMP c{cores} sf{corpus_sf:g}: warm "
-          f"{json.dumps(warm_walls)}, stage-sniping", flush=True)
-    # Advisory fire-lock: several camps (one warm JVM per cores level)
-    # may poll concurrently — idle JVMs cost ~0 CPU so they don't
-    # contaminate each other — but only ONE may probe-and-fire at a
-    # time, else the shot measures the other camp's load. flock is
-    # advisory and crash-safe (released on process exit).
-    import fcntl
-    lock_f = open(os.path.join(REPO, "BENCH", ".camp.lock"), "w")
-    while time.time() - t0 < budget_s and not entry_clean():
-        try:
-            fcntl.flock(lock_f, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            time.sleep(3.0)  # another camp is firing; re-check soon
-            continue
-        try:
-            # min-of-2: a single probe has enough variance on a quiet
-            # host (1.1-1.5x the all-time floor) to read dirty and
-            # waste the window; two back-to-back probes both spiking
-            # is rare. Then CONFIRM 6 s later: storm flickers shorter
-            # than the probe pair routinely passed a single check and
-            # burned a multi-minute shot on a dirty window.
-            t = min(_calibrate(), _calibrate())
-            floor = _cal_floor(update=t)
-            if t / floor > gate:
-                fcntl.flock(lock_f, fcntl.LOCK_UN)
-                time.sleep(poll_s)
-                continue
-            time.sleep(6.0)
-            t = min(_calibrate(), _calibrate())
-            floor = _cal_floor(update=t)
-            if t / floor > gate:
-                fcntl.flock(lock_f, fcntl.LOCK_UN)
-                time.sleep(poll_s)
-                continue
-            if full:
-                walls, total, bracket, inrun = redo_full()
-                # stage splits are trusted at the BRACKET ratio only when
-                # the watcher saw no storm anywhere in the run (in-run
-                # samples self-load to ~1.5-2.5x even on a quiet host, so
-                # they cannot grade individual stages directly)
-                stage_ratio = (bracket if inrun <= _inrun_gate(cores)
-                               else max(bracket, inrun))
-                _merge_best_stages(cores, corpus_sf, walls,
-                                   {st: stage_ratio for st in walls})
-                _merge_best_fullrun(cores, corpus_sf, total, bracket,
-                                    n_triples_memo[0], cal_inrun=inrun)
-                fired.append({"walls": walls, "total": total,
-                              "bracket": round(bracket, 2),
-                              "inrun": round(inrun, 2)})
-                print(f"CAMP full run: {total} s {json.dumps(walls)} "
-                      f"cal {bracket:.2f} inrun {inrun:.2f}", flush=True)
-                continue
-            ent = read_best_stages(cores, corpus_sf) or {}
-            dirty = [st for st in stages
-                     if st not in ent or ent[st]["cal"] > CAL_CLEAN_MAX]
-            if dirty:
-                st = dirty[0]
-            else:  # polish: round-robin over already-clean stages; the
-                # merge only keeps a shot that lowers the banked wall
-                stage_camp._rr = getattr(stage_camp, "_rr", -1) + 1
-                st = stages[stage_camp._rr % len(stages)]
-            wall, raw_cal = redo(st)
-            ratio = raw_cal / _cal_floor()
-            _merge_best_stages(cores, corpus_sf, {st: wall}, {st: ratio})
-            print(f"CAMP shot {st}: {wall} s cal {ratio:.2f}", flush=True)
-        finally:
-            fcntl.flock(lock_f, fcntl.LOCK_UN)
-    if this_run and not fired:
-        # budget exhausted, host never read quiet: fire once anyway —
-        # a sample with honest (dirty) cal beats no data for
-        # scaling_this_run
-        fcntl.flock(lock_f, fcntl.LOCK_EX)
-        try:
-            walls, total, bracket, inrun = redo_full()
-            _merge_best_fullrun(cores, corpus_sf, total, bracket,
-                                n_triples_memo[0], cal_inrun=inrun)
-            fired.append({"walls": walls, "total": total,
-                          "bracket": round(bracket, 2),
-                          "inrun": round(inrun, 2)})
-        finally:
-            fcntl.flock(lock_f, fcntl.LOCK_UN)
-    if this_run:
-        # clean-first, then LOWEST WALL — the same ordering
-        # _merge_best_fullrun banks, so scaling_this_run and the bank
-        # agree on which sample represents this level
-        best = min(fired, key=lambda s: (not _sample_clean(s),
-                                         s["total"]))
-        stage_mins = {st: min(s["walls"][st] for s in fired)
-                      for st in stages}
-        print("CAMP_BEST_JSON=" + json.dumps({
-            **best, "n_triples": n_triples_memo[0],
-            "stage_mins": stage_mins,
-            "all_totals": [s["total"] for s in fired],
-            "all_brackets": [s["bracket"] for s in fired],
-            "all_inruns": [s["inrun"] for s in fired]}), flush=True)
-    print(f"CAMP c{cores} sf{corpus_sf:g}: exit clean={entry_clean()}",
-          flush=True)
-    spark.stop()
-
-
-def pair_main() -> None:
-    """Scaling-pair-only capture, clean-gated: waits (bounded) for the
-    host to be in a quiet phase before measuring each level, measures the
-    short (hi) level first, and persists the pair via _merge_best_pair
-    ONLY if both levels' best runs are clean. Run this opportunistically
-    (idle windows, between work phases) until BENCH/best_pair.json holds a
-    clean pair for the current workload_hash.
-
-    Env: BENCH_PAIR_SF (corpus sf, default 2.0), BENCH_SCALE_N (default 2),
-         BENCH_PAIR_REPEAT (default 3), BENCH_PAIR_WAIT (max seconds to
-         wait for a quiet phase per level, default 600).
-    """
-    bench_sf = float(os.environ.get("BENCH_PAIR_SF", "2.0"))
-    scale_n = int(os.environ.get("BENCH_SCALE_N", "2"))
-    repeat = int(os.environ.get("BENCH_PAIR_REPEAT", "3"))
-    max_wait = float(os.environ.get("BENCH_PAIR_WAIT", "600"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    lo, hi = scale_n, scale_n * 4
-
-    out = _sub(["--stage", "gen", "--sf", str(bench_sf), "--cores", "32"])
-    synth_path = [ln for ln in out.splitlines()
-                  if ln.startswith("SYNTH_PATH=")][-1].split("=", 1)[1]
-
-    def wait_clean() -> float:
-        t0 = time.time()
-        while True:
-            cal = min(_calibrate() for _ in range(2))
-            floor = _cal_floor(update=cal)
-            ratio = cal / floor
-            if ratio <= 1.25 or time.time() - t0 > max_wait:
-                return round(ratio, 2)
-            time.sleep(20)
-
-    results = {}
-    for cores in (hi, lo):  # short level first: maximizes the chance both
-        # fit inside one quiet phase
-        gate = wait_clean()
-        print(f"# gate ratio before local[{cores}]: {gate}", flush=True)
-        out = _sub(["--stage", "run", "--cores", str(cores),
-                    "--synth", synth_path, "--sf-dir", sf_dir,
-                    "--budget", str(180.0 * repeat),
-                    "--repeat", str(repeat)])
-        results[cores] = json.loads(
-            [ln for ln in out.splitlines()
-             if ln.startswith("STAGES_JSON=")][-1].split("=", 1)[1])
-
-    n_triples = results[hi]["n_triples"]
-    tput = {c: round(n_triples / results[c]["pipeline_total"], 1)
-            for c in results}
-    sm = {c: results[c].get("stagemin_total",
-                            results[c]["pipeline_total"])
-          for c in results}
-    pair_now = {
-        "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-        "corpus_sf": bench_sf,
-        "cores_lo": lo, "cores_hi": hi,
-        "wall_lo_sec": results[lo]["pipeline_total"],
-        "wall_hi_sec": results[hi]["pipeline_total"],
-        "cal_lo_best": results[lo].get("cal_ratio", 99),
-        "cal_hi_best": results[hi].get("cal_ratio", 99),
-        "cal_inrun_lo": results[lo].get("cal_inrun", 99),
-        "cal_inrun_hi": results[hi].get("cal_inrun", 99),
-        "tput_lo": tput[lo], "tput_hi": tput[hi],
-        "efficiency": round((tput[hi] / tput[lo]) / (hi / lo), 3),
-        "stage_mins_lo": results[lo].get("stage_mins"),
-        "stage_mins_hi": results[hi].get("stage_mins"),
-        "stagemin_wall_lo": sm[lo], "stagemin_wall_hi": sm[hi],
-        "stagemin_efficiency": round((sm[lo] / sm[hi]) / (hi / lo), 3),
-    }
-    best = _merge_best_pair(pair_now)
-    sw = stagewise_clean_summary(lo, hi, bench_sf)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(
-            f"\n## pair-capture @ {pair_now['measured_at']} "
-            f"(corpus sf={bench_sf}, {n_triples} triples, "
-            f"workload {workload_hash()})\n\n"
-            f"local[{lo}] {pair_now['wall_lo_sec']} s "
-            f"(runs {results[lo]['all_runs']}, cal "
-            f"{results[lo].get('cal_ratios')}) vs local[{hi}] "
-            f"{pair_now['wall_hi_sec']} s (runs {results[hi]['all_runs']}, "
-            f"cal {results[hi].get('cal_ratios')}) -> efficiency "
-            f"**{pair_now['efficiency']}** (cal lo/hi "
-            f"{pair_now['cal_lo_best']}/{pair_now['cal_hi_best']}; "
-            f"stored best: {best['efficiency']} @ cal "
-            f"{best['cal_lo_best']}/{best['cal_hi_best']})\n\n"
-            f"stage-min walls (min per stage across runs — each an upper "
-            f"bound on the clean stage time): lo "
-            f"{pair_now['stage_mins_lo']} = {pair_now['stagemin_wall_lo']}"
-            f" s, hi {pair_now['stage_mins_hi']} = "
-            f"{pair_now['stagemin_wall_hi']} s -> stage-min efficiency "
-            f"**{pair_now['stagemin_efficiency']}**\n\n"
-            f"stagewise-clean accumulator (BENCH/best_stages.json — "
-            f"cleanest bracketed sample per stage per level, across all "
-            f"invocations): {json.dumps(sw)}\n")
-    print(json.dumps({"pair_now": pair_now, "best": best,
-                      "stagewise_clean": sw}))
 
 
 def _sub(args: list[str]) -> str:
@@ -1014,160 +228,52 @@ def _sub(args: list[str]) -> str:
     return r.stdout
 
 
+def _tagged(out: str, tag: str) -> str:
+    return [ln for ln in out.splitlines()
+            if ln.startswith(tag)][-1][len(tag):]
+
+
 def main() -> None:
-    """Three subprocess measurements, one JVM each:
-
-    - headline: local[SPARK_GRAFT_CPUS] (the driver contract) + aux queries;
-    - scaling pair: local[N] vs local[4N] with N=BENCH_SCALE_N (default 2,
-      so 4N=8). The pair deliberately stays well under the 32-vCPU box:
-      every mapInPandas/pandas-UDF stage runs cores x Python workers IN
-      ADDITION to the JVM task threads, so local[32] (32 JVM + 32 Python
-      on 32 vCPUs) measures oversubscription, not scaling. local[2] vs
-      local[8] peaks at 16 runnable threads — the honest stand-in for N
-      vs 4N dedicated executors on a cluster.
-    """
+    """Headline local[SPARK_GRAFT_CPUS] run (plus aux queries), then this
+    run's local[N] vs local[4N] pair, N=BENCH_SCALE_N. The pair stays
+    small on purpose: every mapInPandas stage runs cores x Python workers
+    IN ADDITION to the JVM task threads, so a level near the host's vCPU
+    count measures oversubscription, not scaling. A level equal to the
+    headline's reuses the headline measurement."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     mult = float(os.environ.get("BENCH_SF_MULT", "30"))
-    scale_n = int(os.environ.get("BENCH_SCALE_N", "2"))
+    lo = int(os.environ.get("BENCH_SCALE_N", "2"))
+    hi = 4 * lo
 
-    import re as _re
-    m = _re.search(r"sf([0-9.]+)", os.path.basename(os.path.normpath(sf_dir)))
+    m = re.search(r"sf([0-9.]+)", os.path.basename(os.path.normpath(sf_dir)))
     sf = float(m.group(1)) if m else 0.1
     bench_sf = round(sf * mult, 6)
 
-    out = _sub(["--stage", "gen", "--sf", str(bench_sf),
-                "--cores", str(cpus)])
-    synth_path = [ln for ln in out.splitlines()
-                  if ln.startswith("SYNTH_PATH=")][-1].split("=", 1)[1]
+    synth_path = _tagged(_sub(["--stage", "gen", "--sf", str(bench_sf),
+                               "--cores", str(cpus)]), "SYNTH_PATH=")
 
-    lo, hi = scale_n, scale_n * 4  # N and 4N
-
-    bench_t0 = time.time()
-    total_budget = float(os.environ.get("BENCH_TOTAL_BUDGET", "2100"))
-
-    def wait_clean(max_wait: float) -> float:
-        """Hold the (cheap) bandwidth probe until the host reads quiet or
-        the bounded wait expires. A 500 s measurement fired into a noise
-        storm is wasted budget; 20 s probe ticks spent waiting are not —
-        this is what made scaling_this_run read dirty in r1/r2 even when
-        a clean banked pair existed (r2 verdict #4)."""
-        t0 = time.time()
-        max_wait = min(max_wait,
-                       max(0.0, total_budget - (time.time() - bench_t0)
-                           - 800.0))  # never starve the measurements
-        while True:
-            cal = min(_calibrate() for _ in range(2))
-            ratio = round(cal / _cal_floor(update=cal), 2)
-            if ratio <= 1.25 or time.time() - t0 > max_wait:
-                return ratio
-            time.sleep(20)
-
-    def measure(cores: int, with_aux: bool = False,
-                budget_s: float = 420.0) -> dict:
+    def measure(cores: int, with_aux: bool = False) -> dict:
         out = _sub(["--stage", "run", "--cores", str(cores),
-                    "--synth", synth_path, "--sf-dir", sf_dir,
-                    "--budget", str(budget_s)]
+                    "--synth", synth_path, "--sf-dir", sf_dir]
                    + (["--aux"] if with_aux else []))
-        return json.loads(
-            [ln for ln in out.splitlines()
-             if ln.startswith("STAGES_JSON=")][-1].split("=", 1)[1])
+        return json.loads(_tagged(out, "STAGES_JSON="))
 
-    print(f"# gate before headline: {wait_clean(180.0)}", flush=True)
-    results = {cpus: measure(cpus, with_aux=True)}  # headline (gen-warm)
+    results = {cpus: measure(cpus, with_aux=True)}
+    for cores in (lo, hi):
+        if cores not in results:
+            results[cores] = measure(cores)
 
-    # scaling pair via CLEAN-WINDOW CAMPS (r3 verdict "next #1": three
-    # rounds of schedule-fired pairs landed in noise storms; the camp —
-    # warm JVM, in-process probe polling, fire-on-quiet-window, exit on
-    # first clean sample — is what produced every banked clean pair, so
-    # the driver's own run now uses it directly). Each level gets a slice
-    # of the remaining budget; a camp that never sees a quiet window
-    # fires one unconditional run at the end, so scaling_this_run always
-    # carries honest data.
-    def measure_camp(cores: int, budget_s: float) -> dict:
-        # per-level fire gate from the single source (fire_gate): the
-        # post-hoc clean gates are self-load-aware, so firing only under
-        # a flat 1.3 ambient starves levels during mild sustained phases
-        # where their shots would still grade clean (a c2 shot fired at
-        # a 1.45-confirmed window graded clean in-run at 1.86, r4). The
-        # post-hoc clean gates, not the fire trigger, do the grading.
-        out = _sub(["--stage", "camp", "--full", "--this-run",
-                    "--cores", str(cores), "--synth", synth_path,
-                    "--budget", str(round(budget_s, 1))])
-        return camp_best_to_result(json.loads(
-            [ln for ln in out.splitlines()
-             if ln.startswith("CAMP_BEST_JSON=")][-1].split("=", 1)[1]))
-
-    def left(reserve: float) -> float:
-        return max(0.0, total_budget - (time.time() - bench_t0) - reserve)
-
-    # hi runs ~4x faster: a third of the window buys it more shots than
-    # the lo level gets from the rest. Budgets are computed AT LAUNCH so
-    # a hi camp that exits early on its first clean sample hands its
-    # unspent budget to the lo level (which needs the quietest window —
-    # its in-run gate is the strictest) instead of stranding it.
-    for cores in (hi, lo):  # short level first: both may fit one window
-        if cores in results:
-            continue
-        budget = (max(240.0, left(60.0) * 0.35) if cores == hi
-                  else max(300.0, left(60.0)))
-        results[cores] = measure_camp(cores, budget)
-
-    aux = results[cpus].pop("_aux", {})
+    aux = results[cpus].pop("_aux")
     n_triples = results[cpus]["n_triples"]
-    tput = {c: round(n_triples / results[c]["pipeline_total"], 1)
-            for c in results}
-    efficiency = round((tput[hi] / tput[lo]) / (hi / lo), 3)
-
-    # Noise storms can outlast one invocation's budget, so the cleanest
-    # pair ever measured is persisted and carried forward: a single clean
-    # window anywhere (this round or a previous one) beats whatever a
-    # noisy window says today. Both are reported; `scaling` holds the
-    # best-known-clean pair, `scaling_this_run` today's raw attempt.
-    sm = {c: results[c].get("stagemin_total",
-                            results[c]["pipeline_total"])
-          for c in (lo, hi)}
-    pair_now = {
-        "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-        "corpus_sf": bench_sf,
-        "cores_lo": lo, "cores_hi": hi,
-        "wall_lo_sec": results[lo]["pipeline_total"],
-        "wall_hi_sec": results[hi]["pipeline_total"],
-        "cal_lo_best": results[lo].get("cal_ratio", 99),
-        "cal_hi_best": results[hi].get("cal_ratio", 99),
-        "cal_inrun_lo": results[lo].get("cal_inrun", 99),
-        "cal_inrun_hi": results[hi].get("cal_inrun", 99),
-        "tput_lo": tput[lo], "tput_hi": tput[hi],
-        "efficiency": efficiency,
-        "stage_mins_lo": results[lo].get("stage_mins"),
-        "stage_mins_hi": results[hi].get("stage_mins"),
-        "stagemin_wall_lo": sm[lo], "stagemin_wall_hi": sm[hi],
-        "stagemin_efficiency": round((sm[lo] / sm[hi]) / (hi / lo), 3),
-    }
-    best_pair = _merge_best_pair(pair_now)
-
-    queries = {f"kg_{k}": v for k, v in results[cpus].items()
-               if k not in ("n_triples", "all_runs", "cal_ratios",
-                            "cal_ratio", "cal_inrun", "cal_inruns",
-                            "stage_mins", "stagemin_total")}
-    queries["kg_stagemin_total"] = results[cpus].get(
-        "stagemin_total", results[cpus]["pipeline_total"])
-    headline_best = _merge_best_headline({
-        "measured_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-        "corpus_sf": bench_sf, "cpus": cpus,
-        "wall_sec": results[cpus]["pipeline_total"],
-        "cal": results[cpus].get("cal_ratio", 99),
-        "cal_inrun": results[cpus].get("cal_inrun"),
-        "triples_per_sec": tput[cpus],
-        "stage_mins": results[cpus].get("stage_mins"),
-    })
+    tput = {c: round(n_triples / r["pipeline_total"], 1)
+            for c, r in results.items()}
+    queries = {f"kg_{k}": results[cpus][k]
+               for k in STAGES + ("pipeline_total",)}
     queries.update(aux)
-
     line = {
         "metric": "kg_pipeline_wall",
-        "efficiency_best_evidence": efficiency_best_evidence(
-            best_pair, all_stagewise_clean(lo, hi), amdahl_fit(lo, hi),
-            bench_sf),
         "value": results[cpus]["pipeline_total"],
         "unit": "sec",
         "queries": queries,
@@ -1176,90 +282,36 @@ def main() -> None:
         "n_triples": n_triples,
         "cpus": cpus,
         "triples_per_sec": tput[cpus],
-        "headline_best_known": headline_best,
-        "headline_stagewise_clean": headline_stagewise_bound(
-            cpus, bench_sf),
-        "scaling": best_pair,
-        "scaling_storm_insensitive": storm_insensitive_pairs(),
-        "fullrun_wall_history": fullrun_wall_history(),
-        "scaling_stagewise_clean": all_stagewise_clean(lo, hi),
-        "amdahl": amdahl_fit(lo, hi),
-        "scaling_this_run": {
-            **pair_now,
-            "runs_lo": results[lo]["all_runs"],
-            "runs_hi": results[hi]["all_runs"],
-            "cal_lo": results[lo].get("cal_ratios"),
-            "cal_hi": results[hi].get("cal_ratios"),
+        "scaling": {
+            "cores_lo": lo, "cores_hi": hi,
+            "wall_lo_sec": results[lo]["pipeline_total"],
+            "wall_hi_sec": results[hi]["pipeline_total"],
+            "tput_lo": tput[lo], "tput_hi": tput[hi],
+            "efficiency": round((tput[hi] / tput[lo]) / (hi / lo), 3),
+            "cal_inrun_max_s_lo": results[lo]["cal_inrun_max_s"],
+            "cal_inrun_max_s_hi": results[hi]["cal_inrun_max_s"],
         },
     }
-    _write_bench_md(line)
-    # Full diagnostics on their own (NOT final) line, for humans and the
-    # archives; BENCH/BASELINE.md carries the same content formatted.
-    print("BENCH_FULL_JSON=" + json.dumps(line), flush=True)
+    # per-run walls and probe readings on their own (NOT final) line
+    print("BENCH_FULL_JSON=" + json.dumps({**line, "levels": results}),
+          flush=True)
     print(compact_bench_line(line))
 
 
-def camp_best_to_result(s: dict) -> dict:
-    """Shape a CAMP_BEST_JSON sample like stage_run's STAGES_JSON result
-    so main()'s pair assembly is agnostic to which path measured a
-    level."""
-    return {
-        "pipeline_total": s["total"],
-        **{k: s["walls"][k] for k in s["walls"]},
-        "n_triples": s["n_triples"],
-        "cal_ratio": s["bracket"], "cal_inrun": s["inrun"],
-        "all_runs": s["all_totals"], "cal_ratios": s["all_brackets"],
-        "cal_inruns": s["all_inruns"],
-        "stage_mins": s["stage_mins"],
-        "stagemin_total": round(sum(s["stage_mins"].values()), 3),
-    }
+FINAL_KEYS = ("metric", "value", "unit", "queries", "sf", "bench_corpus_sf",
+              "n_triples", "cpus", "triples_per_sec", "scaling")
 
 
 def compact_bench_line(line: dict, cap: int = 1800) -> str:
-    """The driver captures only the last ~2000 bytes of stdout and
-    json.loads the FINAL line (BENCH_r02.json recorded parsed=null
-    because the r2 final line outgrew that buffer). Build a compact
-    final line from the full report: the contract fields plus scalar
-    evidence, hard-capped with the optional evidence blocks degrading
-    first and the per-query map truncating as the last resort."""
-    headline_best = line.get("headline_best_known")
-    best_pair = line.get("scaling")
-    pair_now = line.get("scaling_this_run") or {}
-    compact = {
-        "metric": line["metric"],
-        "value": line["value"],
-        "unit": line["unit"],
-        "queries": dict(line.get("queries") or {}),
-        "sf": line.get("sf"),
-        "bench_corpus_sf": line.get("bench_corpus_sf"),
-        "n_triples": line.get("n_triples"),
-        "cpus": line.get("cpus"),
-        "triples_per_sec": line.get("triples_per_sec"),
-        "efficiency_best_evidence": line.get("efficiency_best_evidence"),
-        "headline_best_known": {
-            k: headline_best.get(k)
-            for k in ("wall_sec", "cal", "cal_inrun", "triples_per_sec",
-                      "corpus_sf", "workload_hash")}
-        if isinstance(headline_best, dict) else headline_best,
-        "scaling": {
-            k: best_pair.get(k)
-            for k in ("measured_at", "corpus_sf", "cores_lo", "cores_hi",
-                      "wall_lo_sec", "wall_hi_sec", "cal_inrun_lo",
-                      "cal_inrun_hi", "efficiency", "workload_hash")}
-        if isinstance(best_pair, dict) else best_pair,
-        "scaling_this_run": {
-            k: pair_now.get(k)
-            for k in ("corpus_sf", "wall_lo_sec", "wall_hi_sec",
-                      "cal_lo_best", "cal_hi_best", "cal_inrun_lo",
-                      "cal_inrun_hi", "efficiency",
-                      "stagemin_efficiency")},
-    }
+    """The caller captures only the last ~2000 bytes of stdout and
+    json.loads the FINAL line (BENCH_r02.json recorded parsed=null when
+    the line outgrew that buffer). Keep only the contract keys; past
+    ``cap`` bytes drop ``scaling``, then truncate the per-query map."""
+    compact = {k: line.get(k) for k in FINAL_KEYS}
+    compact["queries"] = dict(compact["queries"] or {})
     js = json.dumps(compact)
-    for drop in ("scaling_this_run", "headline_best_known",
-                 "efficiency_best_evidence", "scaling"):
-        if len(js) <= cap:
-            return js
-        compact.pop(drop, None)
+    if len(js) > cap:
+        compact.pop("scaling")
         js = json.dumps(compact)
     while len(js) > cap and compact["queries"]:
         compact["queries"].pop(next(iter(compact["queries"])))
@@ -1267,486 +319,11 @@ def compact_bench_line(line: dict, cap: int = 1800) -> str:
     return js
 
 
-_WORKLOAD_FILES = [
-    "memex_kg_spark/pipeline.py",
-    "memex_kg_spark/operators/extraction.py",
-    "memex_kg_spark/operators/linking.py",
-    "memex_kg_spark/operators/canonicalize.py",
-    "memex_kg_spark/operators/components.py",
-]
-
-# Measurement-config version: folded into workload_hash so banked samples
-# taken under a different Spark config (not visible in the source files
-# above) can never be compared against runs under this one. Bump on any
-# make_spark / stage-structure change that alters the measured workload.
-_MEASURE_SALT = "v3:parts=max(32,2c)"
-
-# Persist-gate: a pair whose worst-level cal ratio exceeds this is noise-
-# contaminated by the bench's own validity rule and is NEVER stored as
-# "best known clean" (it may still be reported as scaling_this_run).
-CAL_CLEAN_MAX = 1.5
-
-
-def amdahl_fit(lo: int = 2, hi: int = 8, data: dict | None = None,
-               wh: str | None = None) -> dict:
-    """Serial/parallel decomposition of each pipeline stage from the
-    clean stage samples: with two clean levels, T(c) = f + W/c solves to
-
-        W = (T_lo - T_hi) / (1/lo - 1/hi)     (parallel work)
-        f = T_lo - W/lo                        (serial/fixed seconds)
-
-    Done per corpus size, this separates the two causes of sub-linear
-    small-corpus scaling: a FIXED per-job cost f (driver scheduling,
-    Python-worker spawn, broadcast builds — constant in corpus size, so
-    it vanishes from the efficiency as the corpus grows) versus a
-    genuinely serial fraction of the WORK (which would scale with the
-    corpus and cap efficiency forever). If the fitted f is ~constant
-    across corpus sizes while W grows linearly, the plan itself is
-    scale-free and the strong-scaling efficiency approaches 1 at cluster
-    scale; the model curve eff(sf) makes that projection explicit."""
-    stages = ("extract_mentions", "link_and_triples", "nodes_edges")
-    if data is None:
-        path = os.path.join(REPO, "BENCH", "best_stages.json")
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            return {}
-    if wh is None:
-        wh = workload_hash()
-    sfs = sorted({float(k.split("|")[1][2:]) for k in data
-                  if k.startswith(wh + "|sf")})
-    per_sf, f_acc, w_unit_acc = {}, {}, {}
-    for sf in sfs:
-        e_lo = data.get(f"{wh}|sf{sf:g}|c{lo}") or {}
-        e_hi = data.get(f"{wh}|sf{sf:g}|c{hi}") or {}
-        fits = {}
-        for st in stages:
-            a, b = e_lo.get(st), e_hi.get(st)
-            if (not a or not b or a["cal"] > CAL_CLEAN_MAX
-                    or b["cal"] > CAL_CLEAN_MAX):
-                continue  # fit only from clean-at-both-levels samples
-            w = (a["wall"] - b["wall"]) / (1.0 / lo - 1.0 / hi)
-            fx = a["wall"] - w / lo
-            fits[st] = {"f_sec": round(fx, 3), "w_sec": round(w, 3),
-                        "stage_eff": round(
-                            a["wall"] / ((hi / lo) * b["wall"]), 3)}
-            f_acc.setdefault(st, []).append(fx)
-            w_unit_acc.setdefault(st, []).append(w / sf)
-        if fits:
-            per_sf[f"sf{sf:g}"] = fits
-    if not f_acc:
-        return {}
-    # model curve: f = mean fitted fixed cost, W(sf) = mean unit work * sf
-    f_m = {st: sum(v) / len(v) for st, v in f_acc.items()}
-    w_m = {st: sum(v) / len(v) for st, v in w_unit_acc.items()}
-    curve = {}
-    for sf in (1, 3, 10, 30, 100, 1000):
-        t_lo = sum(max(f, 0.0) + w * sf / lo
-                   for f, w in zip(f_m.values(), w_m.values()))
-        t_hi = sum(max(f, 0.0) + w * sf / hi
-                   for f, w in zip(f_m.values(), w_m.values()))
-        curve[f"sf{sf}"] = round(t_lo / ((hi / lo) * t_hi), 3)
-    return {"lo": lo, "hi": hi, "per_sf": per_sf,
-            "fixed_sec_mean": {k: round(v, 3) for k, v in f_m.items()},
-            "work_sec_per_sf_mean": {k: round(v, 3)
-                                     for k, v in w_m.items()},
-            "model_efficiency_by_sf": curve}
-
-
-def workload_hash() -> str:
-    """md5 over the measured-pipeline source files: a stored best pair is
-    only comparable to the current code if the pipeline it measured is
-    byte-identical (ADVICE r01: otherwise an old faster pair masks a
-    regression forever)."""
-    import hashlib
-    h = hashlib.md5()
-    h.update(_MEASURE_SALT.encode())
-    for rel in _WORKLOAD_FILES:
-        try:
-            with open(os.path.join(REPO, rel), "rb") as f:
-                h.update(f.read())
-        except OSError:
-            h.update(b"?")
-    return h.hexdigest()[:12]
-
-
-def _merge_best_pair(pair_now: dict) -> dict:
-    """Keep the best scaling pair ever measured FOR THE CURRENT PIPELINE
-    CODE, persisted in BENCH/best_pair.json. Quality order matches the
-    per-level full-run bank (_merge_best_fullrun): clean-class first,
-    then lowest hi-level wall, then lowest worst-level cal — host noise
-    only ever ADDS wall time, so among gate-clean samples the fastest is
-    the least contaminated. Dirty pairs are reported but never stored; a
-    stored pair from different pipeline code is discarded."""
-    path = os.path.join(REPO, "BENCH", "best_pair.json")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    wh = workload_hash()
-    pair_now = {**pair_now, "workload_hash": wh}
-    stored = None
-    try:
-        with open(path) as f:
-            stored = json.load(f)
-    except (OSError, ValueError):
-        pass
-    if stored is not None and stored.get("workload_hash") != wh:
-        stored = None  # pipeline code changed: old pair no longer evidence
-
-    def worst_cal(p):
-        return max(p.get("cal_lo_best", 99), p.get("cal_hi_best", 99))
-
-    def quality(p):
-        return (not _pair_clean(p), p.get("wall_hi_sec", 1e9),
-                worst_cal(p))
-
-    best = pair_now
-    if stored is not None:
-        s_sf = stored.get("corpus_sf") or 0
-        n_sf = pair_now.get("corpus_sf") or 0
-        if s_sf > n_sf and _pair_clean(stored):
-            # Scaling evidence at a larger corpus strictly dominates: a
-            # smaller corpus is more overhead-dominated (see amdahl_fit),
-            # so a clean small-sf pair (e.g. a tiny smoke run) must never
-            # displace a clean big-sf one.
-            best = stored
-        elif (s_sf == n_sf
-                and stored.get("cores_lo") == pair_now.get("cores_lo")
-                and quality(stored) < quality(pair_now)):
-            best = stored
-    if _pair_clean(best):
-        with open(path, "w") as f:
-            json.dump(best, f, indent=1)
-    elif stored is not None:
-        best = stored  # keep whatever clean pair is already on disk
-    return best
-
-
-def _headline_clean(p: dict) -> bool:
-    """Same clean definition as _fullrun_clean / _pair_clean (r4: the
-    headline merge predated the in-run watcher and still keyed on
-    bracket cal <= 1.5, so a camp run the full-run tier graded CLEAN —
-    in-run storm-free, brackets under the neighborhood bound — could
-    never become the banked headline; one clean definition everywhere).
-    Entries without an in-run reading (pre-watcher stage_run samples)
-    keep qualifying through the strict bracket rule they were graded
-    under."""
-    if p.get("cal_inrun") is not None:
-        return (p.get("cal", 99) <= BRACKET_NEIGHBOR_MAX
-                and p["cal_inrun"] <= _inrun_gate(p.get("cpus", 32)))
-    return p.get("cal", 99) <= CAL_CLEAN_MAX
-
-
-def _merge_best_headline(now: dict) -> dict:
-    """Best-known-clean local[CPUS] headline, persisted like the scaling
-    pair: clean-class first (in-run watcher + neighborhood bracket, see
-    _headline_clean), then lowest bracket cal, then fastest, for the
-    current pipeline code only; noisy samples are reported but never
-    stored."""
-    path = os.path.join(REPO, "BENCH", "best_headline.json")
-    wh = workload_hash()
-    now = {**now, "workload_hash": wh}
-    stored = None
-    try:
-        with open(path) as f:
-            stored = json.load(f)
-    except (OSError, ValueError):
-        pass
-    if stored is not None and (stored.get("workload_hash") != wh
-                               or stored.get("cpus") != now.get("cpus")):
-        stored = None
-
-    def quality(p):
-        return (not _headline_clean(p), p.get("cal", 99),
-                p.get("wall_sec", 1e9))
-
-    best = now
-    if stored is not None:
-        s_sf = stored.get("corpus_sf") or 0
-        n_sf = now.get("corpus_sf") or 0
-        if s_sf > n_sf and _headline_clean(stored):
-            # never let a clean small-corpus smoke run displace the
-            # banked clean headline at a larger corpus (same rationale
-            # as _merge_best_pair)
-            best = stored
-        elif s_sf == n_sf and quality(stored) < quality(now):
-            best = stored
-    if _headline_clean(best):
-        with open(path, "w") as f:
-            json.dump(best, f, indent=1)
-    elif stored is not None:
-        best = stored
-    return best
-
-
-def fullrun_wall_history() -> dict:
-    """Per-(corpus, cores) shot-wall spread for the CURRENT workload
-    hash, from the rolling ``walls_seen`` history in best_fullrun.json.
-    Walls that agree to ~1% across independent windows (quiet and
-    mid-storm) bound the noise contribution in the level's best wall:
-    host noise only ever inflates, so a tight spread means no shot was
-    materially inflated — recorded so a reader of the driver artifact
-    sees the consistency evidence, not just the best sample's label."""
-    wh = workload_hash()
-    try:
-        with open(os.path.join(REPO, "BENCH", "best_fullrun.json")) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    out = {}
-    for key, e in data.items():
-        if not key.startswith(wh + "|"):
-            continue
-        hist = (e.get("walls_seen") or []) + [e["wall"]]
-        # the rolling history caps at 12 shots, so the banked best can
-        # roll off it — fold it back in for the spread
-        if len(hist) < 3:
-            continue
-        lo, hi = min(hist), max(hist)
-        out[key.split("|", 1)[1]] = {
-            "n_shots": len(hist), "wall_min": lo, "wall_max": hi,
-            "spread_pct": round(100.0 * (hi - lo) / lo, 2),
-            "best_label": ("clean" if _fullrun_clean(
-                e, int(key.rsplit("|c", 1)[1])) else "dirty")}
-    return out
-
-
-def storm_insensitive_pairs(data: dict | None = None,
-                            wh: str | None = None) -> dict:
-    """Implied N->4N efficiency BOUNDS from shot-wall consistency, for
-    corpus sizes whose direct pair never certified clean (r4: the sf6
-    c2 level starved through multi-hour ambient phases while its fired
-    walls clustered tightly at the minimum — noise only ever inflates a
-    wall, so several independent shots agreeing near the min bound the
-    clean wall from above, and the implied pair bounds efficiency).
-
-    This is an explicitly UNCERTIFIED tier: it is reported beside the
-    certified evidence (never merged into best_pair / best-evidence
-    tiers) with the consistency data a skeptical reader needs — shot
-    count and how many shots sit within 2/5/10% of the minimum. A level
-    contributes its clean best wall when it has one, else its min wall
-    over >= 3 shots."""
-    if wh is None:
-        wh = workload_hash()
-    if data is None:
-        try:
-            with open(os.path.join(REPO, "BENCH",
-                                   "best_fullrun.json")) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            return {}
-    per: dict = {}
-    for key, e in data.items():
-        if not key.startswith(wh + "|"):
-            continue
-        sf_s, c_s = key.split("|")[1:]
-        cores = int(c_s[1:])
-        if cores not in (2, 8):
-            continue
-        hist = list(e.get("walls_seen") or [])
-        if e["wall"] not in hist:  # banked best may have rolled off the
-            hist.append(e["wall"])  # capped history — fold it back in
-        hist.sort()
-        mn = hist[0]
-        lvl = {"wall_bound": mn, "n_shots": len(hist),
-               "within_2pct": sum(1 for w in hist if w <= mn * 1.02),
-               "within_5pct": sum(1 for w in hist if w <= mn * 1.05),
-               "within_10pct": sum(1 for w in hist if w <= mn * 1.10)}
-        if _fullrun_clean(e, cores):
-            lvl.update(wall_bound=e["wall"], label="clean")
-        elif len(hist) >= 3:
-            lvl["label"] = "storm_insensitive_min"
-        else:
-            continue  # one or two dirty shots bound nothing
-        per.setdefault(float(sf_s[2:]), {})[cores] = lvl
-    out = {}
-    for sf, lv in sorted(per.items()):
-        if 2 not in lv or 8 not in lv:
-            continue
-        if lv[2]["label"] == "clean" and lv[8]["label"] == "clean":
-            continue  # a certified pair exists; this tier adds nothing
-        out[f"sf{sf:g}"] = {
-            "efficiency_bound": round(
-                (lv[2]["wall_bound"] / lv[8]["wall_bound"]) / 4.0, 3),
-            "lo_c2": lv[2], "hi_c8": lv[8], "certified": False,
-            "note": "bound from shot-wall consistency; noise only "
-                    "inflates walls, so min-clustered shots bound the "
-                    "clean wall — NOT a certified clean pair"}
-    return out
-
-
-def efficiency_best_evidence(best_pair: dict, stagewise: dict,
-                             amdahl: dict, bench_sf: float) -> dict:
-    """One unambiguous answer to "what is the measured N->4N scaling
-    efficiency?", picked from the cleanest evidence tier available:
-
-    1. a directly measured full-pipeline pair whose best runs at BOTH
-       levels were bracketed clean (cal <= CAL_CLEAN_MAX);
-    2. else the stagewise-clean pair at the LARGEST corpus size where
-       every stage at both levels has a clean bracketed sample (each
-       stage sample is an upper bound on its clean wall, so the summed
-       pair is valid scaling evidence with per-stage cal ≈ 1);
-    3. else the Amdahl-model projection at the bench corpus size,
-       fitted only from clean-at-both-levels stage samples.
-
-    The host's noise phases (see _calibrate) are why tier 1 can stay
-    empty for hours while tiers 2-3 fill: a 60-90 s clean window rarely
-    fits a whole 2-core run but easily fits single stages."""
-    if _pair_clean(best_pair):
-        return {"tier": "direct_clean_pair",
-                "efficiency": best_pair.get("efficiency"),
-                "corpus_sf": best_pair.get("corpus_sf"),
-                "cal_lo": best_pair.get("cal_lo_best"),
-                "cal_hi": best_pair.get("cal_hi_best"),
-                "cal_inrun_lo": best_pair.get("cal_inrun_lo"),
-                "cal_inrun_hi": best_pair.get("cal_inrun_hi")}
-    clean_sfs = sorted(
-        (float(k[2:]), v) for k, v in (stagewise or {}).items()
-        if v and v.get("all_clean"))
-    if clean_sfs:
-        sf, v = clean_sfs[-1]
-        return {"tier": "stagewise_clean_pair", "corpus_sf": sf,
-                "efficiency": v["efficiency"],
-                "wall_lo_sec": v["wall_lo_sec"],
-                "wall_hi_sec": v["wall_hi_sec"],
-                "all_corpus_sizes": {f"sf{s:g}": w["efficiency"]
-                                     for s, w in clean_sfs}}
-    curve = (amdahl or {}).get("model_efficiency_by_sf") or {}
-    key = f"sf{bench_sf:g}"
-    if curve.get(key):  # missing/zero sf entry: fall through to tier 4
-        return {"tier": "amdahl_model",
-                "efficiency": curve[key],
-                "corpus_sf": bench_sf,
-                "model_curve": curve}
-    # Last resort: a clean pair measured on a PRIOR code version (the
-    # workload hash changed under it, e.g. a measurement-config bump).
-    # Honest but weaker — the plan it measured is near-identical, and a
-    # labeled stale number beats reporting a noise-contaminated fresh one.
-    prior = _prior_hash_clean_pair()
-    if prior is not None:
-        return {"tier": "prior_code_clean_pair",
-                "efficiency": prior.get("efficiency"),
-                "corpus_sf": prior.get("corpus_sf"),
-                "cal_lo": prior.get("cal_lo_best"),
-                "cal_hi": prior.get("cal_hi_best"),
-                "workload_hash": prior.get("workload_hash"),
-                "note": "measured on prior pipeline code (hash differs); "
-                        "no clean pair exists yet for the current code"}
-    return {"tier": "none", "efficiency": None}
-
-
-def _prior_hash_clean_pair() -> dict | None:
-    """The stored best_pair.json if it is clean but stamped with a
-    different (older) workload hash than the current code. Cleanliness
-    uses the SAME in-run-primary rule as live pairs (_pair_clean):
-    bracket cal alone cannot certify a multi-minute run, and a
-    pre-watcher pair without in-run readings is dirty by definition."""
-    try:
-        with open(os.path.join(REPO, "BENCH", "best_pair.json")) as f:
-            p = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if p.get("workload_hash") != workload_hash() and _pair_clean(p):
-        return p
-    return None
-
-
-def _write_bench_md(line: dict) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    s = line["scaling_this_run"]
-    b = line["scaling"]
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(
-            f"\n## bench @ {time.strftime('%Y-%m-%d %H:%M:%S')} "
-            f"(corpus sf={line['bench_corpus_sf']}, "
-            f"{line['n_triples']} triples)\n\n"
-            f"headline local[{line['cpus']}]: {line['value']} s, "
-            f"{line['triples_per_sec']} triples/sec "
-            f"(best-known-clean: {line['headline_best_known'].get('wall_sec')}"
-            f" s @ cal {line['headline_best_known'].get('cal')}, "
-            f"{line['headline_best_known'].get('triples_per_sec')} "
-            f"triples/sec)\n\n"
-            f"**scaling efficiency, cleanest evidence**: "
-            f"{json.dumps(line.get('efficiency_best_evidence'))}\n\n"
-            f"| cores | wall min (s) | all runs (s) | triples/sec |\n"
-            f"|---|---|---|---|\n"
-            f"| local[{s['cores_lo']}] (N) | {s['wall_lo_sec']} | "
-            f"{s['runs_lo']} cal={s['cal_lo']} | {s['tput_lo']} |\n"
-            f"| local[{s['cores_hi']}] (4N) | {s['wall_hi_sec']} | "
-            f"{s['runs_hi']} cal={s['cal_hi']} | {s['tput_hi']} |\n\n"
-            f"this-run efficiency = **{s['efficiency']}** "
-            f"(cal lo/hi = {s['cal_lo_best']}/{s['cal_hi_best']}; "
-            f"valid only when both cal ≈ 1)\n\n"
-            + (f"best-known-clean pair (BENCH/best_pair.json, measured "
-               f"{b['measured_at']}, cal {b['cal_lo_best']}/"
-               f"{b['cal_hi_best']}): local[{b['cores_lo']}] "
-               f"{b['wall_lo_sec']} s vs local[{b['cores_hi']}] "
-               f"{b['wall_hi_sec']} s -> efficiency = "
-               f"**{b['efficiency']}** (target >= 0.8)\n\n"
-               if _pair_clean(b) else
-               f"no clean pair banked for the current workload hash yet "
-               f"(this attempt read cal {b['cal_lo_best']}/"
-               f"{b['cal_hi_best']} — NOT evidence; see "
-               f"efficiency_best_evidence above for the cleanest "
-               f"cross-hash tier)\n\n") +
-            f"per-stage (local[{line['cpus']}]): "
-            f"{json.dumps(line['queries'])}\n")
-        hb = line.get("headline_stagewise_clean")
-        if hb:
-            tps = (round(line["n_triples"] / hb["wall_sec_bound"], 1)
-                   if hb["wall_sec_bound"] else None)
-            f.write(
-                f"\nheadline stagewise-clean bound (sum of best banked "
-                f"stage samples at local[{hb['cpus']}], all_clean="
-                f"{hb['all_clean']}): <= {hb['wall_sec_bound']} s "
-                f"(~{tps} triples/sec)\n")
-        swc = line.get("scaling_stagewise_clean") or {}
-        for sfk, summ in swc.items():
-            if not summ:
-                continue
-            if summ.get("all_clean"):
-                f.write(
-                    f"\nstagewise-clean pair ({sfk}, every stage at both "
-                    f"levels individually bracketed cal<=1.5, "
-                    f"BENCH/best_stages.json): local[{s['cores_lo']}] "
-                    f"{summ['wall_lo_sec']} s vs local[{s['cores_hi']}] "
-                    f"{summ['wall_hi_sec']} s -> efficiency = "
-                    f"**{summ['efficiency']}** (target >= 0.8)\n")
-            else:
-                dirty = [f"{lvl}:{st}" for lvl in ("lo", "hi")
-                         for st, v in (summ.get(lvl) or {}).items()
-                         if v.get("cal", 99) > CAL_CLEAN_MAX]
-                f.write(f"\nstagewise-clean pair ({sfk}): incomplete — "
-                        f"stages still lacking a clean sample: {dirty}\n")
-        for sfk, si in (line.get("scaling_storm_insensitive")
-                        or {}).items():
-            f.write(
-                f"\nstorm-insensitive bound ({sfk}, UNCERTIFIED): "
-                f"implied efficiency {si['efficiency_bound']} from "
-                f"lo {si['lo_c2']['wall_bound']} s "
-                f"({si['lo_c2']['label']}, {si['lo_c2']['n_shots']} "
-                f"shots, {si['lo_c2']['within_2pct']} within 2% of min) "
-                f"vs hi {si['hi_c8']['wall_bound']} s "
-                f"({si['hi_c8']['label']}) — consistency bounds noise "
-                f"from above; NOT a certified clean pair\n")
-        am = line.get("amdahl") or {}
-        if am.get("per_sf"):
-            f.write(
-                f"\nAmdahl fit from clean stage samples "
-                f"(T(c)=f+W/c per stage): fixed f = "
-                f"{json.dumps(am.get('fixed_sec_mean'))} s, work W/sf = "
-                f"{json.dumps(am.get('work_sec_per_sf_mean'))} s; "
-                f"model efficiency by corpus size: "
-                f"{json.dumps(am.get('model_efficiency_by_sf'))} — fixed "
-                f"per-job cost (scheduler, Python-worker spawn, broadcast "
-                f"build) is what bounds small-corpus efficiency; the "
-                f"parallel work itself scales.\n")
-
-
 if __name__ == "__main__":
     if "--stage" in sys.argv:
         import argparse
         ap = argparse.ArgumentParser()
-        ap.add_argument("--stage", required=True)
+        ap.add_argument("--stage", required=True, choices=("gen", "run"))
         ap.add_argument("--sf", type=float, default=0.1)
         ap.add_argument("--cores", type=int, default=8)
         ap.add_argument("--synth", default="")
@@ -1754,30 +331,11 @@ if __name__ == "__main__":
         ap.add_argument("--aux", action="store_true")
         ap.add_argument("--budget", type=float, default=600.0)
         ap.add_argument("--repeat", type=int, default=3)
-        ap.add_argument("--polish", action="store_true")
-        ap.add_argument("--full", action="store_true")
-        ap.add_argument("--this-run", action="store_true",
-                        dest="this_run")
-        ap.add_argument("--gate", type=float, default=None,
-                        help="camp fire gate: max probe/floor ratio to "
-                             "fire a shot; default = fire_gate(cores), "
-                             "the single per-level source (the post-hoc "
-                             "clean gates are looser; a mild sustained "
-                             "phase can sit between them and starve a "
-                             "flat low trigger)")
         a = ap.parse_args()
         if a.stage == "gen":
             stage_gen(a.sf, a.cores)
-        elif a.stage == "camp":
-            stage_camp(a.cores, a.synth, budget_s=a.budget,
-                       gate=a.gate if a.gate is not None
-                       else fire_gate(a.cores),
-                       polish=a.polish, full=a.full or a.this_run,
-                       this_run=a.this_run)
         else:
             stage_run(a.cores, a.synth, a.sf_dir, a.aux,
                       repeat=a.repeat, budget_s=a.budget)
-    elif "--pair" in sys.argv:
-        pair_main()
     else:
         main()

@@ -43,58 +43,29 @@ def alias_winners(alias_dim: DataFrame) -> DataFrame:
     """norm_alias -> winning (qid, label, node_type, score).
 
     Runs on the dimension only (thousands of rows), so the window sort is
-    free; the result broadcasts to every executor. Memoized per logical
-    plan on the owning SparkSession (same pattern as canonical_map): the
+    free; the result broadcasts to every executor. Memoized on the owning
+    SparkSession by ``memo.dim_memo`` (same pattern as canonical_map): the
     pipeline consumes winners in several joins and each broadcast build is
     a fixed-cost driver-side job — pure overhead that would otherwise be
-    paid 4-5x per run and eat into N->4N scaling efficiency.
+    paid 4-5x per run and eat into N->4N scaling efficiency. The key is
+    the plan AND the source files, so a dimension rewritten in place gets
+    fresh winners."""
+    from .memo import df_key, dim_memo
 
-    Memo key = semanticHash PLUS the source files' (path, mtime, size), so
-    a regenerated dimension under an identical logical plan invalidates
-    the entry; ``clear_winner_memo`` is the explicit hook. Checkpointed
-    blocks of evicted entries are released via the DF's RDD."""
-    import os
-    sess = alias_dim.sparkSession
-    memo = getattr(sess, "_kg_winners_memo", None)
-    if memo is None:
-        memo = {}
-        sess._kg_winners_memo = memo
-    try:
-        files = tuple(sorted(
-            (f, os.path.getmtime(f.replace("file:", "")),
-             os.path.getsize(f.replace("file:", "")))
-            for f in alias_dim.inputFiles()))
-    except OSError:
-        files = ()
-    key = (alias_dim.semanticHash(), files)
-    if key in memo:
-        return memo[key]
-    scored = alias_dim.withColumn(
-        "score",
-        score_candidates(F.col("norm_alias"), F.col("norm_alias"),
-                         F.col("prior")))
-    w = Window.partitionBy("norm_alias").orderBy(
-        F.col("score").desc(), F.col("qid").asc())
-    out = (scored
-           .withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") == 1)
-           .select("norm_alias", "qid", "label", "node_type", "score")
-           .localCheckpoint())
-    memo[key] = out
-    return out
+    def _build():
+        scored = alias_dim.withColumn(
+            "score",
+            score_candidates(F.col("norm_alias"), F.col("norm_alias"),
+                             F.col("prior")))
+        w = Window.partitionBy("norm_alias").orderBy(
+            F.col("score").desc(), F.col("qid").asc())
+        return (scored
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") == 1)
+                .select("norm_alias", "qid", "label", "node_type", "score"))
 
-
-def clear_winner_memo(spark) -> None:
-    """Drop all memoized winner dimensions (and unpin their checkpointed
-    blocks) — call after mutating a dimension table in place."""
-    memo = getattr(spark, "_kg_winners_memo", None)
-    if memo:
-        for df in memo.values():
-            try:
-                df.rdd.unpersist()
-            except Exception:
-                pass
-        memo.clear()
+    return dim_memo(alias_dim.sparkSession, "_kg_winners_memo",
+                    df_key(alias_dim), _build)
 
 
 def link_mentions(mentions: DataFrame, alias_dim: DataFrame) -> DataFrame:

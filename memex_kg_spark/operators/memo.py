@@ -7,7 +7,7 @@ per pipeline run. A long-running cluster job computes them once; paying
 them 4-5x per run flattens the N->4N scaling curve (fixed cost C in
 T = W/N + C dominates as N grows). Memo key = (semanticHash, source file
 identity), so a regenerated input under an identical plan invalidates
-the entry (same contract as alias_winners)."""
+the entry."""
 
 from __future__ import annotations
 

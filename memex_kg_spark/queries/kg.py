@@ -188,13 +188,18 @@ def q_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star algorithm (r5 verdict #3: the twostar CC was
     property-tested but invisible to the driver artifact). Its output
     contract equals hash-min's, so the oracle asserts it equals the
-    recursive-CTE canonical id — the value hash covers BOTH CC paths."""
+    recursive-CTE canonical id — the value hash covers BOTH CC paths.
+    The twostar frame is memoized per alias dimension, so a repeat call
+    in the same session reruns none of its rounds."""
     art = kg_artifacts(spark, sf_dir)
     nodes = art["nodes"]
     from ..operators.components import (alias_component_edges,
                                         connected_components_twostar)
-    cc2 = connected_components_twostar(
-        alias_component_edges(art["alias_dim"]))
+    from ..operators.memo import df_key, dim_memo
+    alias_dim = art["alias_dim"]
+    cc2 = dim_memo(spark, "_kg_twostar_memo", df_key(alias_dim),
+                   lambda: connected_components_twostar(
+                       alias_component_edges(alias_dim)))
     props_str = F.array_join(
         F.array_sort(F.transform(
             F.map_entries("props"),

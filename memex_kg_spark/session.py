@@ -16,7 +16,8 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "memex_kg_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS")
+                         or len(os.sched_getaffinity(0)))
     shuffle = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder

@@ -6,7 +6,7 @@ set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${MASTER:-local[8]}"
 # match the configuration the published bench numbers were measured
-# under: max(32, 2*cores) shuffle partitions (bench.py make_spark)
+# under: max(32, 2*cores) shuffle partitions (bench.py stage_run)
 if [ -z "${SHUFFLE_PARTITIONS:-}" ]; then
   CORES="$(echo "$MASTER" | sed -n 's/^local\[\([0-9]*\)\]$/\1/p')"
   if [ "$MASTER" = 'local[*]' ]; then

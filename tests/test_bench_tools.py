@@ -1,384 +1,46 @@
-"""Spark-free unit tests for bench.py's measurement estimators.
-
-The scaling evidence the north rule asks for is assembled from per-stage
-clean samples (BENCH/best_stages.json) by ``stagewise_clean_summary`` and
-decomposed by ``amdahl_fit`` — both pure functions over the accumulator,
-so their algebra is pinned here without a SparkSession.
-"""
-import sys
+"""bench.py's remaining surface: the final JSON line and its own copy of
+the flagship pipeline."""
+import json
 import os
+import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
 
-def _entry(walls, cal=1.0):
-    return {st: {"wall": w, "cal": cal, "at": "t"}
-            for st, w in zip(("extract_mentions", "link_and_triples",
-                              "nodes_edges"), walls)}
-
-
-def test_amdahl_exact_recovery():
-    # Construct T(c) = f + W/c exactly and check the fit recovers f, W.
-    f = {"extract_mentions": 2.0, "link_and_triples": 1.5,
-         "nodes_edges": 1.0}
-    w = {"extract_mentions": 12.0, "link_and_triples": 20.0,
-         "nodes_edges": 2.0}
-    lo_walls = [f[s] + w[s] / 2 for s in f]
-    hi_walls = [f[s] + w[s] / 8 for s in f]
-    data = {"wh|sf1|c2": _entry(lo_walls), "wh|sf1|c8": _entry(hi_walls)}
-    fit = bench.amdahl_fit(2, 8, data=data, wh="wh")
-    for st in f:
-        assert abs(fit["per_sf"]["sf1"][st]["f_sec"] - f[st]) < 1e-6
-        assert abs(fit["per_sf"]["sf1"][st]["w_sec"] - w[st]) < 1e-6
-    # With zero fixed cost the model efficiency is 1 at every sf; with
-    # these f the curve must be monotonically increasing toward 1.
-    curve = list(fit["model_efficiency_by_sf"].values())
-    assert all(b >= a for a, b in zip(curve, curve[1:]))
-    assert curve[-1] > 0.99
-
-
-def test_amdahl_skips_dirty_samples():
-    data = {
-        "wh|sf1|c2": _entry([10.0, 10.0, 10.0]),
-        "wh|sf1|c8": {**_entry([4.0, 4.0, 4.0]),
-                      "nodes_edges": {"wall": 4.0, "cal": 9.9, "at": "t"}},
-    }
-    fit = bench.amdahl_fit(2, 8, data=data, wh="wh")
-    assert "nodes_edges" not in fit["per_sf"]["sf1"]
-    assert "extract_mentions" in fit["per_sf"]["sf1"]
-
-
-def test_amdahl_unit_work_constant_across_sf():
-    # W scales linearly with sf, f constant -> w_sec_per_sf identical.
-    def walls(sf, c):
-        return [1.0 + 8.0 * sf / c, 0.5 + 16.0 * sf / c, 0.2 + 2.0 * sf / c]
-
-    data = {}
-    for sf in (1, 3):
-        data[f"wh|sf{sf}|c2"] = _entry(walls(sf, 2))
-        data[f"wh|sf{sf}|c8"] = _entry(walls(sf, 8))
-    fit = bench.amdahl_fit(2, 8, data=data, wh="wh")
-    assert abs(fit["work_sec_per_sf_mean"]["extract_mentions"] - 8.0) < 1e-6
-    f1 = fit["per_sf"]["sf1"]["link_and_triples"]["f_sec"]
-    f3 = fit["per_sf"]["sf3"]["link_and_triples"]["f_sec"]
-    assert abs(f1 - f3) < 1e-6
-
-
-def test_stagewise_summary_requires_all_clean(tmp_path, monkeypatch):
-    import json
-    wh = "wh"
-    monkeypatch.setattr(bench, "workload_hash", lambda: wh)
-    data = {f"{wh}|sf1|c2": _entry([10.0, 10.0, 2.0]),
-            f"{wh}|sf1|c8": _entry([3.0, 3.0, 1.0], cal=5.0)}
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    bpath = tmp_path / "BENCH" / "best_stages.json"
-    bpath.write_text(json.dumps(data))
-    s = bench.stagewise_clean_summary(2, 8, 1.0)
-    assert s is not None and s["all_clean"] is False
-    # clean both levels -> composite efficiency = (22/4)/(7) = wall ratio /4
-    data[f"{wh}|sf1|c8"] = _entry([3.0, 3.0, 1.0], cal=1.1)
-    bpath.write_text(json.dumps(data))
-    s = bench.stagewise_clean_summary(2, 8, 1.0)
-    assert s["all_clean"] is True
-    assert abs(s["efficiency"] - (22.0 / 7.0) / 4.0) < 1e-3
-
-
-def test_efficiency_best_evidence_tiers():
-    # Tier 1: a clean direct pair (brackets AND in-run watcher) wins
-    # outright; a pair without in-run readings is NOT tier-1.
-    clean_pair = {"cal_lo_best": 1.1, "cal_hi_best": 1.3,
-                  "cal_inrun_lo": 1.4, "cal_inrun_hi": 2.1,
-                  "cores_lo": 2, "cores_hi": 8,
-                  "efficiency": 0.82, "corpus_sf": 3.0}
-    ev = bench.efficiency_best_evidence(clean_pair, {}, {}, 3.0)
-    assert ev["tier"] == "direct_clean_pair" and ev["efficiency"] == 0.82
-    no_inrun = {k: v for k, v in clean_pair.items()
-                if not k.startswith("cal_inrun")}
-    assert bench.efficiency_best_evidence(
-        no_inrun, {}, {}, 3.0)["tier"] != "direct_clean_pair"
-    # Tier 2: noisy direct pair falls back to the LARGEST all-clean
-    # stagewise corpus (larger corpus = less fixed-cost dilution).
-    noisy = {"cal_lo_best": 21.4, "cal_hi_best": 68.4, "efficiency": 0.35}
-    sw = {"sf1": {"all_clean": True, "efficiency": 0.62,
-                  "wall_lo_sec": 23.0, "wall_hi_sec": 9.3},
-          "sf3": {"all_clean": True, "efficiency": 0.81,
-                  "wall_lo_sec": 60.0, "wall_hi_sec": 18.5},
-          "sf2": {"all_clean": False}}
-    ev = bench.efficiency_best_evidence(noisy, sw, {}, 3.0)
-    assert ev["tier"] == "stagewise_clean_pair"
-    assert ev["corpus_sf"] == 3.0 and ev["efficiency"] == 0.81
-    assert ev["all_corpus_sizes"] == {"sf1": 0.62, "sf3": 0.81}
-    # Tier 3: no clean pair anywhere -> Amdahl model at the bench sf.
-    am = {"model_efficiency_by_sf": {"sf1": 0.62, "sf3": 0.81}}
-    ev = bench.efficiency_best_evidence(noisy, {}, am, 3.0)
-    assert ev["tier"] == "amdahl_model" and ev["efficiency"] == 0.81
-    # Nothing at all -> explicit none, never a fabricated number.
-    # (isolate from the repo's real best_pair.json: the prior-code
-    # fallback tier is tested separately)
-    import unittest.mock as _mock
-    with _mock.patch.object(bench, "_prior_hash_clean_pair",
-                            lambda: None):
-        ev = bench.efficiency_best_evidence(noisy, {}, {}, 3.0)
-    assert ev["tier"] == "none" and ev["efficiency"] is None
-
-
-def test_prior_hash_clean_pair_fallback(tmp_path, monkeypatch):
-    import json
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(bench, "workload_hash", lambda: "new_hash")
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    prior = {"workload_hash": "old_hash", "efficiency": 0.55,
-             "corpus_sf": 3.0, "cal_lo_best": 1.3, "cal_hi_best": 1.2,
-             "cores_lo": 2, "cores_hi": 8,
-             "cal_inrun_lo": 1.8, "cal_inrun_hi": 2.1}
-    (tmp_path / "BENCH" / "best_pair.json").write_text(json.dumps(prior))
-    # no current-hash evidence at all -> prior-code pair is reported,
-    # explicitly labeled
-    ev = bench.efficiency_best_evidence({"cal_lo_best": 99}, {}, {}, 3.0)
-    assert ev["tier"] == "prior_code_clean_pair"
-    assert ev["efficiency"] == 0.55
-    assert ev["workload_hash"] == "old_hash"
-    # a prior pair WITHOUT in-run readings (pre-watcher) is dirty by
-    # definition — brackets alone cannot certify a multi-minute run
-    pre_watcher = {k: v for k, v in prior.items()
-                   if not k.startswith("cal_inrun")}
-    (tmp_path / "BENCH" / "best_pair.json").write_text(
-        json.dumps(pre_watcher))
-    ev = bench.efficiency_best_evidence({"cal_lo_best": 99}, {}, {}, 3.0)
-    assert ev["tier"] == "none"
-    (tmp_path / "BENCH" / "best_pair.json").write_text(json.dumps(prior))
-    # a dirty prior pair is never reported
-    prior["cal_hi_best"] = 9.0
-    (tmp_path / "BENCH" / "best_pair.json").write_text(json.dumps(prior))
-    ev = bench.efficiency_best_evidence({"cal_lo_best": 99}, {}, {}, 3.0)
-    assert ev["tier"] == "none"
-    # a current-hash stored pair is tier-1 territory, not this tier
-    prior["cal_hi_best"] = 1.2
-    prior["workload_hash"] = "new_hash"
-    (tmp_path / "BENCH" / "best_pair.json").write_text(json.dumps(prior))
-    assert bench._prior_hash_clean_pair() is None
-
-
-def test_fullrun_clean_requires_inrun_sample():
-    # entries without an in-run probe reading are dirty by definition —
-    # a multi-minute run can hide a whole storm between quiet brackets
-    assert not bench._fullrun_clean({"cal": 1.2}, 2)
-    assert not bench._fullrun_clean(None, 2)
-    assert bench._fullrun_clean({"cal": 1.2, "cal_inrun": 2.0}, 2)
-    # the in-run gate is looser at high core counts (self-load) but a
-    # storm-grade reading is dirty everywhere
-    assert not bench._fullrun_clean({"cal": 1.2, "cal_inrun": 5.0}, 8)
-    assert bench._fullrun_clean({"cal": 1.2, "cal_inrun": 5.0}, 32)
-    assert not bench._fullrun_clean({"cal": 1.2, "cal_inrun": 16.5}, 32)
-    # dirty brackets dirty the run regardless of in-run
-    assert not bench._fullrun_clean({"cal": 9.0, "cal_inrun": 1.0}, 2)
-
-
-def test_merge_best_fullrun_gates_pair_on_inrun(tmp_path, monkeypatch):
-    import json
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(bench, "workload_hash", lambda: "wh")
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    # clean c8 + bracket-clean-but-storm-hit c2 -> NO pair synthesized
-    bench._merge_best_fullrun(8, 3.0, 18.0, 1.2, 1000, cal_inrun=2.5)
-    bench._merge_best_fullrun(2, 3.0, 415.0, 1.49, 1000, cal_inrun=22.0)
-    assert not (tmp_path / "BENCH" / "best_pair.json").exists()
-    # a genuinely clean c2 replaces the storm-hit entry and the pair lands
-    bench._merge_best_fullrun(2, 3.0, 65.0, 1.2, 1000, cal_inrun=1.8)
-    pair = json.loads((tmp_path / "BENCH" / "best_pair.json").read_text())
-    assert pair["wall_lo_sec"] == 65.0 and pair["wall_hi_sec"] == 18.0
-    assert abs(pair["efficiency"] - (65.0 / 18.0) / 4) < 1e-3
-
-
-def test_merge_best_pair_small_corpus_never_displaces_big(tmp_path,
-                                                          monkeypatch):
-    import json
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(bench, "workload_hash", lambda: "wh")
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    big = {"workload_hash": "wh", "corpus_sf": 3.0, "cores_lo": 2,
-           "cores_hi": 8, "wall_lo_sec": 64.0, "wall_hi_sec": 16.0,
-           "cal_lo_best": 1.2, "cal_hi_best": 1.2,
-           "cal_inrun_lo": 1.3, "cal_inrun_hi": 1.4, "efficiency": 1.0}
-    (tmp_path / "BENCH" / "best_pair.json").write_text(json.dumps(big))
-    # a CLEAN pair at a smaller corpus (overhead-dominated smoke run)
-    # must neither be stored nor returned over the big-corpus pair
-    tiny = {**big, "corpus_sf": 0.001, "wall_lo_sec": 5.0,
-            "wall_hi_sec": 3.0, "cal_lo_best": 1.05, "cal_hi_best": 1.05,
-            "cal_inrun_lo": 1.1, "cal_inrun_hi": 1.1, "efficiency": 0.42}
-    best = bench._merge_best_pair(tiny)
-    stored = json.loads(
-        (tmp_path / "BENCH" / "best_pair.json").read_text())
-    assert best["corpus_sf"] == 3.0 and stored["corpus_sf"] == 3.0
-    # a clean pair at a LARGER corpus does replace
-    bigger = {**big, "corpus_sf": 6.0, "wall_lo_sec": 130.0,
-              "wall_hi_sec": 33.0, "efficiency": 0.98}
-    best = bench._merge_best_pair(bigger)
-    stored = json.loads(
-        (tmp_path / "BENCH" / "best_pair.json").read_text())
-    assert best["corpus_sf"] == 6.0 and stored["corpus_sf"] == 6.0
-    # same corpus: cleanliness-then-speed quality ordering still applies
-    same_worse = {**bigger, "wall_hi_sec": 40.0, "cal_hi_best": 1.9}
-    best = bench._merge_best_pair(same_worse)
-    assert best["wall_hi_sec"] == 33.0
-
-
-def test_merge_best_headline_small_corpus_never_displaces_big(
-        tmp_path, monkeypatch):
-    import json
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(bench, "workload_hash", lambda: "wh")
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    big = {"workload_hash": "wh", "corpus_sf": 3.0, "cpus": 32,
-           "wall_sec": 18.8, "cal": 1.28, "triples_per_sec": 477000.0}
-    (tmp_path / "BENCH" / "best_headline.json").write_text(json.dumps(big))
-    tiny = {**big, "corpus_sf": 0.001, "wall_sec": 2.0, "cal": 1.01,
-            "triples_per_sec": 999.0}
-    best = bench._merge_best_headline(tiny)
-    stored = json.loads(
-        (tmp_path / "BENCH" / "best_headline.json").read_text())
-    assert best["corpus_sf"] == 3.0 and stored["corpus_sf"] == 3.0
-
-
 def test_compact_bench_line_fits_driver_buffer():
-    import json
-    # realistic full report, padded with oversized diagnostics
     big = {"metric": "kg_pipeline_wall", "value": 24.6, "unit": "sec",
            "queries": {f"q{i}": 1.0 + i for i in range(12)},
            "sf": 0.1, "bench_corpus_sf": 3.0, "n_triples": 8992326,
-           "cpus": 32, "triples_per_sec": 365408.0,
-           "efficiency_best_evidence": {"tier": "direct_clean_pair",
-                                        "efficiency": 0.997},
-           "headline_best_known": {"wall_sec": 18.85, "cal": 1.28,
-                                   "triples_per_sec": 477046.5,
-                                   "corpus_sf": 3.0,
-                                   "workload_hash": "x" * 12,
-                                   "stage_mins": {"a": 1.0} },
-           "scaling": {"measured_at": "t", "corpus_sf": 3.0,
-                       "cores_lo": 2, "cores_hi": 8,
-                       "wall_lo_sec": 64.1, "wall_hi_sec": 16.1,
-                       "cal_inrun_lo": 1.3, "cal_inrun_hi": 1.45,
-                       "efficiency": 0.997, "workload_hash": "x" * 12,
-                       "stage_mins_lo": {"a": 1.0}},
-           "scaling_this_run": {"corpus_sf": 3.0, "wall_lo_sec": 91.6,
-                                "wall_hi_sec": 83.4, "efficiency": 0.275,
-                                "runs_lo": list(range(50)),
-                                "cal_lo": list(range(50))},
-           "amdahl": {"huge": ["pad"] * 500},
-           "scaling_stagewise_clean": {"pad": "y" * 3000}}
-    js = bench.compact_bench_line(big)
+           "cpus": 4, "triples_per_sec": 365408.0,
+           "scaling": {"cores_lo": 2, "cores_hi": 8, "wall_lo_sec": 64.1,
+                       "wall_hi_sec": 16.1, "tput_lo": 140285.9,
+                       "tput_hi": 558529.6, "efficiency": 0.995,
+                       "cal_inrun_max_s_lo": 0.41,
+                       "cal_inrun_max_s_hi": 0.52},
+           "levels": {"pad": "y" * 3000}}
+    parsed = json.loads(bench.compact_bench_line(big))
+    assert set(parsed) == set(bench.FINAL_KEYS)
+    assert parsed["scaling"] == big["scaling"]
+    assert parsed["queries"] == big["queries"]
+    # per-query names that outgrow the cap degrade the line, never break it
+    wide = dict(big, queries={f"q{i}" * 40: float(i) for i in range(40)})
+    js = bench.compact_bench_line(wide)
     assert len(js) <= 1800
-    parsed = json.loads(js)
-    # contract fields always survive
-    for k in ("metric", "value", "unit", "queries", "sf"):
-        assert k in parsed
-    # huge diagnostics never leak into the final line
-    assert "amdahl" not in parsed and "scaling_stagewise_clean" not in parsed
-    assert "runs_lo" not in parsed.get("scaling_this_run", {})
+    assert json.loads(js)["metric"] == "kg_pipeline_wall"
     # pathological cap still yields valid JSON with the scalar contract
     tiny = json.loads(bench.compact_bench_line(big, cap=300))
     assert tiny["metric"] == "kg_pipeline_wall" and "value" in tiny
 
 
-def test_camp_best_to_result_shape():
-    """r4: the driver pair now measures via this-run camps; the sample
-    must reshape into exactly the stage_run result contract main()
-    assembles pair_now from."""
-    import bench
-    s = {"walls": {"extract_mentions": 5.0, "link_and_triples": 7.0,
-                   "nodes_edges": 2.0},
-         "total": 14.0, "bracket": 1.2, "inrun": 1.9,
-         "n_triples": 123456,
-         "stage_mins": {"extract_mentions": 4.8,
-                        "link_and_triples": 6.9, "nodes_edges": 2.0},
-         "all_totals": [15.0, 14.0], "all_brackets": [2.0, 1.2],
-         "all_inruns": [3.0, 1.9]}
-    r = bench.camp_best_to_result(s)
-    assert r["pipeline_total"] == 14.0
-    assert r["extract_mentions"] == 5.0
-    assert r["n_triples"] == 123456
-    assert r["cal_ratio"] == 1.2 and r["cal_inrun"] == 1.9
-    assert r["stagemin_total"] == 13.7
-    assert r["all_runs"] == [15.0, 14.0]
-    # the fields the pair-assembly and query-report loops read must all
-    # be present (pair_now + queries construction in bench.main)
-    for k in ("cal_ratios", "cal_inruns", "stage_mins"):
-        assert k in r
+def test_run_pipeline_matches_build_kg(spark, sf_dir_smoke):
+    """bench keeps its own (persisted, overlapped) composition of the
+    flagship build; pin its triple count to the engine's definition."""
+    from memex_kg_spark import pipeline
 
-
-def test_measure_lock_excludes_camp_fire(tmp_path, monkeypatch):
-    """stage_run/stage_gen hold the camps' advisory fire-lock: while a
-    measurement owns it, a camp's non-blocking acquire (its poll/fire
-    path) must fail, so no camp can fire into a driver headline run."""
-    import fcntl
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    held = bench._acquire_measure_lock()
-    other = open(tmp_path / "BENCH" / ".camp.lock", "w")
-    import pytest
-    with pytest.raises(OSError):
-        fcntl.flock(other, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    held.close()  # released on close: the camp's acquire now succeeds
-    fcntl.flock(other, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    fcntl.flock(other, fcntl.LOCK_UN)
-    other.close()
-
-
-def test_merge_best_pair_prefers_fast_hi_among_clean(tmp_path,
-                                                     monkeypatch):
-    """Among gate-clean pairs the ordering matches _merge_best_fullrun:
-    lowest hi-level wall wins (noise only inflates walls), not lowest
-    cal — a 1.6-cal 15.6 s c8 sample beats a 1.45-cal 16.1 s one."""
-    import json
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(bench, "workload_hash", lambda: "wh")
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    slower_cleaner = {
-        "workload_hash": "wh", "corpus_sf": 3.0, "cores_lo": 2,
-        "cores_hi": 8, "wall_lo_sec": 57.6, "wall_hi_sec": 16.13,
-        "cal_lo_best": 1.53, "cal_hi_best": 1.45,
-        "cal_inrun_lo": 1.86, "cal_inrun_hi": 1.99, "efficiency": 0.892}
-    (tmp_path / "BENCH" / "best_pair.json").write_text(
-        json.dumps(slower_cleaner))
-    faster = {**slower_cleaner, "wall_hi_sec": 15.61,
-              "cal_hi_best": 1.6, "cal_inrun_hi": 2.13,
-              "efficiency": 0.922}
-    best = bench._merge_best_pair(faster)
-    assert best["wall_hi_sec"] == 15.61
-    # but a DIRTY faster pair must never displace a clean one
-    dirty = {**faster, "wall_hi_sec": 12.0, "cal_inrun_hi": 9.0}
-    best = bench._merge_best_pair(dirty)
-    assert best["wall_hi_sec"] == 15.61
-
-
-def test_storm_insensitive_pairs_bound():
-    """r5: the uncertified consistency tier. A clean c8 + a c2 whose
-    dirty shots cluster at the min yields an efficiency_bound; a level
-    with <3 dirty shots bounds nothing; a fully clean pair is excluded
-    (the certified tier already covers it)."""
-    data = {
-        # sf6: c8 clean, c2 dirty but 9 shots clustered near the min
-        "wh|sf6|c8": {"wall": 32.768, "cal": 2.23, "cal_inrun": 2.75,
-                      "walls_seen": [32.768, 33.0, 34.1]},
-        "wh|sf6|c2": {"wall": 115.482, "cal": 5.6, "cal_inrun": 6.36,
-                      "walls_seen": [115.482, 127.267, 124.345,
-                                     116.271, 122.524, 140.469]},
-        # sf3: both clean -> excluded
-        "wh|sf3|c8": {"wall": 15.607, "cal": 1.45, "cal_inrun": 2.13},
-        "wh|sf3|c2": {"wall": 57.566, "cal": 1.49, "cal_inrun": 1.86},
-        # sf1: c2 has only 2 dirty shots -> no bound
-        "wh|sf1|c8": {"wall": 8.0, "cal": 1.2, "cal_inrun": 1.5},
-        "wh|sf1|c2": {"wall": 30.0, "cal": 9.0, "cal_inrun": 9.0,
-                      "walls_seen": [30.0]},
-    }
-    out = bench.storm_insensitive_pairs(data=data, wh="wh")
-    assert set(out) == {"sf6"}
-    si = out["sf6"]
-    assert si["certified"] is False
-    assert si["efficiency_bound"] == round((115.482 / 32.768) / 4, 3)
-    assert si["lo_c2"]["label"] == "storm_insensitive_min"
-    assert si["lo_c2"]["within_2pct"] == 2  # 115.482, 116.271
-    assert si["hi_c8"]["label"] == "clean"
+    out = bench.run_pipeline(spark, sf_dir_smoke)
+    assert set(bench.STAGES) | {"n_triples", "pipeline_total"} <= set(out)
+    assert all(out[k] >= 0 for k in bench.STAGES)
+    want = pipeline.build_kg(spark, sf_dir_smoke)["triples"].count()
+    assert want > 0 and out["n_triples"] == want

@@ -175,3 +175,41 @@ def test_canonical_map_follows_rewritten_dimension(spark, tmp_path):
                    ["Q6"]])
     assert after == {q: "Q1" for q in ("Q1", "Q2", "Q3", "Q4", "Q5")} | {
         "Q6": "Q6"}
+
+
+def test_alias_winners_follow_rewritten_dimension(spark, tmp_path):
+    """Winners are memoized per dimension through ``memo.dim_memo``: a
+    dimension rewritten in place with a different prior order gets the
+    new winner in the same session."""
+    from memex_kg_spark.operators.linking import alias_winners
+
+    path = str(tmp_path / "alias_dim.parquet")
+
+    def write(priors):
+        pd.DataFrame(
+            [("paris", q, q.lower(), "place", p) for q, p in priors.items()],
+            columns=["norm_alias", "qid", "label", "node_type", "prior"],
+        ).to_parquet(path, index=False)
+        return {r["norm_alias"]: r["qid"]
+                for r in alias_winners(spark.read.parquet(path)).collect()}
+
+    assert write({"Q1": 0.9, "Q2": 0.1}) == {"paris": "Q1"}
+    assert write({"Q1": 0.1, "Q2": 0.9}) == {"paris": "Q2"}
+
+
+def test_kg_nodes_twostar_is_memoized(spark, testdata_sf001):
+    """``q_kg_nodes`` builds its twostar component frame once per alias
+    dimension: a second call in the same session starts no Spark job."""
+    from memex_kg_spark.queries.kg import q_kg_nodes
+
+    first = q_kg_nodes(spark, testdata_sf001)
+    sc = spark.sparkContext
+    sc.setJobGroup("kg-nodes-again", "second q_kg_nodes call")
+    try:
+        second = q_kg_nodes(spark, testdata_sf001)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("kg-nodes-again") == []
+    assert (second.select("qid", "canonical_id_twostar")
+            .exceptAll(first.select("qid", "canonical_id_twostar"))
+            .count() == 0)
