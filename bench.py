@@ -41,31 +41,26 @@ def noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_pipeline(spark, synth_path: str,
-                 known_n_triples: int | None = None) -> dict:
+def run_pipeline(spark, synth_path: str) -> dict:
     """Run the flagship KG build end-to-end; per-stage wall seconds.
 
-    Single-pass plan, as production would run it: the extraction scan
-    (mapInPandas over transcripts) executes ONCE and is persisted at the
-    fan-out — statements feed the mentions/linking outputs AND the triple
-    builder; triples are persisted at their fan-out (nodes AND edges).
-    Every extra pass over the fact table is a fixed cost a cluster-scale
-    job would not pay, and it poisons the N->4N efficiency measurement."""
-    from memex_kg_spark import pipeline
-    from memex_kg_spark.operators.canonicalize import build_edges, build_nodes
-    from memex_kg_spark.operators.extraction import (
-        extract_statements, statements_to_mentions)
-    from memex_kg_spark.operators.linking import link_mentions
-
-    d = pipeline.load_synth(spark, synth_path)
-    out: dict = {}
-
+    Single-pass plan, as production would run it: ``pipeline.build_kg``
+    with every fan-out persisted, so the extraction scan (mapInPandas
+    over transcripts) executes ONCE — statements feed the mentions/linking
+    outputs AND the triple builder; triples feed nodes AND edges. Every
+    extra pass over the fact table is a fixed cost a cluster-scale job
+    would not pay, and it poisons the N->4N efficiency measurement.
+    ``persist`` is lazy: the three timed sink groups below run the jobs."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import Observation, functions as F
+
+    from memex_kg_spark import pipeline
+
+    out: dict = {}
     t0 = time.time()
-    statements = extract_statements(d["transcripts"]).persist()
-    mentions = statements_to_mentions(statements, d["alias_dim"]).persist()
-    noop_write(mentions)  # one chain: materializes statements AND mentions
+    kg = pipeline.build_kg(spark, synth_path, keep=lambda df: df.persist())
+    noop_write(kg["mentions"])  # one chain: statements AND mentions
     out["extract_mentions"] = round(time.time() - t0, 3)
 
     # linked-mentions write overlaps the (heavier) triple build: both read
@@ -73,36 +68,21 @@ def run_pipeline(spark, synth_path: str,
     # gaps (AQE re-plan, broadcast build) of one job with tasks of the
     # other — exactly what a production driver submitting independent
     # table writes does. Fixed driver-side latency otherwise serializes
-    # and caps N->4N efficiency.
+    # and caps N->4N efficiency. The triple count rides the triples write.
     t0 = time.time()
-    triples = pipeline.triples_from_statements(
-        statements, d["alias_dim"], d["pred_dim"]).persist()
+    n_obs = Observation("n_triples")
+    triples = kg["triples"].observe(n_obs, F.count(F.lit(1)).alias("n"))
     with ThreadPoolExecutor(2) as ex:
-        f_link = ex.submit(
-            noop_write, link_mentions(mentions, d["alias_dim"]))
-        f_tri = ex.submit(noop_write, triples)
-        f_link.result()
-        f_tri.result()
-    # row count is a constant of the corpus: computed once per JVM (cheap
-    # cached-count), reused by repeat runs so it's not billed per run
-    n_triples = (known_n_triples if known_n_triples is not None
-                 else triples.count())
+        list(ex.map(noop_write, (kg["linked_mentions"], triples)))
     out["link_and_triples"] = round(time.time() - t0, 3)
-    out["n_triples"] = n_triples
+    out["n_triples"] = n_obs.get["n"]
 
     t0 = time.time()
-    nodes = build_nodes(triples, d["alias_dim"]).persist()
-    edges = build_edges(triples, nodes, d["pred_dim"])
     with ThreadPoolExecutor(2) as ex:  # independent sinks, overlapped
-        f_n = ex.submit(noop_write, nodes)
-        f_e = ex.submit(noop_write, edges)
-        f_n.result()
-        f_e.result()
+        list(ex.map(noop_write, (kg["nodes"], kg["edges"])))
     out["nodes_edges"] = round(time.time() - t0, 3)
-    statements.unpersist()
-    mentions.unpersist()
-    triples.unpersist()
-    nodes.unpersist()
+    for k in ("statements", "mentions", "triples", "nodes"):
+        kg[k].unpersist()
 
     out["pipeline_total"] = round(sum(out[k] for k in STAGES), 3)
     return out
@@ -169,13 +149,13 @@ def _calibrate() -> float:
     return time.perf_counter() - t0
 
 
-def stage_run(cores: int, synth_path: str, sf_dir: str, with_aux: bool,
-              repeat: int = 3, budget_s: float = 600.0) -> None:
-    """One JVM per cluster size; the reported figure is the MIN over
-    ``repeat`` in-JVM runs. Run 0 doubles as warm-up (JVM JIT,
-    Python-worker spawn, broadcast builds — fixed costs a long-running
-    100 TB job amortizes away). Min, not mean: host noise inflates —
-    never deflates — wall time.
+def stage_run(cores: int, synth_path: str, sf_dir: str,
+              with_aux: bool) -> None:
+    """One JVM per cluster size; the reported figure is the MIN over 3
+    in-JVM runs (fewer once 600 s have passed). Run 0 doubles as warm-up
+    (JVM JIT, Python-worker spawn, broadcast builds — fixed costs a
+    long-running 100 TB job amortizes away). Min, not mean: host noise
+    inflates — never deflates — wall time.
 
     The ``_calibrate`` probe is recorded, never acted on: ``cal_s`` holds
     the probe seconds read just before each run, ``cal_inrun_max_s`` the
@@ -191,10 +171,9 @@ def stage_run(cores: int, synth_path: str, sf_dir: str, with_aux: bool,
     spark.sparkContext.setLogLevel("ERROR")
     best: dict = {}
     totals, cals, inrun = [], [], []
-    n_known = None
-    for _ in range(repeat):
-        if best and time.time() - t_start > budget_s:
-            break  # wall budget: keep the bench bounded on a noisy host
+    for _ in range(3):
+        if best and time.time() - t_start > 600:
+            break  # keep the bench bounded on a noisy host
         cals.append(round(_calibrate(), 4))
         stop = threading.Event()
 
@@ -204,10 +183,9 @@ def stage_run(cores: int, synth_path: str, sf_dir: str, with_aux: bool,
 
         watcher = threading.Thread(target=watch, daemon=True)
         watcher.start()
-        stages = run_pipeline(spark, synth_path, known_n_triples=n_known)
+        stages = run_pipeline(spark, synth_path)
         stop.set()
         watcher.join()
-        n_known = stages["n_triples"]
         totals.append(stages["pipeline_total"])
         if not best or stages["pipeline_total"] < best["pipeline_total"]:
             best = stages
@@ -329,13 +307,10 @@ if __name__ == "__main__":
         ap.add_argument("--synth", default="")
         ap.add_argument("--sf-dir", default="")
         ap.add_argument("--aux", action="store_true")
-        ap.add_argument("--budget", type=float, default=600.0)
-        ap.add_argument("--repeat", type=int, default=3)
         a = ap.parse_args()
         if a.stage == "gen":
             stage_gen(a.sf, a.cores)
         else:
-            stage_run(a.cores, a.synth, a.sf_dir, a.aux,
-                      repeat=a.repeat, budget_s=a.budget)
+            stage_run(a.cores, a.synth, a.sf_dir, a.aux)
     else:
         main()

@@ -24,12 +24,3 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column,
          + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2))
          * F.pow(F.sin(dlon), 2))
     return 2 * F.lit(EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
-
-
-def lat_lon_cell(lat: Column, lon: Column, cell_deg: float) -> Column:
-    """Integer grid cell key for bucketed spatial joins (J3): equi-join on
-    neighboring cells replaces the O(n^2) cross join of the reference's
-    link_neighboring_places (db/db_connection.py:59-72)."""
-    return F.struct(
-        F.floor(lat / cell_deg).cast("int").alias("cy"),
-        F.floor(lon / cell_deg).cast("int").alias("cx"))

@@ -88,13 +88,6 @@ def _union_find(pairs, spark,
                     StructField("component", id_type)]))
 
 
-def connected_components_driver(edges: DataFrame, src: str = "src",
-                                dst: str = "dst") -> DataFrame:
-    """Union-find on the driver for dimension-sized graphs."""
-    return _union_find(edges.select(src, dst).collect(),
-                       edges.sparkSession, edges.schema[src].dataType)
-
-
 def connected_components_twostar(edges: DataFrame, src: str = "src",
                                  dst: str = "dst",
                                  max_iter: int = 30) -> DataFrame:

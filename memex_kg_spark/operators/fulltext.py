@@ -26,34 +26,26 @@ def term_postings(docs: DataFrame, text_col: str = "text",
     return toks.groupBy("term", id_col).agg(F.count("*").alias("tf"))
 
 
-_MEMO_ATTR = "_kg_fulltext_index_memo"
-
-
 def build_fulltext_index(docs: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id") -> dict:
     """Materialize the inverted index ONCE: postings + per-term df +
     corpus size, localCheckpoint-ed (the in-process stand-in for the
     term-partitioned postings table a 100 TB deployment would persist).
-    Memoized per plan on the SparkSession itself (the operators/memo.py
-    pattern) so the cache dies with its session instead of accumulating
-    in a process-global keyed by id(session) — the r02 verdict nit."""
-    session = docs.sparkSession
-    memo = getattr(session, _MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(session, _MEMO_ATTR, memo)
-    key = (docs.semanticHash(), text_col, id_col)
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    postings = term_postings(docs, text_col, id_col).localCheckpoint()
-    df_counts = (postings.groupBy("term")
-                 .agg(F.countDistinct(id_col).alias("df"))
-                 .localCheckpoint())
-    idx = {"postings": postings, "df": df_counts,
-           "n_docs": docs.count(), "id_col": id_col}
-    memo[key] = idx
-    return idx
+    Memoized on the SparkSession by ``memo.dim_memo``, keyed on the plan
+    AND the source files, so a documents table rewritten in place gets a
+    fresh index."""
+    from .memo import df_key, dim_memo
+
+    def _build():
+        postings = term_postings(docs, text_col, id_col).localCheckpoint()
+        df_counts = (postings.groupBy("term")
+                     .agg(F.countDistinct(id_col).alias("df"))
+                     .localCheckpoint())
+        return {"postings": postings, "df": df_counts,
+                "n_docs": docs.count(), "id_col": id_col}
+
+    return dim_memo(docs.sparkSession, "_kg_fulltext_index_memo",
+                    (df_key(docs), text_col, id_col), _build)
 
 
 def fulltext_topk(docs: DataFrame, query_terms: list[str], k: int = 10,

@@ -81,16 +81,3 @@ def link_mentions(mentions: DataFrame, alias_dim: DataFrame) -> DataFrame:
         "start", "end", "qid", "label", "node_type",
         F.col("score").alias("link_score"),
     )
-
-
-def candidate_set(mentions: DataFrame, alias_dim: DataFrame) -> DataFrame:
-    """All (mention, candidate) pairs with scores — the pre-winner view
-    (useful for recall analysis; reference returned ALL wids per label,
-    db/db_connection.py:217-219 'if more than one we take all of them')."""
-    scored = alias_dim.withColumn(
-        "cand_score",
-        score_candidates(F.col("norm_alias"), F.col("norm_alias"),
-                         F.col("prior")))
-    return mentions.join(
-        F.broadcast(scored.withColumnRenamed("norm_alias", "norm_surface")),
-        "norm_surface", "inner")

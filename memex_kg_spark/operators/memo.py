@@ -1,13 +1,16 @@
-"""Session-scoped dimension memoization.
+"""Session-scoped memoization: the package's one memo helper.
 
-Dimension-side computations (alias winners, canonical map, claim
-expansion, entity attributes) are tiny but each build is a fixed
+Dimension-side computations are tiny but each build is a fixed
 driver-side cost — a shuffle + localCheckpoint + broadcast build — paid
 per pipeline run. A long-running cluster job computes them once; paying
 them 4-5x per run flattens the N->4N scaling curve (fixed cost C in
-T = W/N + C dominates as N grows). Memo key = (semanticHash, source file
-identity), so a regenerated input under an identical plan invalidates
-the entry."""
+T = W/N + C dominates as N grows). Users: ``alias_winners``,
+``canonical_map``, ``entity_dim``, the mention alias gate, the claim
+dimension and ``q_kg_nodes``' twostar frame, keyed on ``df_key`` of the
+alias dimension; ``build_fulltext_index``, on ``df_key`` of the
+documents; ``queries.kg.kg_artifacts``, on the corpus files' (mtime,
+size). ``df_key`` = (semanticHash, source file identity), so an input
+rewritten in place under an identical plan invalidates the entry."""
 
 from __future__ import annotations
 
@@ -27,13 +30,16 @@ def df_key(df: DataFrame) -> tuple:
     return (df.semanticHash(), files)
 
 
-def dim_memo(session, attr: str, key, build) -> DataFrame:
-    """Return the memoized localCheckpoint of ``build()`` for ``key``,
-    stored on the SparkSession under ``attr``."""
+def dim_memo(session, attr: str, key, build):
+    """Return the memoized ``build()`` for ``key``, stored on the
+    SparkSession under ``attr``. A DataFrame is stored localCheckpointed;
+    any other result (e.g. a dict of already-materialized frames) as is."""
     memo = getattr(session, attr, None)
     if memo is None:
         memo = {}
         setattr(session, attr, memo)
     if key not in memo:
-        memo[key] = build().localCheckpoint()
+        out = build()
+        memo[key] = (out.localCheckpoint() if isinstance(out, DataFrame)
+                     else out)
     return memo[key]

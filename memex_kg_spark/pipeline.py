@@ -7,15 +7,18 @@ transcripts --window sort--> statements (mapInPandas, Arrow batches)
             --distinct ids + broadcast dims + hash-min CC--> nodes
             --endpoint gating + dedup--> edges
 
-Shuffle inventory at scale (the whole point of the design):
-1. the extraction stage is narrow (no shuffle);
-2. entity linking is broadcast-only (fact side never moves);
-3. the ONLY fact-sized shuffles are the final per-turn triple dedup and
-   the distinct node-id set — both key on high-cardinality composites, so
-   AQE + salting keep reducers balanced even with Zipf-hot entities.
+Shuffles each layer adds over its kept inputs (pinned by
+``tests/test_plans.py::test_shuffles_per_layer``): statements 0 (narrow
+extraction), mentions 1 (mention_id window), linked mentions 0
+(broadcast-only linking), triples 2 (claim-side distinct, per-turn
+dedup), nodes 1 (distinct ids), edges 2 (edge dedup, locale distinct).
+Every fact-sized key is a high-cardinality composite, so AQE + salting
+keep reducers balanced even with Zipf-hot entities.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -25,14 +28,12 @@ from .operators.extraction import extract_statements, statements_to_mentions
 from .operators.linking import alias_winners, link_mentions
 
 QID_PATTERN = "^Q[0-9]+$"  # reference Q-id predicate, recursive_hops:187,192
+CORPUS_TABLES = ("transcripts", "alias_dim", "pred_dim")
 
 
 def load_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        "transcripts": spark.read.parquet(f"{sf_dir}/transcripts.parquet"),
-        "alias_dim": spark.read.parquet(f"{sf_dir}/alias_dim.parquet"),
-        "pred_dim": spark.read.parquet(f"{sf_dir}/pred_dim.parquet"),
-    }
+    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
+            for t in CORPUS_TABLES}
 
 
 def stable_turns(transcripts: DataFrame) -> DataFrame:
@@ -126,16 +127,21 @@ def extract_triples(transcripts: DataFrame, alias_dim: DataFrame,
         extract_statements(transcripts), alias_dim, pred_dim)
 
 
-def build_kg(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The flagship: transcripts -> mentions, triples, nodes, edges."""
+def build_kg(spark: SparkSession, sf_dir: str,
+             keep: Callable[[DataFrame], DataFrame] = lambda df: df,
+             ) -> dict[str, DataFrame]:
+    """The flagship, the package's one composition of its layers.
+    ``keep`` (identity, persist or localCheckpoint) is applied at the four
+    fan-outs: statements, mentions, triples and nodes. Pass a lambda
+    (``lambda df: df.persist()``), not ``DataFrame.persist``: PySpark 4's
+    base-class methods are stubs returning None."""
     d = load_synth(spark, sf_dir)
-    statements = extract_statements(d["transcripts"])
-    mentions = statements_to_mentions(statements, d["alias_dim"])
-    linked = link_mentions(mentions, d["alias_dim"])
-    triples = triples_from_statements(statements, d["alias_dim"],
-                                      d["pred_dim"])
-    nodes = build_nodes(triples, d["alias_dim"])
-    edges = build_edges(triples, nodes, d["pred_dim"])
-    return {"statements": statements, "mentions": mentions,
-            "linked_mentions": linked, "triples": triples,
-            "nodes": nodes, "edges": edges}
+    statements = keep(extract_statements(d["transcripts"]))
+    mentions = keep(statements_to_mentions(statements, d["alias_dim"]))
+    triples = keep(triples_from_statements(statements, d["alias_dim"],
+                                           d["pred_dim"]))
+    nodes = keep(build_nodes(triples, d["alias_dim"]))
+    return {**d, "statements": statements, "mentions": mentions,
+            "linked_mentions": link_mentions(mentions, d["alias_dim"]),
+            "triples": triples, "nodes": nodes,
+            "edges": build_edges(triples, nodes, d["pred_dim"])}

@@ -22,7 +22,6 @@ from ..synth.generator import ensure_synth
 from ..synth.vocab import STATEMENT_PATTERN
 from .. import pipeline
 from ..operators.canonicalize import salted_counts
-from ..operators.extraction import extract_statements, statements_to_mentions
 
 
 def sf_of(sf_dir: str) -> float:
@@ -36,8 +35,6 @@ def synth_for(sf_dir: str) -> str:
 
 # --- session-scoped KG artifact cache ---------------------------------------
 
-_ARTIFACT_MEMO: dict = {}
-
 
 def kg_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     """Build the KG pipeline outputs ONCE per (session, corpus) and reuse
@@ -49,26 +46,20 @@ def kg_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     production scale these are materialized tables downstream queries
     scan, and the localCheckpoint here is the in-process stand-in for
     that materialization (it also truncates lineage so iterative
-    consumers like PPR re-plan from a flat scan)."""
+    consumers like PPR re-plan from a flat scan). Memoized on the session
+    by ``memo.dim_memo``, keyed on the corpus files' (mtime, size): a
+    driver-side ``os.stat`` that starts no Spark job."""
+    from ..operators.memo import dim_memo
+
     p = synth_for(sf_dir)
-    key = (id(spark), p)
-    hit = _ARTIFACT_MEMO.get(key)
-    if hit is not None and hit["_session"] is spark:
-        return hit
-    d = pipeline.load_synth(spark, p)
-    statements = extract_statements(d["transcripts"]).localCheckpoint()
-    mentions = statements_to_mentions(
-        statements, d["alias_dim"]).localCheckpoint()
-    triples = pipeline.triples_from_statements(
-        statements, d["alias_dim"], d["pred_dim"]).localCheckpoint()
-    from ..operators.canonicalize import build_edges, build_nodes
-    nodes = build_nodes(triples, d["alias_dim"]).localCheckpoint()
-    edges = build_edges(triples, nodes, d["pred_dim"]).localCheckpoint()
-    art = {**d, "statements": statements, "mentions": mentions,
-           "triples": triples, "nodes": nodes, "edges": edges,
-           "_session": spark}
-    _ARTIFACT_MEMO[key] = art
-    return art
+    key = (p,) + tuple((st.st_mtime_ns, st.st_size) for st in (
+        os.stat(f"{p}/{t}.parquet") for t in pipeline.CORPUS_TABLES))
+
+    def _build():
+        a = pipeline.build_kg(spark, p, keep=lambda df: df.localCheckpoint())
+        return {**a, "edges": a["edges"].localCheckpoint()}
+
+    return dim_memo(spark, "_kg_artifact_memo", key, _build)
 
 
 # --- shared DuckDB CTE text -------------------------------------------------
@@ -248,8 +239,7 @@ def q_kg_pred_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count("*").alias("n"))
              .select(F.lit("pred").alias("kind"),
                      F.col("pred").alias("name"), "n"))
-    from ..operators.linking import link_mentions
-    hot = (link_mentions(a["mentions"], a["alias_dim"])
+    hot = (a["linked_mentions"]
            .groupBy("qid")
            .agg(F.count("*").alias("n"))
            .orderBy(F.col("n").desc(), F.col("qid").asc())

@@ -1,5 +1,5 @@
-"""bench.py's remaining surface: the final JSON line and its own copy of
-the flagship pipeline."""
+"""bench.py's remaining surface: the final JSON line and its persisted,
+overlapped run of the flagship pipeline."""
 import json
 import os
 import sys
@@ -35,8 +35,9 @@ def test_compact_bench_line_fits_driver_buffer():
 
 
 def test_run_pipeline_matches_build_kg(spark, sf_dir_smoke):
-    """bench keeps its own (persisted, overlapped) composition of the
-    flagship build; pin its triple count to the engine's definition."""
+    """bench runs ``pipeline.build_kg`` persisted, with overlapped sinks
+    and the triple count observed on the triples write; pin that count
+    to the unpersisted build's."""
     from memex_kg_spark import pipeline
 
     out = bench.run_pipeline(spark, sf_dir_smoke)

@@ -213,3 +213,22 @@ def test_kg_nodes_twostar_is_memoized(spark, testdata_sf001):
     assert (second.select("qid", "canonical_id_twostar")
             .exceptAll(first.select("qid", "canonical_id_twostar"))
             .count() == 0)
+
+
+def test_fulltext_index_follows_rewritten_docs(spark, tmp_path):
+    """The fulltext index is memoized per documents table through
+    ``memo.dim_memo`` keyed on ``df_key``: a table rewritten in place
+    gets a fresh index in the same session."""
+    from memex_kg_spark.operators.fulltext import fulltext_topk
+
+    path = str(tmp_path / "documents.parquet")
+
+    def write(texts):
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}
+                     ).to_parquet(path, index=False)
+        docs = spark.read.parquet(path)
+        return sorted(r["doc_id"]
+                      for r in fulltext_topk(docs, ["eiffel"]).collect())
+
+    assert write(["eiffel tower", "louvre"]) == [0]
+    assert write(["louvre museum", "eiffel tower", "eiffel"]) == [1, 2]

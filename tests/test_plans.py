@@ -7,10 +7,13 @@ Each test pins a property that matters at 100 TB:
 - top-k queries plan as TakeOrderedAndProject (no global sort);
 - parquet scans get filters pushed down and columns pruned;
 - the connected-components driver finish hands its result back without
-  a pickled Python RDD.
+  a pickled Python RDD;
+- each flagship layer adds a fixed number of shuffles.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -62,6 +65,30 @@ def test_statement_triples_fact_side_never_shuffles(spark, sf_dir_smoke):
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
+
+
+def test_shuffles_per_layer(spark, sf_dir_smoke):
+    """Shuffles are the cost that matters at scale and a counter host
+    noise cannot move. ``keep`` records each fan-out's plan and then
+    localCheckpoints it, so every layer's plan starts from flat scans of
+    the layers before it and counts only the Exchanges it adds itself
+    (broadcast exchanges excluded)."""
+    from memex_kg_spark import pipeline
+
+    plans = []
+
+    def keep(df):
+        plans.append(_plan(df))
+        return df.localCheckpoint()
+
+    kg = pipeline.build_kg(spark, sf_dir_smoke, keep=keep)
+    layers = dict(zip(("statements", "mentions", "triples", "nodes"), plans))
+    layers.update(linked_mentions=_plan(kg["linked_mentions"]),
+                  edges=_plan(kg["edges"]))
+    shuffles = {k: len(re.findall(r"\bExchange\b", p))
+                for k, p in layers.items()}
+    assert shuffles == {"statements": 0, "mentions": 1, "linked_mentions": 0,
+                        "triples": 2, "nodes": 1, "edges": 2}
 
 
 def test_topk_plans_take_ordered(spark, testdata_sf001):
