@@ -142,13 +142,6 @@ class IcebergTableIO:
     def read_edges(self) -> DataFrame:
         return self.spark.read.table(self.tbl("edges"))
 
-    def graph_exists(self) -> bool:
-        """True only when BOTH graph tables exist — replace_graph commits
-        them as two snapshots, so checking one table alone mistakes a
-        crash between the two commits for a finalized graph."""
-        return (self.spark.catalog.tableExists(self.tbl("nodes"))
-                and self.spark.catalog.tableExists(self.tbl("edges")))
-
     # -- finalize state -------------------------------------------------
 
     def finalized_buckets(self) -> list[int]:

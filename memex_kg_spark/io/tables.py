@@ -29,8 +29,11 @@ Here the same capability is set-oriented and scales to 10^12 turns:
 from __future__ import annotations
 
 import glob
+import json
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 from py4j.protocol import Py4JJavaError
@@ -38,7 +41,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import pipeline
-from ..operators.canonicalize import build_edges, build_nodes
 from .iceberg import LINEAGE_COLS
 
 
@@ -75,7 +77,6 @@ class ResumableKGWriter:
         different one would re-bucket conversations into new ids and
         silently double-process them (caught live: 2946 -> 3931 triples).
         Pin it in a metadata file and refuse mismatched resumes."""
-        import json
         meta_path = os.path.join(self.out_root, "_KG_META.json")
         if os.path.exists(meta_path):
             with open(meta_path) as f:
@@ -150,24 +151,24 @@ class ResumableKGWriter:
 
     # -- processing ---------------------------------------------------------
 
-    def _bucketed_transcripts(self) -> DataFrame:
-        d = pipeline.load_synth(self.spark, self.synth_path)
-        t = d["transcripts"].withColumn(
+    def _bucketed_transcripts(self, t: DataFrame | None = None) -> DataFrame:
+        if t is None:
+            t = pipeline.load_synth(self.spark, self.synth_path)["transcripts"]
+        return t.withColumn(
             "bucket", F.pmod(F.xxhash64("conv_id"),
                              F.lit(self.n_buckets)).cast("int"))
-        return t
 
     def process_bucket(self, bucket: int) -> tuple[int, int]:
-        """Extract + write one bucket's triples in a SINGLE Spark job.
+        """``pipeline.build_triples`` for one bucket, in a SINGLE Spark job.
 
         Lineage metrics ride the write via ``df.observe`` instead of
         separate jobs (r3 verdict: the old input-count + written-re-read
         pattern cost two extra full scans per bucket — thousands of
         redundant scans at warehouse scale). Exactly-once metric
-        semantics: ``statements`` is persisted, and the claim branch's
-        distinct shuffle is a parent stage of the union stage, so the
-        observed transcript scan executes exactly once (the statement-
-        triples branch reads the cache, never re-runs the scan).
+        semantics: ``build_triples`` persists statements through ``keep``,
+        and the claim branch's distinct shuffle is a parent stage of the
+        union stage, so the observed transcript scan executes exactly once
+        (the statement-triples branch reads the cache, never the scan).
 
         The bucket lands in its own ``bucket=K/`` directory (partition
         discovery reads it back as a partition column) so concurrent
@@ -178,16 +179,14 @@ class ResumableKGWriter:
         directory and returns ``(0, 0)``. AQE prunes the observed input
         count together with the empty statement cache, so a bucket
         without statements pays one extra scan job to recount it."""
-        from ..operators.extraction import extract_statements
-
         d = pipeline.load_synth(self.spark, self.synth_path)
-        t = self._bucketed_transcripts().filter(F.col("bucket") == bucket)
+        t = (self._bucketed_transcripts(d["transcripts"])
+             .filter(F.col("bucket") == bucket))
         obs_in, obs_out = Observation(), Observation()
-        statements = extract_statements(
+        statements, triples = pipeline.build_triples(
             t.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-            .drop("bucket")).persist()
-        triples = pipeline.triples_from_statements(
-            statements, d["alias_dim"], d["pred_dim"])
+            .drop("bucket"), d["alias_dim"], d["pred_dim"],
+            keep=lambda df: df.persist())
         out = triples.observe(obs_out,
                               F.count(F.lit(1)).alias("n_triples"))
         if self.ice is not None:
@@ -231,9 +230,6 @@ class ResumableKGWriter:
                         f"simulated crash after {processed} buckets")
             return {"processed": processed, "skipped": len(done),
                     "total_buckets": self.n_buckets}
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
         commit_lock = threading.Lock()
 
         def work(b: int) -> int:
@@ -316,7 +312,6 @@ class ResumableKGWriter:
         endpoint gating against the new buckets' candidate nodes is
         exact. Crash-safe: the state file is written AFTER the appends,
         and a replayed append is fully absorbed by the anti-joins."""
-        import json
         d = pipeline.load_synth(self.spark, self.synth_path)
         nodes_path = os.path.join(self.out_root, "nodes")
         edges_path = os.path.join(self.out_root, "edges")
@@ -345,8 +340,8 @@ class ResumableKGWriter:
         tri_new = (tri_all
                    .filter(F.col("bucket").isin([int(b) for b in new]))
                    .drop("bucket").localCheckpoint())
-        cand_nodes = build_nodes(tri_new, d["alias_dim"])
-        cand_edges = build_edges(tri_new, cand_nodes, d["pred_dim"])
+        cand_nodes, cand_edges = pipeline.build_graph(
+            tri_new, d["alias_dim"], d["pred_dim"])
         if self.ice is not None:
             # MERGE INTO replaces the parquet anti-join + append: the
             # catalog's snapshot isolation makes a replayed finalize

@@ -1,11 +1,12 @@
-"""End-to-end KG-construction pipeline (the flagship plan).
+"""End-to-end KG-construction pipeline (the flagship plan), in two halves.
 
-transcripts --window sort--> statements (mapInPandas, Arrow batches)
-            --broadcast join alias winners--> linked statements
-            --union statement-triples + claim-expansion triples-->
-            --per-turn dedup--> triples
-            --distinct ids + broadcast dims + hash-min CC--> nodes
-            --endpoint gating + dedup--> edges
+build_triples: transcripts --window sort--> statements (mapInPandas)
+    --broadcast alias winners--> statement + claim triples --per-turn
+    dedup--> triples. The resumable writer runs it per bucket, streaming
+    per micro-batch.
+build_graph: triples --distinct ids + dims + hash-min CC--> nodes
+    --endpoint gating + dedup--> edges. The writer runs it at finalize.
+``build_kg`` composes the two and adds the mention and linking layers.
 
 Shuffles each layer adds over its kept inputs (pinned by
 ``tests/test_plans.py::test_shuffles_per_layer``): statements 0 (narrow
@@ -108,40 +109,51 @@ def claim_triples(statements: DataFrame, alias_dim: DataFrame) -> DataFrame:
 
 def triples_from_statements(statements: DataFrame, alias_dim: DataFrame,
                             pred_dim: DataFrame) -> DataFrame:
-    """Triple set from an already-extracted statements DF — lets callers
-    that also materialize mentions run the extraction scan ONCE (persist
-    statements, feed both consumers) instead of re-running the pandas UDF
-    stage per consumer."""
+    """Triple set from an already-extracted (and possibly kept) statements
+    DF, so mentions and triples share one extraction scan."""
     t = (statement_triples(statements, alias_dim, pred_dim)
          .unionByName(claim_triples(statements, alias_dim)))
     return t.dropDuplicates(
         ["conv_id", "turn_idx", "subj", "pred", "obj", "obj_type"])
 
 
-def extract_triples(transcripts: DataFrame, alias_dim: DataFrame,
-                    pred_dim: DataFrame) -> DataFrame:
-    """Full triple set, deduped within each turn (matches the oracle's
-    per-turn set semantics; conv_id+turn_idx in the key keep the dedup
-    shuffle high-cardinality and skew-free)."""
-    return triples_from_statements(
-        extract_statements(transcripts), alias_dim, pred_dim)
+Keep = Callable[[DataFrame], DataFrame]
 
 
-def build_kg(spark: SparkSession, sf_dir: str,
-             keep: Callable[[DataFrame], DataFrame] = lambda df: df,
+def build_triples(transcripts: DataFrame, alias_dim: DataFrame,
+                  pred_dim: DataFrame, keep: Keep = lambda df: df,
+                  ) -> tuple[DataFrame, DataFrame]:
+    """``(statements, triples)``; ``statements`` passes through ``keep``.
+    Triples are deduped within each turn (the oracle's per-turn set
+    semantics; conv_id+turn_idx keep the dedup key high-cardinality)."""
+    statements = keep(extract_statements(transcripts))
+    return statements, triples_from_statements(statements, alias_dim,
+                                               pred_dim)
+
+
+def build_graph(triples: DataFrame, alias_dim: DataFrame,
+                pred_dim: DataFrame, keep: Keep = lambda df: df,
+                ) -> tuple[DataFrame, DataFrame]:
+    """``(nodes, edges)`` from a triple set; ``nodes`` passes through
+    ``keep`` (edges gate their endpoints against it)."""
+    nodes = keep(build_nodes(triples, alias_dim))
+    return nodes, build_edges(triples, nodes, pred_dim)
+
+
+def build_kg(spark: SparkSession, sf_dir: str, keep: Keep = lambda df: df,
              ) -> dict[str, DataFrame]:
-    """The flagship, the package's one composition of its layers.
-    ``keep`` (identity, persist or localCheckpoint) is applied at the four
-    fan-outs: statements, mentions, triples and nodes. Pass a lambda
-    (``lambda df: df.persist()``), not ``DataFrame.persist``: PySpark 4's
-    base-class methods are stubs returning None."""
+    """The flagship over the corpus in ``sf_dir``. ``keep`` (identity,
+    persist or localCheckpoint) is applied at the four fan-outs in this
+    order, which ``test_shuffles_per_layer`` zips against: statements,
+    mentions, triples, nodes. Pass a lambda (``lambda df: df.persist()``),
+    not ``DataFrame.persist``: PySpark 4's base-class methods are stubs
+    returning None."""
     d = load_synth(spark, sf_dir)
-    statements = keep(extract_statements(d["transcripts"]))
-    mentions = keep(statements_to_mentions(statements, d["alias_dim"]))
-    triples = keep(triples_from_statements(statements, d["alias_dim"],
-                                           d["pred_dim"]))
-    nodes = keep(build_nodes(triples, d["alias_dim"]))
+    alias, pred = d["alias_dim"], d["pred_dim"]
+    statements, triples = build_triples(d["transcripts"], alias, pred, keep)
+    mentions = keep(statements_to_mentions(statements, alias))
+    triples = keep(triples)
+    nodes, edges = build_graph(triples, alias, pred, keep)
     return {**d, "statements": statements, "mentions": mentions,
-            "linked_mentions": link_mentions(mentions, d["alias_dim"]),
-            "triples": triples, "nodes": nodes,
-            "edges": build_edges(triples, nodes, d["pred_dim"])}
+            "linked_mentions": link_mentions(mentions, alias),
+            "triples": triples, "nodes": nodes, "edges": edges}

@@ -35,7 +35,7 @@ def run_incremental(spark: SparkSession, transcripts_dir: str,
     alias_dim, pred_dim = d["alias_dim"], d["pred_dim"]
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        triples = pipeline.extract_triples(batch_df, alias_dim, pred_dim)
+        _, triples = pipeline.build_triples(batch_df, alias_dim, pred_dim)
         (triples.write.mode("append")
          .parquet(os.path.join(out_dir, "triples")))
 

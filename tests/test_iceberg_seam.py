@@ -72,14 +72,6 @@ class FakeDF:
         return []
 
 
-class FakeCatalog:
-    def __init__(self, fake_spark):
-        self.s = fake_spark
-
-    def tableExists(self, name):
-        return name in self.s.existing_tables
-
-
 class FakeReader:
     def __init__(self, fake_spark):
         self.s = fake_spark
@@ -99,9 +91,7 @@ class FakeSpark:
     def __init__(self, tblprops=None):
         self.log = []
         self.views = {}
-        self.existing_tables = set()
         self.tblprops = tblprops or {}
-        self.catalog = FakeCatalog(self)
         self.read = FakeReader(self)
 
     def sql(self, q):
@@ -217,19 +207,6 @@ def test_env_var_selects_catalog(tmp_path, monkeypatch):
     assert (tmp_path / "kg2" / "_KG_META.json").exists()
 
 
-def test_graph_exists_requires_both_tables():
-    """replace_graph commits nodes and edges as two snapshots; a crash
-    between them must not read as "graph exists" (that would route a
-    replayed finalize into MERGE against a missing edges table)."""
-    fake = FakeSpark()
-    ice = IcebergTableIO(fake, catalog="lake")
-    assert not ice.graph_exists()
-    fake.existing_tables.add("lake.kg.nodes")
-    assert not ice.graph_exists()  # edges still missing: NOT a graph
-    fake.existing_tables.add("lake.kg.edges")
-    assert ice.graph_exists()
-
-
 def test_first_finalize_replays_replace_after_partial_crash(
         tmp_path, monkeypatch, spark):
     # `spark` (unused directly) keeps an active SparkContext so the
@@ -243,18 +220,18 @@ def test_first_finalize_replays_replace_after_partial_crash(
     from memex_kg_spark.io import tables as tables_mod
     from memex_kg_spark.io.tables import ResumableKGWriter
 
+    # the partial crash state as the writer sees it: the nodes table may
+    # exist, but the finalized-buckets table is empty
     fake = FakeSpark()
-    fake.existing_tables.add("lake.kg.nodes")  # the partial crash state
     w = ResumableKGWriter(fake, synth_path="unused",
                           out_root=str(tmp_path / "kg"),
                           n_buckets=8, catalog="lake")
     monkeypatch.setattr(tables_mod.pipeline, "load_synth",
                         lambda s, p: {"alias_dim": FakeDF(fake, "alias"),
                                       "pred_dim": FakeDF(fake, "pred")})
-    monkeypatch.setattr(tables_mod, "build_nodes",
-                        lambda t, a: FakeDF(fake, "cand_nodes"))
-    monkeypatch.setattr(tables_mod, "build_edges",
-                        lambda t, n, p: FakeDF(fake, "cand_edges"))
+    monkeypatch.setattr(tables_mod.pipeline, "build_graph",
+                        lambda t, a, p: (FakeDF(fake, "cand_nodes"),
+                                         FakeDF(fake, "cand_edges")))
     fake.log.clear()
     w.finalize_graph()
     ops = [(op, t) for op, t, *_ in

@@ -89,14 +89,14 @@ def test_clean_label_reference_rules():
 def test_determinism_across_partitionings(spark, sf_dir_smoke):
     """Same input at 1 vs 16 partitions -> identical sorted triple set
     (the sandbox stand-in for N vs 4N executors determinism)."""
-    from memex_kg_spark.pipeline import extract_triples
+    from memex_kg_spark.pipeline import build_triples
 
     d = load_synth(spark, sf_dir_smoke)
     cols = ["conv_id", "turn_idx", "subj", "pred", "obj", "obj_type"]
-    t1 = extract_triples(d["transcripts"].repartition(1), d["alias_dim"],
-                         d["pred_dim"]).toPandas()[cols]
-    t16 = extract_triples(d["transcripts"].repartition(16), d["alias_dim"],
-                          d["pred_dim"]).toPandas()[cols]
+    t1 = build_triples(d["transcripts"].repartition(1), d["alias_dim"],
+                       d["pred_dim"])[1].toPandas()[cols]
+    t16 = build_triples(d["transcripts"].repartition(16), d["alias_dim"],
+                        d["pred_dim"])[1].toPandas()[cols]
     key = lambda x: sorted(map(tuple, x.astype(str).values))  # noqa: E731
     assert key(t1) == key(t16)
 

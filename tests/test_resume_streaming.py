@@ -10,7 +10,7 @@ import tempfile
 import pytest
 
 from memex_kg_spark.io.tables import ResumableKGWriter
-from memex_kg_spark.pipeline import extract_triples, load_synth
+from memex_kg_spark.pipeline import build_triples, load_synth
 
 TRIPLE_COLS = ["conv_id", "turn_idx", "subj", "pred", "obj", "obj_type"]
 
@@ -23,8 +23,8 @@ def _triple_set(df):
 @pytest.fixture(scope="module")
 def batch_triples(spark, sf_dir_smoke):
     d = load_synth(spark, sf_dir_smoke)
-    return _triple_set(extract_triples(d["transcripts"], d["alias_dim"],
-                                       d["pred_dim"]))
+    return _triple_set(build_triples(d["transcripts"], d["alias_dim"],
+                                     d["pred_dim"])[1])
 
 
 def test_resume_equals_fresh(spark, sf_dir_smoke, batch_triples):
@@ -266,8 +266,8 @@ def test_empty_buckets_commit_and_run_completes(spark, sf_dir_smoke):
         assert int(m["rows_in"].sum()) == d["transcripts"].count()
         assert (m["rows_in"] == 0).sum() == 3
         assert (m.loc[m["rows_in"] == 0, "n_triples"] == 0).all()
-        assert _triple_set(w4.triples()) == _triple_set(extract_triples(
-            d["transcripts"], d["alias_dim"], d["pred_dim"]))
+        assert _triple_set(w4.triples()) == _triple_set(build_triples(
+            d["transcripts"], d["alias_dim"], d["pred_dim"])[1])
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -290,3 +290,59 @@ def test_lineage_with_only_temporary_is_missing(spark, sf_dir_smoke):
         assert w.committed_buckets() == {2}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _graph_rows(df, cols):
+    return sorted(map(tuple, df.toPandas()[cols].astype(str).values.tolist()))
+
+
+@pytest.mark.parametrize("mode", ["full", "incremental"])
+def test_finalize_crash_between_nodes_and_edges_converges(
+        spark, sf_dir_smoke, tmp_path, monkeypatch, mode):
+    """A parquet finalize that dies after its nodes write and before its
+    edges write records no finalize state, so the replay rebuilds the
+    same bucket set: a full finalize re-overwrites both tables, and an
+    incremental one finds the appended nodes already present (anti-join)
+    and appends only the edges. Either way the graph equals a one-shot
+    build over the whole corpus, with no duplicate rows."""
+    from pyspark.sql import DataFrameWriter
+
+    from memex_kg_spark.pipeline import build_graph
+
+    root = str(tmp_path / "kg")
+    w = ResumableKGWriter(spark, sf_dir_smoke, root, n_buckets=4,
+                          run_id=mode)
+    if mode == "incremental":
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            w.run(fail_after=2)
+        w.finalize_graph()
+    w.run()
+
+    parquet = DataFrameWriter.parquet
+
+    def crash_on_edges(self, path, *args, **kwargs):
+        if os.path.basename(path.rstrip("/")) == "edges":
+            raise RuntimeError("simulated crash before the edges write")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_edges)
+    with pytest.raises(RuntimeError, match="before the edges write"):
+        w.finalize_graph()
+    assert w.last_finalize["mode"] == mode
+    monkeypatch.undo()
+    # the crash state: this attempt's nodes landed, its edges did not
+    assert os.path.exists(os.path.join(root, "nodes", "_SUCCESS"))
+    assert os.path.exists(os.path.join(root, "edges")) == (
+        mode == "incremental")
+
+    replay = ResumableKGWriter(spark, sf_dir_smoke, root, n_buckets=4,
+                               run_id="replay")
+    nodes, edges = replay.finalize_graph()
+    assert replay.last_finalize["mode"] == mode
+    d = load_synth(spark, sf_dir_smoke)
+    _, tri = build_triples(d["transcripts"], d["alias_dim"], d["pred_dim"])
+    want_nodes, want_edges = build_graph(tri, d["alias_dim"], d["pred_dim"])
+    for got, want in ((nodes, want_nodes), (edges, want_edges)):
+        got_rows = _graph_rows(got, want.columns)
+        assert len(set(got_rows)) == len(got_rows)
+        assert got_rows == _graph_rows(want, want.columns)

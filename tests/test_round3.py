@@ -83,9 +83,7 @@ def test_incremental_finalize_scans_only_new_buckets(spark, sf_dir_smoke,
     rebuild from all triples."""
     import pytest as _pytest
     from memex_kg_spark.io.tables import ResumableKGWriter
-    from memex_kg_spark.operators.canonicalize import (build_edges,
-                                                       build_nodes)
-    from memex_kg_spark.pipeline import extract_triples, load_synth
+    from memex_kg_spark.pipeline import build_graph, build_triples, load_synth
 
     root = str(tmp_path / "kginc")
     w = ResumableKGWriter(spark, sf_dir_smoke, root, n_buckets=6,
@@ -104,9 +102,8 @@ def test_incremental_finalize_scans_only_new_buckets(spark, sf_dir_smoke,
     assert len(w2.last_finalize["buckets_scanned"]) == 4
 
     d = load_synth(spark, sf_dir_smoke)
-    tri = extract_triples(d["transcripts"], d["alias_dim"], d["pred_dim"])
-    full_nodes = build_nodes(tri, d["alias_dim"])
-    full_edges = build_edges(tri, full_nodes, d["pred_dim"])
+    _, tri = build_triples(d["transcripts"], d["alias_dim"], d["pred_dim"])
+    full_nodes, full_edges = build_graph(tri, d["alias_dim"], d["pred_dim"])
     got_n = {(r["qid"], r["label"], r["canonical_id"])
              for r in nodes.collect()}
     want_n = {(r["qid"], r["label"], r["canonical_id"])
