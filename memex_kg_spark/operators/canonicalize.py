@@ -37,23 +37,13 @@ def salted_counts(df: DataFrame, key: str, n_salts: int = 16,
 
 def entity_dim(alias_dim: DataFrame) -> DataFrame:
     """One row per qid with its canonical attributes (the dimension is
-    alias-grained; entity attributes repeat per alias, so first() per qid
-    is exact, not arbitrary). Memoized per session — the per-qid shuffle
-    + broadcast build is otherwise a fixed per-run cost."""
-    from .memo import df_key, dim_memo
+    alias-grained; entity attributes repeat per alias, so the first row
+    per qid is exact, not arbitrary). One derivative of the alias
+    dimension's session memo (``memo.alias_part``), taken from the
+    driver's Arrow copy of the dimension."""
+    from .memo import alias_part
 
-    def _build():
-        return (alias_dim
-                .groupBy("qid")
-                .agg(F.first("label").alias("label"),
-                     F.first("node_type").alias("node_type"),
-                     F.first("lat").alias("lat"),
-                     F.first("lon").alias("lon"),
-                     F.first("prop_keys").alias("prop_keys"),
-                     F.first("prop_vals").alias("prop_vals")))
-
-    return dim_memo(alias_dim.sparkSession, "_kg_entity_dim_memo",
-                    df_key(alias_dim), _build)
+    return alias_part(alias_dim, "entity")
 
 
 def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:

@@ -6,6 +6,14 @@ Stands in for the reference's Neo4j MERGE-based canonical dedup (unique
 143-146): entities that share a normalized alias collapse into one
 canonical cluster whose id is the minimum qid of the component.
 
+``canonical_map`` (the alias dimension's components) does not run the
+Spark path below while the dimension has at most ``DRIVER_CC_THRESHOLD``
+distinct qids: its union-find runs on the driver over each alias's star,
+during set-up, on the one Arrow copy of the dimension the driver holds
+to derive every broadcast side (``memo.alias_part``). The union-find
+holds one entry per qid, the size of the map it broadcasts. Above the
+cap it falls back to ``connected_components(alias_component_edges)``.
+
 ``connected_components`` runs in three steps:
 
 1. **Contract.** One hash-to-min round (the local contraction of Łącki
@@ -47,19 +55,40 @@ output contract, selectable via ``algorithm="twostar"``.
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StringType, StructField, StructType
 
 
 DRIVER_CC_THRESHOLD = 100_000  # default cap on label-graph edges (the
-# graph after contraction) for the driver-side finish; config-driven via
-# the ``driver_threshold`` parameter (r2 verdict: the old 2M default was
-# a real driver-memory bite). Below the cap a driver union-find beats a
+# graph after contraction) for the driver-side finish, config-driven via
+# the ``driver_threshold`` parameter, and on the distinct qids of
+# ``canonical_map``'s driver union-find (r2 verdict: the old 2M default
+# was a real driver-memory bite). Below the cap a driver union-find beats a
 # distributed loop by orders of magnitude (each distributed iteration
 # costs a shuffle + action; a dimension-sized graph is one bounded take).
 # Mirrors the reference's own judgment call of keeping Dominant-Set
 # clustering driver-side on small subgraphs (services/app.py:342-392).
+
+
+def _components(pairs) -> dict:
+    """Union-find over (a, b) pairs: every vertex -> the minimum vertex
+    of its component (a pair (v, v) registers v alone). Holds one entry
+    per vertex."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        a, b = find(a), find(b)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {x: find(x) for x in list(parent)}
 
 
 def _union_find(pairs, spark,
@@ -69,19 +98,7 @@ def _union_find(pairs, spark,
     Arrow table (a local relation): a list of tuples would become a
     pickled Python RDD and keep a Python worker pool alive afterwards,
     and an empty pandas frame would take that path too."""
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        a, b = find(r[0]), find(r[1])
-        if a != b:
-            parent[max(a, b)] = min(a, b)
-    comp = {x: find(x) for x in list(parent)}
+    comp = _components(pairs)
     return spark.createDataFrame(
         pa.table({"id": list(comp), "component": list(comp.values())}),
         StructType([StructField("id", id_type),
@@ -292,19 +309,41 @@ def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
             .distinct())
 
 
-def canonical_map(alias_dim: DataFrame) -> DataFrame:
-    """qid -> canonical_id (min qid of the shares-an-alias component);
-    singleton entities map to themselves. Memoized on the owning
-    SparkSession by ``memo.dim_memo``, keyed on the plan AND the source
-    files, so a dimension regenerated in place gets a fresh map."""
-    from .memo import df_key, dim_memo
+def canonical_components(alias_dim: DataFrame,
+                         alias: pa.Table) -> DataFrame:
+    """(qid, canonical_id) for every qid of the dimension, given its
+    ``(norm_alias, qid)`` columns already collected as ``alias``.
 
-    def _build():
+    While the dimension has at most ``DRIVER_CC_THRESHOLD`` distinct
+    qids, union-find runs on the driver over each alias's star (every
+    member joined to the alias's first qid): it holds one entry per qid,
+    the size of the map it hands back as Arrow. Above the cap the
+    components come from ``connected_components(alias_component_edges)``
+    in Spark."""
+    if pc.count_distinct(alias["qid"]).as_py() > DRIVER_CC_THRESHOLD:
         cc = connected_components(alias_component_edges(alias_dim))
         return (alias_dim.select("qid").distinct()
                 .join(cc.withColumnRenamed("id", "qid"), "qid", "left")
                 .select("qid", F.coalesce("component", "qid")
                         .alias("canonical_id")))
+    root: dict = {}
+    comp = _components(
+        (q, q if a is None else root.setdefault(a, q))
+        for a, q in zip(alias["norm_alias"].to_pylist(),
+                        alias["qid"].to_pylist()) if q is not None)
+    qid_type = alias.schema.field("qid").type
+    return alias_dim.sparkSession.createDataFrame(pa.table({
+        "qid": pa.array(list(comp), qid_type),
+        "canonical_id": pa.array(list(comp.values()), qid_type)}))
 
-    return dim_memo(alias_dim.sparkSession, "_kg_canon_memo",
-                    df_key(alias_dim), _build)
+
+def canonical_map(alias_dim: DataFrame) -> DataFrame:
+    """qid -> canonical_id (min qid of the shares-an-alias component);
+    singleton entities map to themselves. One derivative of the alias
+    dimension's session memo (``memo.alias_part``), built by
+    ``canonical_components`` from the driver's Arrow copy and keyed on
+    the plan AND the source files, so a dimension regenerated in place
+    gets a fresh map."""
+    from .memo import alias_part
+
+    return alias_part(alias_dim, "canonical")

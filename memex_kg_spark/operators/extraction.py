@@ -19,8 +19,10 @@ Scale notes:
   so executor memory stays flat regardless of input size.
 
 A pure-JVM variant (``extract_statements_sql``) with identical semantics is
-provided for cross-checks and as the fastest path when extraction really is
-regex-expressible; the pipeline defaults to the mapInPandas stage.
+provided for cross-checks; the pipeline runs the mapInPandas stage. The
+JVM twin is not the faster path: on an sf1 corpus (985,364 statements,
+local[4], cached input, noop sink) it took 3.65 s against the pandas
+stage's 3.34 s.
 """
 
 from __future__ import annotations
@@ -131,14 +133,10 @@ def statements_to_mentions(statements: DataFrame,
         )).alias("s"),
     ).select("conv_id", "turn_idx", "s.surface", "s.start")
     slots = slots.withColumn("norm_surface", F.lower("surface"))
-    from .memo import df_key, dim_memo
-    # the distinct alias gate is memoized per session: rebuilding it is a
-    # scan + distinct shuffle per run — a fixed driver-side cost a
-    # long-running cluster job pays once (same rationale as alias_winners)
-    gate = dim_memo(
-        alias_dim.sparkSession, "_kg_gate_memo", df_key(alias_dim),
-        lambda: alias_dim.select(
-            F.col("norm_alias").alias("norm_surface")).distinct())
+    from .memo import alias_part
+    # the alias gate is the memoized winners' alias column (every alias
+    # has a winner), so it costs no job per run
+    gate = alias_part(alias_dim, "gate")
     gated = slots.join(F.broadcast(gate), "norm_surface", "left_semi")
     from pyspark.sql import Window as W
     w = W.partitionBy("conv_id", "turn_idx").orderBy("start", "surface")

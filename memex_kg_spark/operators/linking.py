@@ -9,20 +9,19 @@ pure-Python oracle shares: max(score), tie-break min(qid).
 
 Because candidate scoring is a pure function of the (norm_surface, alias
 row) pair, the winner is computed ONCE per distinct alias on the tiny
-dimension (driver/broadcast side) rather than once per mention — at
-100 TB the fact table never shuffles for linking.
+dimension (on the driver, from its Arrow copy) rather than once per
+mention — at 100 TB the fact table never shuffles for linking.
 
 ``score_candidates`` is the vectorized pandas-UDF scoring hook mandated by
 BASELINE.json: Arrow-batched, numpy inside, no per-row Python. With exact
 alias-equality candidates the string-similarity term is 1.0 and the score
-reduces to the popularity prior, which keeps Spark and oracle identical
-while exercising the UDF path end-to-end.
+reduces to the popularity prior, which keeps Spark and oracle identical.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -33,8 +32,11 @@ def score_candidates(norm_surface: pd.Series, norm_alias: pd.Series,
     """Vectorized (surface, candidate) score: string similarity x prior.
 
     Similarity term is trivially 1.0 for equality candidates (the join key
-    guarantees it) but the UDF computes it for real so fuzzy candidate
-    generators can reuse the same scorer."""
+    guarantees it) but the function computes it for real so fuzzy
+    candidate generators can reuse the same scorer. ``alias_winners``
+    calls the plain function (``score_candidates.func``) once per alias
+    row on the driver's Arrow copy of the dimension; the UDF stays the
+    scoring hook for a fact-side candidate generator."""
     sim = (norm_surface == norm_alias).astype("float64")
     return sim * prior.astype("float64")
 
@@ -42,30 +44,16 @@ def score_candidates(norm_surface: pd.Series, norm_alias: pd.Series,
 def alias_winners(alias_dim: DataFrame) -> DataFrame:
     """norm_alias -> winning (qid, label, node_type, score).
 
-    Runs on the dimension only (thousands of rows), so the window sort is
-    free; the result broadcasts to every executor. Memoized on the owning
-    SparkSession by ``memo.dim_memo`` (same pattern as canonical_map): the
-    pipeline consumes winners in several joins and each broadcast build is
-    a fixed-cost driver-side job — pure overhead that would otherwise be
-    paid 4-5x per run and eat into N->4N scaling efficiency. The key is
+    One derivative of the alias dimension's session memo
+    (``memo.alias_part``): scoring runs once per alias row, on the
+    driver's Arrow copy of the dimension, through ``score_candidates``'
+    vectorized function, and the first row per alias by (score desc, qid
+    asc) wins. The result broadcasts to every executor. The memo key is
     the plan AND the source files, so a dimension rewritten in place gets
     fresh winners."""
-    from .memo import df_key, dim_memo
+    from .memo import alias_part
 
-    def _build():
-        scored = alias_dim.withColumn(
-            "score",
-            score_candidates(F.col("norm_alias"), F.col("norm_alias"),
-                             F.col("prior")))
-        w = Window.partitionBy("norm_alias").orderBy(
-            F.col("score").desc(), F.col("qid").asc())
-        return (scored
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") == 1)
-                .select("norm_alias", "qid", "label", "node_type", "score"))
-
-    return dim_memo(alias_dim.sparkSession, "_kg_winners_memo",
-                    df_key(alias_dim), _build)
+    return alias_part(alias_dim, "winners")
 
 
 def link_mentions(mentions: DataFrame, alias_dim: DataFrame) -> DataFrame:

@@ -84,22 +84,10 @@ def claim_triples(statements: DataFrame, alias_dim: DataFrame) -> DataFrame:
               .select("conv_id", "turn_idx", "qid")
               .distinct())
 
-    def _build_props():
-        return (alias_dim
-                .groupBy("qid")
-                .agg(F.first("prop_keys").alias("ks"),
-                     F.first("prop_vals").alias("vs"))
-                .select("qid", F.explode(F.arrays_zip(
-                    F.col("ks").alias("pred"), F.col("vs").alias("obj")))
-                    .alias("kv"))
-                .select("qid", F.col("kv.pred").alias("pred"),
-                        F.col("kv.obj").alias("obj")))
-
-    from .operators.memo import df_key, dim_memo
-    # claim dimension memoized per session: its shuffle + broadcast build
-    # is a fixed per-run driver cost otherwise (flattens N->4N scaling)
-    props = dim_memo(alias_dim.sparkSession, "_kg_props_memo",
-                     df_key(alias_dim), _build_props)
+    from .operators.memo import alias_part
+    # the claim dimension (qid, pred, obj): a memoized derivative of the
+    # alias dimension, exploded from each qid's aligned prop arrays
+    props = alias_part(alias_dim, "props")
     return (linked.join(F.broadcast(props), "qid")
             .select("conv_id", "turn_idx", F.col("qid").alias("subj"),
                     "pred", "obj",

@@ -215,6 +215,160 @@ def test_kg_nodes_twostar_is_memoized(spark, testdata_sf001):
             .count() == 0)
 
 
+def test_dim_memo_builds_once_under_concurrent_misses():
+    """Threads missing one entry at once (the writer's concurrent buckets
+    on a fresh session) wait for a single build; a second key builds on
+    its own."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from memex_kg_spark.operators.memo import dim_memo
+
+    n = 8  # more threads than the cores of a small host
+    session, calls, got = SimpleNamespace(), [], []
+    start = threading.Barrier(n, timeout=10)
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)
+        return len(calls)
+
+    def worker():
+        start.wait()
+        got.append(dim_memo(session, "_test_memo", "k", build))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1 and got == [1] * n
+    assert dim_memo(session, "_test_memo", "other", build) == 2
+
+
+def test_alias_dims_setup_job_count(spark, sf_dir_smoke, tmp_path):
+    """Set-up (the alias dimension's five broadcast derivatives) issues
+    a bounded number of Spark jobs, a count host noise cannot move: one
+    Arrow collection and one checkpoint per derivative handed back (the
+    gate is a projection of the winners), 5 in all; 21-23 when each
+    derivative was its own Spark plan. A second round issues none. The
+    dimension is copied so the memo starts cold."""
+    import shutil
+
+    from memex_kg_spark import pipeline
+    from memex_kg_spark.operators.canonicalize import entity_dim
+    from memex_kg_spark.operators.components import canonical_map
+    from memex_kg_spark.operators.extraction import statements_to_mentions
+    from memex_kg_spark.operators.linking import alias_winners
+
+    path = str(tmp_path / "alias_dim.parquet")
+    shutil.copy(f"{sf_dir_smoke}/alias_dim.parquet", path)
+    alias = spark.read.parquet(path)
+    statements = extract_statements(
+        load_synth(spark, sf_dir_smoke)["transcripts"])
+    sc = spark.sparkContext
+
+    def setup_jobs(group):
+        sc.setJobGroup(group, "alias dimension set-up")
+        try:
+            alias_winners(alias)
+            statements_to_mentions(statements, alias)
+            pipeline.claim_triples(statements, alias)
+            entity_dim(alias)
+            canonical_map(alias)
+        finally:
+            sc.setJobGroup(None, None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    assert 0 < len(setup_jobs("alias-setup-cold")) <= 6
+    assert setup_jobs("alias-setup-warm") == []
+
+
+def _adversarial_alias_dim() -> pd.DataFrame:
+    """Equal priors (the minimum qid must win, listed last), a chain
+    joined through two aliases whose first-listed qid is not the
+    minimum, a hub alias, singletons, and a qid with empty prop arrays."""
+    rows = [  # norm_alias, qid, prior, prop_keys, prop_vals
+        ("tie", "Q7", 0.5, ["P1"], ["Q8"]),
+        ("tie", "Q5", 0.5, ["P1", "P2"], ["Q7", "x"]),
+        ("tie", "Q50", 0.5, [], []),
+        ("link a", "Q12", 0.2, ["P3"], ["y"]),
+        ("link a", "Q11", 0.9, ["P3"], ["z"]),
+        ("link b", "Q11", 0.9, ["P3"], ["z"]),
+        ("link b", "Q9", 0.1, [], []),
+        ("solo", "Q30", 1.0, ["P4"], ["w"]),
+        ("alone", "Q31", 0.3, [], []),
+    ] + [("hub", f"Q2{i}", 0.1 * i, [], []) for i in range(6)] \
+      + [(f"own {i}", f"Q2{i}", 1.0, [], []) for i in range(6)]
+    df = pd.DataFrame(rows, columns=["norm_alias", "qid", "prior",
+                                     "prop_keys", "prop_vals"])
+    return df.assign(label=df["qid"].str.lower(), node_type="Knowledge",
+                     lat=float("nan"), lon=float("nan"))
+
+
+def test_alias_dims_match_oracle(spark, tmp_path, monkeypatch):
+    """The driver derivation of winners, entity rows, claim props and the
+    canonical map agrees with ``reference_impl`` on an adversarial
+    dimension, and the Spark fallback above ``DRIVER_CC_THRESHOLD`` gives
+    the same canonical map."""
+    from memex_kg_spark import pipeline
+    from memex_kg_spark.operators import components
+    from memex_kg_spark.operators.canonicalize import entity_dim
+    from memex_kg_spark.operators.linking import alias_winners
+    from memex_kg_spark.operators.memo import alias_part
+    from memex_kg_spark.oracle import reference_impl
+
+    dim = _adversarial_alias_dim()
+
+    def load(name):
+        path = str(tmp_path / f"{name}.parquet")
+        dim.to_parquet(path, index=False)
+        return spark.read.parquet(path)
+
+    alias = load("driver")
+    winners = {r["norm_alias"]: r for r in alias_winners(alias).collect()}
+    assert {a: r["qid"] for a, r in winners.items()} == \
+        reference_impl.winner_map(dim)
+    assert winners["tie"]["qid"] == "Q5"
+    assert (winners["link a"]["label"], winners["link a"]["score"]) == \
+        ("q11", 0.9)
+
+    ents = {r["qid"]: r for r in entity_dim(alias).collect()}
+    assert set(ents) == set(dim["qid"])
+    assert ents["Q50"]["prop_keys"] == [] and ents["Q50"]["label"] == "q50"
+    props = {tuple(r) for r in alias_part(alias, "props").collect()}
+    first = dim.drop_duplicates("qid")
+    assert props == {(q, k, v) for q, ks, vs in zip(
+        first["qid"], first["prop_keys"], first["prop_vals"])
+        for k, v in zip(ks, vs)}
+    assert not any(q == "Q50" for q, _, _ in props)
+    claims = pipeline.claim_triples(
+        spark.createDataFrame(pd.DataFrame(
+            {"conv_id": ["c"], "turn_idx": [0], "subj_surface": ["Tie"],
+             "obj_surface": ["Link A"]})), alias)
+    assert sorted((r["subj"], r["pred"], r["obj"], r["obj_type"])
+                  for r in claims.collect()) == [
+        ("Q11", "P3", "z", "literal"), ("Q5", "P1", "Q7", "entity"),
+        ("Q5", "P2", "x", "literal")]
+
+    expected = reference_impl.connected_components(dim)
+    assert expected["Q12"] == expected["Q9"] == "Q11"
+    assert {expected[f"Q2{i}"] for i in range(6)} == {"Q20"}
+    canon = lambda df: {r["qid"]: r["canonical_id"]  # noqa: E731
+                        for r in components.canonical_map(df).collect()}
+    assert canon(alias) == expected
+    monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 3)
+    assert canon(load("fallback")) == expected
+
+
 def test_fulltext_index_follows_rewritten_docs(spark, tmp_path):
     """The fulltext index is memoized per documents table through
     ``memo.dim_memo`` keyed on ``df_key``: a table rewritten in place
