@@ -7,12 +7,12 @@ Stands in for the reference's Neo4j MERGE-based canonical dedup (unique
 canonical cluster whose id is the minimum qid of the component.
 
 ``canonical_map`` (the alias dimension's components) does not run the
-Spark path below while the dimension has at most ``DRIVER_CC_THRESHOLD``
-distinct qids: its union-find runs on the driver over each alias's star,
+Spark path below: it runs the same contract-then-finish on the driver
 during set-up, on the one Arrow copy of the dimension the driver holds
-to derive every broadcast side (``memo.alias_part``). The union-find
-holds one entry per qid, the size of the map it broadcasts. Above the
-cap it falls back to ``connected_components(alias_component_edges)``.
+to derive every broadcast side (``memo.alias_part``). The contraction
+runs in pyarrow; the union-find holds one entry per label-graph vertex,
+at most one per qid. ``DRIVER_CC_THRESHOLD`` does not bound it; it
+bounds the label graph of ``connected_components`` below.
 
 ``connected_components`` runs in three steps:
 
@@ -62,10 +62,9 @@ from pyspark.sql.types import DataType, StringType, StructField, StructType
 
 
 DRIVER_CC_THRESHOLD = 100_000  # default cap on label-graph edges (the
-# graph after contraction) for the driver-side finish, config-driven via
-# the ``driver_threshold`` parameter, and on the distinct qids of
-# ``canonical_map``'s driver union-find (r2 verdict: the old 2M default
-# was a real driver-memory bite). Below the cap a driver union-find beats a
+# graph after contraction) for the driver-side finish; config-driven via
+# the ``driver_threshold`` parameter (r2 verdict: the old 2M default was
+# a real driver-memory bite). Below the cap a driver union-find beats a
 # distributed loop by orders of magnitude (each distributed iteration
 # costs a shuffle + action; a dimension-sized graph is one bounded take).
 # Mirrors the reference's own judgment call of keeping Dominant-Set
@@ -309,32 +308,37 @@ def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
             .distinct())
 
 
-def canonical_components(alias_dim: DataFrame,
-                         alias: pa.Table) -> DataFrame:
-    """(qid, canonical_id) for every qid of the dimension, given its
-    ``(norm_alias, qid)`` columns already collected as ``alias``.
+def canonical_components(alias: pa.Table, spark) -> DataFrame:
+    """(qid, canonical_id) for every qid of the alias dimension, given
+    its ``(norm_alias, qid)`` columns collected as ``alias``.
 
-    While the dimension has at most ``DRIVER_CC_THRESHOLD`` distinct
-    qids, union-find runs on the driver over each alias's star (every
-    member joined to the alias's first qid): it holds one entry per qid,
-    the size of the map it hands back as Arrow. Above the cap the
-    components come from ``connected_components(alias_component_edges)``
-    in Spark."""
-    if pc.count_distinct(alias["qid"]).as_py() > DRIVER_CC_THRESHOLD:
-        cc = connected_components(alias_component_edges(alias_dim))
-        return (alias_dim.select("qid").distinct()
-                .join(cc.withColumnRenamed("id", "qid"), "qid", "left")
-                .select("qid", F.coalesce("component", "qid")
-                        .alias("canonical_id")))
-    root: dict = {}
-    comp = _components(
-        (q, q if a is None else root.setdefault(a, q))
-        for a, q in zip(alias["norm_alias"].to_pylist(),
-                        alias["qid"].to_pylist()) if q is not None)
-    qid_type = alias.schema.field("qid").type
-    return alias_dim.sparkSession.createDataFrame(pa.table({
-        "qid": pa.array(list(comp), qid_type),
-        "canonical_id": pa.array(list(comp.values()), qid_type)}))
+    The ``_contract`` round, in pyarrow: every row joins its alias's
+    star root (the alias's minimum qid), ``m(q)`` is the minimum root
+    over q's aliases, and the label graph is the distinct (root, m(q))
+    pairs with root != m(q). No Python object is made per alias row:
+    union-find runs on the driver over the label graph, and each qid's
+    component is its label's. A row with a null alias joins nothing;
+    its qid maps to itself."""
+    qids = alias.filter(pc.is_valid(alias["qid"]))
+    linked = qids.filter(pc.is_valid(qids["norm_alias"]))
+    root = linked.group_by("norm_alias").aggregate([("qid", "min")])
+    stars = linked.join(pa.table({"norm_alias": root["norm_alias"],
+                                  "root": root["qid_min"]}), "norm_alias")
+    m = stars.group_by("qid").aggregate([("root", "min")])
+    m = pa.table({"qid": m["qid"], "m": m["root_min"]})
+    label = stars.join(m, "qid")
+    label = (label.filter(pc.not_equal(label["root"], label["m"]))
+             .group_by(["root", "m"]).aggregate([]))
+    comp = _components(zip(label["root"].to_pylist(),
+                           label["m"].to_pylist()))
+    ids = pa.table({"qid": pc.unique(qids["qid"])}).join(
+        m, "qid", join_type="left outer")
+    return spark.createDataFrame(pa.table({
+        "qid": ids["qid"],
+        "canonical_id": pa.array(
+            [comp.get(x, x) for x in
+             pc.coalesce(ids["m"], ids["qid"]).to_pylist()],
+            ids.schema.field("qid").type)}))
 
 
 def canonical_map(alias_dim: DataFrame) -> DataFrame:

@@ -134,8 +134,8 @@ def statements_to_mentions(statements: DataFrame,
     ).select("conv_id", "turn_idx", "s.surface", "s.start")
     slots = slots.withColumn("norm_surface", F.lower("surface"))
     from .memo import alias_part
-    # the alias gate is the memoized winners' alias column (every alias
-    # has a winner), so it costs no job per run
+    # the alias gate is the dimension's distinct aliases, a memoized
+    # derivative of the dimension, so it costs no job per run
     gate = alias_part(alias_dim, "gate")
     gated = slots.join(F.broadcast(gate), "norm_surface", "left_semi")
     from pyspark.sql import Window as W

@@ -76,7 +76,7 @@ def dim_memo(session, attr: str, key, build):
 # the derivatives its columns allow
 ALIAS_PARTS = {
     "winners": ("norm_alias", "qid", "label", "node_type", "prior"),
-    "gate": ("norm_alias", "qid", "label", "node_type", "prior"),
+    "gate": ("norm_alias",),
     "entity": ("qid", "label", "node_type", "lat", "lon", "prop_keys",
                "prop_vals"),
     "props": ("qid", "prop_keys", "prop_vals"),
@@ -115,13 +115,15 @@ def _alias_parts(alias_dim: DataFrame) -> dict[str, DataFrame]:
     - ``winners``: ``score_candidates``' vectorized function over the
       dimension's (alias, alias, prior), then the first row per
       ``norm_alias`` by (score desc, qid asc);
-    - ``gate``: the winners' ``norm_alias`` as ``norm_surface`` (a
-      projection of the checkpointed winners, no job of its own);
+    - ``gate``: the distinct ``norm_alias`` as ``norm_surface``: a
+      projection of the checkpointed winners (no job of its own) when
+      they were built, else ``pc.unique`` of the column;
     - ``entity``: the first row per qid (entity attributes repeat per
       alias, so any row is exact);
     - ``props``: those rows' aligned ``prop_keys``/``prop_vals`` as
       (qid, pred, obj), a qid with empty arrays adding none;
-    - ``canonical``: ``components.canonical_components``.
+    - ``canonical``: ``components.canonical_components`` (a pyarrow
+      contraction, then union-find over the label graph).
 
     Each goes back as ``createDataFrame(arrow).localCheckpoint()``: a
     plain Arrow local relation as a broadcast side slowed every warm
@@ -156,10 +158,13 @@ def _alias_parts(alias_dim: DataFrame) -> dict[str, DataFrame]:
                                  "obj": pc.list_flatten(vs)})
     frames = {p: spark.createDataFrame(a).localCheckpoint()
               for p, a in out.items()}
-    if "gate" in parts:
+    if "winners" in frames:
         frames["gate"] = frames["winners"].select(
             F.col("norm_alias").alias("norm_surface"))
+    elif "gate" in parts:
+        frames["gate"] = spark.createDataFrame(pa.table(
+            {"norm_surface": pc.unique(t["norm_alias"])})).localCheckpoint()
     if "canonical" in parts:
         frames["canonical"] = canonical_components(
-            alias_dim, t.select(["norm_alias", "qid"])).localCheckpoint()
+            t.select(["norm_alias", "qid"]), spark).localCheckpoint()
     return frames

@@ -314,26 +314,23 @@ def _adversarial_alias_dim() -> pd.DataFrame:
                      lat=float("nan"), lon=float("nan"))
 
 
-def test_alias_dims_match_oracle(spark, tmp_path, monkeypatch):
+def test_alias_dims_match_oracle(spark, tmp_path):
     """The driver derivation of winners, entity rows, claim props and the
     canonical map agrees with ``reference_impl`` on an adversarial
-    dimension, and the Spark fallback above ``DRIVER_CC_THRESHOLD`` gives
-    the same canonical map."""
+    dimension, and a dimension of aliases alone still gates mentions."""
     from memex_kg_spark import pipeline
-    from memex_kg_spark.operators import components
     from memex_kg_spark.operators.canonicalize import entity_dim
+    from memex_kg_spark.operators.components import canonical_map
+    from memex_kg_spark.operators.extraction import statements_to_mentions
     from memex_kg_spark.operators.linking import alias_winners
     from memex_kg_spark.operators.memo import alias_part
     from memex_kg_spark.oracle import reference_impl
 
     dim = _adversarial_alias_dim()
 
-    def load(name):
-        path = str(tmp_path / f"{name}.parquet")
-        dim.to_parquet(path, index=False)
-        return spark.read.parquet(path)
-
-    alias = load("driver")
+    path = str(tmp_path / "alias_dim.parquet")
+    dim.to_parquet(path, index=False)
+    alias = spark.read.parquet(path)
     winners = {r["norm_alias"]: r for r in alias_winners(alias).collect()}
     assert {a: r["qid"] for a, r in winners.items()} == \
         reference_impl.winner_map(dim)
@@ -362,11 +359,16 @@ def test_alias_dims_match_oracle(spark, tmp_path, monkeypatch):
     expected = reference_impl.connected_components(dim)
     assert expected["Q12"] == expected["Q9"] == "Q11"
     assert {expected[f"Q2{i}"] for i in range(6)} == {"Q20"}
-    canon = lambda df: {r["qid"]: r["canonical_id"]  # noqa: E731
-                        for r in components.canonical_map(df).collect()}
-    assert canon(alias) == expected
-    monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 3)
-    assert canon(load("fallback")) == expected
+    assert {r["qid"]: r["canonical_id"]
+            for r in canonical_map(alias).collect()} == expected
+
+    only = str(tmp_path / "aliases_only.parquet")
+    dim[["norm_alias"]].to_parquet(only, index=False)
+    mentions = statements_to_mentions(spark.createDataFrame(pd.DataFrame(
+        {"conv_id": ["c"], "turn_idx": [0], "subj_surface": ["Tie"],
+         "subj_start": [0], "obj_surface": ["nobody"], "obj_start": [8]})),
+        spark.read.parquet(only))
+    assert [r["norm_surface"] for r in mentions.collect()] == ["tie"]
 
 
 def test_fulltext_index_follows_rewritten_docs(spark, tmp_path):
