@@ -13,8 +13,10 @@ for 1000-executor / 100 TB scale:
   ingestion/recursive_hops_ingestion.py:135-164);
 - entity linking is a broadcast hash join against an alias dimension
   (replaces per-tag Cypher lookups, reference db/db_connection.py:205-219);
-- canonical dedup is a salted two-phase groupBy + iterative hash-min
-  connected components (replaces Neo4j unique-constraint MERGE,
+- canonical dedup is a salted two-phase groupBy + connected components
+  over the shares-an-alias graph: a pyarrow contraction plus union-find
+  on the driver for ``canonical_id``, and the distributed
+  large-star/small-star loop (replaces Neo4j unique-constraint MERGE,
   reference db/db_connection.py:51-56,143-146);
 - nodes/edges are materialized as hash-bucketed parquet tables with
   per-partition lineage rows enabling anti-join resume (replaces the

@@ -48,8 +48,10 @@ def entity_dim(alias_dim: DataFrame) -> DataFrame:
 
 def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:
     """Nodes = every qid appearing as a subject or entity-typed object,
-    joined to the entity dimension, with canonical_id from hash-min CC
-    and the dynamic property map (SURVEY §1.3: the reference spills every
+    joined to the entity dimension, with canonical_id from the alias
+    graph's connected components (``components.canonical_map``: a
+    pyarrow contraction plus union-find on the driver) and the dynamic
+    property map (SURVEY §1.3: the reference spills every
     harvested property/value pair onto the node,
     db/db_connection.py:102-148; here ``props map<string,string>`` built
     from the aligned prop_keys/prop_vals arrays).

@@ -1,55 +1,27 @@
-"""Connected components: contract in the JVM, finish on the driver or
-in a distributed loop.
+"""Connected components over the shares-an-alias graph.
 
 Stands in for the reference's Neo4j MERGE-based canonical dedup (unique
 ``wid`` constraint + swallowed ConstraintError, db/db_connection.py:51-56,
 143-146): entities that share a normalized alias collapse into one
 canonical cluster whose id is the minimum qid of the component.
 
-``canonical_map`` (the alias dimension's components) does not run the
-Spark path below: it runs the same contract-then-finish on the driver
-during set-up, on the one Arrow copy of the dimension the driver holds
-to derive every broadcast side (``memo.alias_part``). The contraction
-runs in pyarrow; the union-find holds one entry per label-graph vertex,
-at most one per qid. ``DRIVER_CC_THRESHOLD`` does not bound it; it
-bounds the label graph of ``connected_components`` below.
+Two builds compute it, each where its input already lives:
 
-``connected_components`` runs in three steps:
-
-1. **Contract.** One hash-to-min round (the local contraction of Łącki
-   et al., "Connected Components at Scale via Local Contractions",
-   2018): ``m(v) = min(v, min neighbour)`` in one ``groupBy``, then the
-   label graph ``(least(m_a, m_b), greatest(m_a, m_b))`` over the edges
-   with ``m_a != m_b``, deduplicated. The label graph has the input's
-   components on fewer vertices and edges; a star around its minimum
-   contracts away entirely.
-2. **Finish.** A bounded ``take(DRIVER_CC_THRESHOLD + 1)`` probes the
-   label graph. If it fits, union-find finishes on the driver and its
-   result goes back to the JVM as an Arrow table (a local relation, no
-   pickled Python RDD and no Python worker pool left running). If not,
-   the distributed loop below runs on the label graph.
-3. **Compose.** ``component(v) = coalesce(comp[m(v)], m(v))``, so the
-   contraction round is never wasted work.
-
-The distributed loop is hash-min label propagation:
-    label(v) <- min(label(v), min over neighbors u of label(u))
-iterated to fixpoint. Each iteration is one shuffle (groupBy id); the
-frontier DataFrame is ``localCheckpoint``-ed every iteration to truncate
-lineage — without it the self-join plan grows exponentially and the job
-dies long before 100 TB. Convergence is a single (count, hash-sum)
-aggregate over the new label set — labels only ever decrease, so an
-unchanged signature IS the fixpoint; no join against the previous
-labels and no changed-set shuffle (r3 verdict #4; same detector as the
-twostar variant). ``force_distributed=True`` runs it on the raw edges,
-without contraction.
-
-Iterations are bounded by the graph diameter; alias-sharing graphs are
-shallow (star-ish around hub aliases), so typical convergence is <10
-rounds. For adversarial long-path graphs (diameter >> iteration budget)
-``connected_components_twostar`` implements large-star/small-star
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14): O(log n) rounds regardless of diameter, same (id, component)
-output contract, selectable via ``algorithm="twostar"``.
+- ``canonical_components`` (behind ``canonical_map``, so behind every
+  node's ``canonical_id``) runs on the driver during set-up, over the
+  one Arrow copy of the dimension the driver holds to derive every
+  broadcast side (``memo.alias_part``). One hash-to-min round in pyarrow
+  (the local contraction of Łącki et al., "Connected Components at Scale
+  via Local Contractions", 2018) folds each alias star into its minimum
+  qid; union-find finishes the much smaller label graph. Nothing bounds
+  it but the collection of the whole dimension.
+- ``connected_components_twostar`` is the distributed loop:
+  large-star/small-star (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC'14) as DataFrame self-joins, the edge set
+  ``localCheckpoint``-ed every round, O(log n) rounds whatever the
+  diameter. ``queries.kg.q_kg_nodes`` runs it over
+  ``alias_component_edges`` so the driver artifact checks it against the
+  recursive-CTE oracle (``canonical_id_twostar``).
 """
 
 from __future__ import annotations
@@ -58,17 +30,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StringType, StructField, StructType
 
 
-DRIVER_CC_THRESHOLD = 100_000  # default cap on label-graph edges (the
-# graph after contraction) for the driver-side finish; config-driven via
-# the ``driver_threshold`` parameter (r2 verdict: the old 2M default was
-# a real driver-memory bite). Below the cap a driver union-find beats a
-# distributed loop by orders of magnitude (each distributed iteration
-# costs a shuffle + action; a dimension-sized graph is one bounded take).
-# Mirrors the reference's own judgment call of keeping Dominant-Set
-# clustering driver-side on small subgraphs (services/app.py:342-392).
+DRIVER_CC_THRESHOLD = 100_000  # the engine no longer reads it; it stays
+# only for perfbench/inputs.py, which imports it to size the hot_claims
+# alias graph (its value fixes that workload's shape).
 
 
 def _components(pairs) -> dict:
@@ -90,28 +56,15 @@ def _components(pairs) -> dict:
     return {x: find(x) for x in list(parent)}
 
 
-def _union_find(pairs, spark,
-                id_type: DataType = StringType()) -> DataFrame:
-    """Union-find over collected (a, b) rows; identical output contract
-    to the distributed variant. The result is handed to the JVM as an
-    Arrow table (a local relation): a list of tuples would become a
-    pickled Python RDD and keep a Python worker pool alive afterwards,
-    and an empty pandas frame would take that path too."""
-    comp = _components(pairs)
-    return spark.createDataFrame(
-        pa.table({"id": list(comp), "component": list(comp.values())}),
-        StructType([StructField("id", id_type),
-                    StructField("component", id_type)]))
-
-
 def connected_components_twostar(edges: DataFrame, src: str = "src",
                                  dst: str = "dst",
                                  max_iter: int = 30) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     SoCC'14): converges in O(log n) alternating rounds INDEPENDENT of
-    graph diameter, unlike hash-min whose round count is the diameter.
-    Same output contract as ``connected_components``: (id, component)
-    with component = min id of the component.
+    graph diameter, unlike label propagation whose round count is the
+    diameter. Returns (id, component), one row per vertex of ``edges``,
+    with component = min id of the component; a vertex whose only edges
+    are self-loops is its own component.
 
     Each round is two grouped aggregations + joins (all on node-id keys,
     no driver-side state); the edge set is ``localCheckpoint``-ed per
@@ -176,124 +129,11 @@ def connected_components_twostar(edges: DataFrame, src: str = "src",
     # the fixpoint each u holds exactly ONE parent edge, but when
     # max_iter exhausts first a node can still hold several — collapse
     # to min(v) so the (id, component) one-row-per-id contract holds
-    # unconditionally (labels may be pre-fixpoint then, same caveat as
-    # an exhausted hash-min loop, but never duplicated/fanned out).
+    # unconditionally (labels may be pre-fixpoint then, but never
+    # duplicated/fanned out).
     parents = e.groupBy("u").agg(F.min("v").alias("v"))
     return (ids.join(parents.withColumnRenamed("u", "id"), "id", "left")
             .select("id", F.coalesce("v", "id").alias("component")))
-
-
-def _hash_min(edges: DataFrame, src: str, dst: str,
-              max_iter: int) -> DataFrame:
-    """The distributed hash-min loop: (id, component) over the vertices
-    of the non-self-loop edges."""
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .filter(F.col("a") != F.col("b"))
-           .distinct())
-    ids = (sym.select(F.col("a").alias("id"))
-           .union(sym.select(F.col("b").alias("id")))
-           .distinct())
-    labels = ids.withColumn("component", F.col("id")).localCheckpoint()
-    sym = sym.localCheckpoint()
-
-    def _sig(df: DataFrame) -> tuple:
-        # labels decrease monotonically, so (count, hash-sum) unchanged
-        # <=> fixpoint; one aggregate on the checkpointed frame replaces
-        # the old join-with-previous + changed-count shuffle
-        r = df.agg(F.count(F.lit(1)).alias("n"),
-                   F.sum(F.xxhash64("id", "component")
-                         .cast("decimal(38,0)")).alias("h")).first()
-        return (r["n"], r["h"])
-
-    sig = _sig(labels)
-    for _ in range(max_iter):
-        # candidate label for each node: min label among its neighbors
-        neigh = (sym.join(labels.withColumnRenamed("id", "b"), "b")
-                 .groupBy("a").agg(F.min("component").alias("n_comp"))
-                 .withColumnRenamed("a", "id"))
-        labels = (labels.join(neigh, "id", "left")
-                  .select("id",
-                          F.least(F.col("component"),
-                                  F.coalesce(F.col("n_comp"),
-                                             F.col("component")))
-                          .alias("component"))
-                  .localCheckpoint())
-        new_sig = _sig(labels)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return labels
-
-
-def _contract(edges: DataFrame, src: str,
-              dst: str) -> tuple[DataFrame, DataFrame]:
-    """One hash-to-min round in the JVM: ``m(v) = min(v, min neighbour)``
-    for every vertex (self-loop-only vertices included), and the label
-    graph ``(least(m_a, m_b), greatest(m_a, m_b))`` over the edges whose
-    endpoints got different labels, deduplicated. Both ends of an edge
-    share a component, so the label graph has the same components as
-    the input, each one's minimum is its own label, and a vertex's
-    component is its label's component."""
-    # both directions of each edge out of one pass over ``edges``
-    sym = edges.select(F.explode(F.array(
-        F.struct(F.col(src).alias("id"), F.col(dst).alias("n")),
-        F.struct(F.col(dst).alias("id"), F.col(src).alias("n")))).alias("p"))
-    m = (sym.groupBy("p.id").agg(F.min("p.n").alias("n"))
-         .select("id", F.least("id", "n").alias("m")))
-    label = (edges.select(src, dst)
-             .join(m.select(F.col("id").alias(src),
-                            F.col("m").alias("_ma")), src)
-             .join(m.select(F.col("id").alias(dst),
-                            F.col("m").alias("_mb")), dst)
-             .select(F.least("_ma", "_mb").alias("src"),
-                     F.greatest("_ma", "_mb").alias("dst"))
-             .filter(F.col("src") != F.col("dst"))
-             .distinct())
-    return m, label
-
-
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 50,
-                         force_distributed: bool = False,
-                         driver_threshold: int | None = None,
-                         algorithm: str = "hashmin") -> DataFrame:
-    """Return (id, component) where component = min id reachable.
-
-    ``edges`` is undirected input (each pair listed once is enough).
-    The default path contracts first, then finishes on the label graph:
-    one hash-to-min round (``_contract``) runs in the JVM, a single
-    bounded ``take(threshold + 1)`` probes the label graph, and a label
-    graph within the cap finishes by driver union-find (its rows ARE the
-    union-find input). A larger one runs the distributed loop on the
-    label graph instead: hash-min, or large-star/small-star when
-    ``algorithm="twostar"`` (pick it when the component diameter may
-    exceed the iteration budget; alias graphs are shallow so hash-min
-    stays the default). Either way the answer is composed with the
-    contraction as ``coalesce(comp[m(v)], m(v))``, so the contraction
-    round is never wasted work. Every vertex of ``edges`` is labelled,
-    self-loop-only ones as singletons.
-
-    ``force_distributed=True`` skips contraction and the probe and runs
-    the chosen loop on the raw edges; it drops self-loop-only vertices.
-    """
-    thr = DRIVER_CC_THRESHOLD if driver_threshold is None \
-        else driver_threshold
-    if force_distributed:
-        if algorithm == "twostar":
-            return connected_components_twostar(edges, src, dst, max_iter)
-        return _hash_min(edges, src, dst, max_iter)
-    m, label = _contract(edges, src, dst)
-    head = label.take(thr + 1)
-    if len(head) <= thr:
-        comp = F.broadcast(_union_find(head, edges.sparkSession,
-                                       edges.schema[src].dataType))
-    elif algorithm == "twostar":
-        comp = connected_components_twostar(label, max_iter=max_iter)
-    else:
-        comp = _hash_min(label, "src", "dst", max_iter)
-    return (m.join(comp.withColumnRenamed("id", "m"), "m", "left")
-            .select("id", F.coalesce("component", "m").alias("component")))
 
 
 def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
@@ -312,7 +152,7 @@ def canonical_components(alias: pa.Table, spark) -> DataFrame:
     """(qid, canonical_id) for every qid of the alias dimension, given
     its ``(norm_alias, qid)`` columns collected as ``alias``.
 
-    The ``_contract`` round, in pyarrow: every row joins its alias's
+    One hash-to-min round, in pyarrow: every row joins its alias's
     star root (the alias's minimum qid), ``m(q)`` is the minimum root
     over q's aliases, and the label graph is the distinct (root, m(q))
     pairs with root != m(q). No Python object is made per alias row:

@@ -19,7 +19,9 @@ transcript input:
 - edge endpoint-existence gating + (src,pred,dst) dedup (reference
   db/db_connection.py:150-203);
 - canonical_id via connected components over the shares-an-alias graph
-  (union-find here; iterative hash-min CC in Spark).
+  (union-find here; in the engine a pyarrow contraction plus driver
+  union-find for ``canonical_id``, and the large-star/small-star Spark
+  loop for ``canonical_id_twostar``).
 
 Everything is plain pandas/re — no Spark import — so pytest and the DuckDB
 harness can run it standalone.

@@ -4,7 +4,7 @@ build_triples: transcripts --window sort--> statements (mapInPandas)
     --broadcast alias winners--> statement + claim triples --per-turn
     dedup--> triples. The resumable writer runs it per bucket, streaming
     per micro-batch.
-build_graph: triples --distinct ids + dims + hash-min CC--> nodes
+build_graph: triples --distinct ids + dims + driver CC map--> nodes
     --endpoint gating + dedup--> edges. The writer runs it at finalize.
 ``build_kg`` composes the two and adds the mention and linking layers.
 

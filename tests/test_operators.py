@@ -8,7 +8,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from memex_kg_spark.operators.canonicalize import salted_counts
-from memex_kg_spark.operators.components import connected_components
+from memex_kg_spark.operators.components import (
+    canonical_components,
+    connected_components_twostar,
+)
 from memex_kg_spark.operators.extraction import (
     extract_statements,
     extract_statements_sql,
@@ -44,6 +47,8 @@ def test_salted_counts_equals_plain(spark, sf_dir_smoke):
 def test_connected_components_fixture(spark):
     """F5 fixture: two components (ring of 4 + star with hot hub of 5),
     plus two singleton-free isolates via a bridge; golden labels = min id."""
+    import pyarrow as pa
+
     edges = [
         # ring: a-b-c-d-a
         ("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"),
@@ -57,14 +62,17 @@ def test_connected_components_fixture(spark):
         "h": "h", "x1": "h", "x2": "h", "x3": "h", "x4": "h",
         "y1": "h", "y2": "h",
     }
-    # distributed hash-min loop (the scale path)
+    # distributed large-star/small-star loop (the scale path)
     got_dist = {r["id"]: r["component"]
-                for r in connected_components(
-                    df, force_distributed=True).collect()}
+                for r in connected_components_twostar(df).collect()}
     assert got_dist == want
-    # driver union-find fast path (dimension-sized graphs)
-    got_drv = {r["id"]: r["component"]
-               for r in connected_components(df).collect()}
+    # canonical_map's driver build, each edge written as an alias that
+    # its two endpoints share
+    alias = pa.table({
+        "norm_alias": [f"e{i}" for i, e in enumerate(edges) for _ in e],
+        "qid": [v for e in edges for v in e]})
+    got_drv = {r["qid"]: r["canonical_id"]
+               for r in canonical_components(alias, spark).collect()}
     assert got_drv == want
 
 
@@ -121,36 +129,6 @@ def test_synth_edge_cases():
     assert texts.str.contains('"quoted"', regex=False).any()
     assert texts.str.contains("a\\b", regex=False).any()
     assert texts.str.contains("café", regex=False).any()
-
-
-def test_contracted_cc_job_count(spark):
-    """A graph past the driver cap whose label graph fits under it
-    finishes on the driver after one contraction round, in a bounded
-    number of jobs. The hash-min loop on the raw edges would need
-    several jobs per round, one round per hop of the hub chain."""
-    import pyarrow as pa
-
-    # 20 stars of 30 leaves each, hubs chained: 619 raw edges; the
-    # contraction folds each star into its hub, leaving 19 label edges
-    src, dst = [], []
-    for h in range(20):
-        for leaf in range(30):
-            src.append(f"h{h:02d}")
-            dst.append(f"l{h:02d}_{leaf:02d}")
-        if h:
-            src.append(f"h{h - 1:02d}")
-            dst.append(f"h{h:02d}")
-    edges = spark.createDataFrame(pa.table({"src": src, "dst": dst}))
-    sc = spark.sparkContext
-    sc.setJobGroup("cc-jobs", "contracted connected components")
-    try:
-        rows = connected_components(edges, driver_threshold=100).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    assert len(rows) == 620
-    assert {r["component"] for r in rows} == {"h00"}
-    jobs = sc.statusTracker().getJobIdsForGroup("cc-jobs")
-    assert 0 < len(jobs) <= 12, len(jobs)
 
 
 def test_canonical_map_follows_rewritten_dimension(spark, tmp_path):

@@ -136,19 +136,19 @@ def test_salted_counts_two_phase(spark, sf_dir_smoke):
 
 
 def test_cc_driver_finish_has_no_python_rdd(spark):
-    """The driver finish of connected components hands its union-find
-    result back as an Arrow local relation. A Python list would plan as
-    ``Scan ExistingRDD`` over pickled rows and leave a Python worker
-    pool running for the rest of the session."""
+    """``canonical_components`` hands its driver union-find result back
+    as an Arrow local relation. A Python list would plan as ``Scan
+    ExistingRDD`` over pickled rows and leave a Python worker pool
+    running for the rest of the session."""
     import pyarrow as pa
 
-    from memex_kg_spark.operators.components import connected_components
+    from memex_kg_spark.operators.components import canonical_components
 
-    edges = spark.createDataFrame(pa.table({
-        "src": ["q1", "q2", "q4", "q5", "q7"],
-        "dst": ["q2", "q3", "q5", "q6", "q7"]}))
-    cc = connected_components(edges)
-    got = {r["id"]: r["component"] for r in cc.collect()}
+    alias = pa.table({
+        "norm_alias": ["x", "x", "y", "y", "z", "z", "w", "w", "v"],
+        "qid": ["q1", "q2", "q2", "q3", "q4", "q5", "q5", "q6", "q7"]})
+    cc = canonical_components(alias, spark)
+    got = {r["qid"]: r["canonical_id"] for r in cc.collect()}
     assert got == {"q1": "q1", "q2": "q1", "q3": "q1", "q4": "q4",
                    "q5": "q4", "q6": "q4", "q7": "q7"}
     plan = _plan(cc)

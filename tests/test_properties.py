@@ -11,10 +11,11 @@ representative:
   strip pass removes — a genuine reference quirk we preserve for parity,
   pinned here rather than "fixed").
 - Connected components (reference grouping logic; SURVEY §2 G2): the
-  driver union-find, the distributed hash-min loop and the contracted
-  default path (driver finish or composed fallback) must agree with a
-  brute-force BFS on arbitrary graphs, and the representative must be
-  the component minimum (id stability across resumes depends on it).
+  driver union-find and the distributed large-star/small-star loop must
+  agree with a brute-force BFS on arbitrary graphs, ``canonical_map``'s
+  contraction-plus-union-find with the pandas oracle on arbitrary alias
+  dimensions, and the representative must be the component minimum (id
+  stability across resumes depends on it).
 - Upsert/MERGE (reference edit_story, db/db_connection.py:305-330):
   idempotent, last-writer-wins, and batch-composable — applying U1 then
   U2 equals applying the key-wise "U2 overrides U1" union once.
@@ -78,51 +79,44 @@ def _brute_components(pairs):
 
 
 @given(_edges)
+@settings(max_examples=200, deadline=None)
+def test_union_find_matches_bfs(pairs):
+    """The driver union-find, self-loops included: a pair (v, v)
+    registers v as a singleton."""
+    from memex_kg_spark.operators.components import _components
+
+    assert _components(pairs) == _brute_components(pairs)
+
+
+_alias_rows = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(min_value=0, max_value=11)
+                        .map(lambda i: f"a{i}")), _ids),
+    min_size=0, max_size=40)
+
+
+@given(_alias_rows)
 @_SPARK_SETTINGS
-def test_union_find_matches_bfs(spark, pairs):
-    from memex_kg_spark.operators.components import _union_find
+def test_canonical_components_matches_oracle(spark, rows):
+    """``canonical_map``'s build (one hash-to-min contraction in pyarrow,
+    then union-find over the label graph) equals the pandas oracle on
+    arbitrary alias dimensions: repeated rows, qids sharing several
+    aliases, and null aliases, whose rows link nothing."""
+    import pandas as pd
+    import pyarrow as pa
 
-    got = {r["id"]: r["component"]
-           for r in _union_find(pairs, spark).collect()}
-    assert got == _brute_components(pairs)
+    from memex_kg_spark.operators.components import canonical_components
+    from memex_kg_spark.oracle import reference_impl
 
-
-@given(_edges.map(lambda ps: [(a, b) for a, b in ps if a != b])
-       .filter(lambda ps: len(ps) > 0))
-@_SPARK_SETTINGS
-def test_distributed_cc_matches_bfs(spark, pairs):
-    """Self-loop-free inputs: the hash-min loop's symmetrize step drops
-    a==b pairs (a pure-self-loop node carries no grouping information in
-    the reference's alias graph), while the driver path keeps them as
-    singletons — both agree on every edge that can merge anything."""
-    from memex_kg_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame(pairs, ["src", "dst"])
-    # force the distributed hash-min path regardless of edge count
-    got = {r["id"]: r["component"]
-           for r in connected_components(edges, force_distributed=True)
-           .collect()}
-    assert got == _brute_components(pairs)
-
-
-@given(_edges)
-@_SPARK_SETTINGS
-def test_contracted_cc_matches_bfs(spark, pairs):
-    """The default path (one contraction round, then the label graph)
-    agrees with BFS on arbitrary graphs, self-loops included, whether
-    the label graph finishes on the driver (a cap no label graph can
-    exceed: it has at most one edge per input edge) or in the composed
-    distributed loop (a cap of 0, which only an empty label graph
-    fits)."""
-    from memex_kg_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame(pairs, "src string, dst string")
-    want = _brute_components(pairs)
-    for thr in (len(pairs), 0):
-        got = {r["id"]: r["component"]
-               for r in connected_components(edges, driver_threshold=thr)
-               .collect()}
-        assert got == want, thr
+    aliases = [a for a, _ in rows]
+    qids = [q for _, q in rows]
+    got = {r["qid"]: r["canonical_id"]
+           for r in canonical_components(
+               pa.table({"norm_alias": pa.array(aliases, pa.string()),
+                         "qid": pa.array(qids, pa.string())}),
+               spark).collect()}
+    want = reference_impl.connected_components(
+        pd.DataFrame({"norm_alias": aliases, "qid": qids}, dtype=object))
+    assert got == want
 
 
 @given(_edges.map(lambda ps: [(a, b) for a, b in ps if a != b])
@@ -143,12 +137,11 @@ def test_twostar_cc_matches_bfs(spark, pairs):
 
 def test_twostar_adversarial_diameter(spark):
     """A 64-node path (diameter 63) converges within the O(log n) round
-    budget where hash-min would need ~63 rounds — the r3-verdict
-    adversarial-diameter case for 100x corpora with chained aliases.
-    max_iter=10 >= ceil(log2(64)) + slack; hash-min at max_iter=10 is
-    provably NOT converged on the same graph (sanity-checked here)."""
+    budget where label propagation would need ~63 rounds — the
+    r3-verdict adversarial-diameter case for 100x corpora with chained
+    aliases. max_iter=10 >= ceil(log2(64)) + slack."""
     from memex_kg_spark.operators.components import (
-        connected_components, connected_components_twostar)
+        connected_components_twostar)
 
     n = 64
     pairs = [(f"q{i:03d}", f"q{i + 1:03d}") for i in range(n - 1)]
@@ -157,17 +150,6 @@ def test_twostar_adversarial_diameter(spark):
            for r in connected_components_twostar(edges, max_iter=10)
            .collect()}
     assert got == {f"q{i:03d}": "q000" for i in range(n)}
-    # the same budget leaves hash-min short on a diameter-63 graph
-    partial = {r["id"]: r["component"]
-               for r in connected_components(
-                   edges, force_distributed=True, max_iter=10).collect()}
-    assert any(v != "q000" for v in partial.values())
-    # and the public API dispatches to the round-efficient variant
-    via_api = {r["id"]: r["component"]
-               for r in connected_components(
-                   edges, force_distributed=True, max_iter=10,
-                   algorithm="twostar").collect()}
-    assert via_api == got
 
 
 def test_twostar_exhaustion_keeps_one_row_per_id(spark):
