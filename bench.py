@@ -45,7 +45,7 @@ def run_pipeline(spark, synth_path: str) -> dict:
     """Run the flagship KG build end-to-end; per-stage wall seconds.
 
     Single-pass plan, as production would run it: ``pipeline.build_kg``
-    with every fan-out persisted, so the extraction scan (mapInPandas
+    with every fan-out persisted, so the extraction scan (mapInArrow
     over transcripts) executes ONCE — statements feed the mentions/linking
     outputs AND the triple builder; triples feed nodes AND edges. Every
     extra pass over the fact table is a fixed cost a cluster-scale job
@@ -214,7 +214,7 @@ def _tagged(out: str, tag: str) -> str:
 def main() -> None:
     """Headline local[SPARK_GRAFT_CPUS] run (plus aux queries), then this
     run's local[N] vs local[4N] pair, N=BENCH_SCALE_N. The pair stays
-    small on purpose: every mapInPandas stage runs cores x Python workers
+    small on purpose: every Arrow UDF stage runs cores x Python workers
     IN ADDITION to the JVM task threads, so a level near the host's vCPU
     count measures oversubscription, not scaling. A level equal to the
     headline's reuses the headline measurement."""

@@ -8,7 +8,7 @@ canonicalization, graph materialization, graph/vector/text search — as
 declarative Spark DataFrame plans over partitioned parquet tables, designed
 for 1000-executor / 100 TB scale:
 
-- extraction is a vectorized ``mapInPandas`` stage over Arrow batches
+- extraction is one ``mapInArrow`` stage of pyarrow kernels over Arrow batches
   (replaces the per-record fetch loop, reference
   ingestion/recursive_hops_ingestion.py:135-164);
 - entity linking is a broadcast hash join against an alias dimension

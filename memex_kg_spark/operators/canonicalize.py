@@ -75,7 +75,7 @@ def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:
 
 
 def build_edges(triples: DataFrame, nodes: DataFrame,
-                pred_dim: DataFrame | None = None) -> DataFrame:
+                pred_dim: DataFrame) -> DataFrame:
     """Entity edges with endpoint-existence gating (reference J5) and
     (src,pred,dst) dedup (reference one-edge-per-claim, U3), carrying the
     multilingual label map the reference attaches to every edge
@@ -93,14 +93,9 @@ def build_edges(triples: DataFrame, nodes: DataFrame,
                 "dst", "left_semi")
           .select("src", "pred", "dst")
           .dropDuplicates(["src", "pred", "dst"]))
-    if pred_dim is not None:
-        loc = (pred_dim.select("pred", "pred_fr", "pred_pt", "pred_es")
-               .distinct())
-        e = e.join(F.broadcast(loc), "pred", "left")
-    else:
-        e = (e.withColumn("pred_fr", F.col("pred"))
-             .withColumn("pred_pt", F.col("pred"))
-             .withColumn("pred_es", F.col("pred")))
+    loc = (pred_dim.select("pred", "pred_fr", "pred_pt", "pred_es")
+           .distinct())
+    e = e.join(F.broadcast(loc), "pred", "left")
     labels = F.create_map(
         F.lit("en"), F.col("pred"),
         F.lit("fr"), F.coalesce("pred_fr", F.col("pred")),

@@ -157,13 +157,13 @@ def canonical_components(alias: pa.Table, spark) -> DataFrame:
     over q's aliases, and the label graph is the distinct (root, m(q))
     pairs with root != m(q). No Python object is made per alias row:
     union-find runs on the driver over the label graph, and each qid's
-    component is its label's. A row with a null alias joins nothing;
-    its qid maps to itself."""
+    component is its label's. A row with a null alias gets no star root,
+    as pyarrow's hash join never matches a null key, so it adds no label
+    pair; a qid with only null aliases maps to itself."""
     qids = alias.filter(pc.is_valid(alias["qid"]))
-    linked = qids.filter(pc.is_valid(qids["norm_alias"]))
-    root = linked.group_by("norm_alias").aggregate([("qid", "min")])
-    stars = linked.join(pa.table({"norm_alias": root["norm_alias"],
-                                  "root": root["qid_min"]}), "norm_alias")
+    root = qids.group_by("norm_alias").aggregate([("qid", "min")])
+    stars = qids.join(pa.table({"norm_alias": root["norm_alias"],
+                                "root": root["qid_min"]}), "norm_alias")
     m = stars.group_by("qid").aggregate([("root", "min")])
     m = pa.table({"qid": m["qid"], "m": m["root_min"]})
     label = stars.join(m, "qid")

@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline (the flagship plan), in two halves.
 
-build_triples: transcripts --window sort--> statements (mapInPandas)
+build_triples: transcripts --window sort--> statements (mapInArrow)
     --broadcast alias winners--> statement + claim triples --per-turn
     dedup--> triples. The resumable writer runs it per bucket, streaming
     per micro-batch.

@@ -22,15 +22,30 @@ from memex_kg_spark.synth.vocab import clean_label
 
 
 def test_pandas_vs_sql_extraction(spark, sf_dir_smoke):
-    """The mapInPandas stage and its whole-stage-codegen twin must agree
-    row-for-row (same statements, offsets, ordering keys)."""
-    tr = load_synth(spark, sf_dir_smoke)["transcripts"]
+    """The Arrow stage and its whole-stage-codegen twin must agree
+    row-for-row (same statements, offsets, ordering keys), on the corpus
+    and on hand-built edge cases: null, empty and dot-only text, a
+    trailing ". ", a last sentence with no period, multi-byte and astral
+    characters before a statement (offsets count code points), and a
+    partition without a single statement (an empty batch, exact schema).
+    No text ends in a newline: RE2's ``$`` does not match before one."""
+    edge_rows = [  # two slices: the first four rows hold no statement
+        ("e0", 0, None), ("e0", 1, ""), ("e0", 2, "..."), ("e0", 3, ". "),
+        ("e1", 0, "Paris adjoins Lyon. "),
+        ("e1", 1, "Hello there. Rome honors Milan"),
+        ("e1", 2, "Café 😀 東京. Zürich 😀 belongs to 東京 Tower."),
+        ("e1", 3, "Nothing here. Only noise, no claim."),
+    ]
+    edge = spark.createDataFrame(
+        spark.sparkContext.parallelize(edge_rows, 2),
+        "conv_id string, turn_idx int, text string")
     cols = ["conv_id", "turn_idx", "sent_idx", "subj_surface", "phrase",
             "obj_surface", "subj_start", "obj_start"]
-    a = extract_statements(tr).toPandas()[cols]
-    b = extract_statements_sql(tr).toPandas()[cols]
     key = lambda d: sorted(map(tuple, d.astype(str).values))  # noqa: E731
-    assert key(a) == key(b)
+    for tr in (load_synth(spark, sf_dir_smoke)["transcripts"], edge):
+        a = extract_statements(tr).toPandas()[cols]
+        b = extract_statements_sql(tr).toPandas()[cols]
+        assert key(a) == key(b)
 
 
 def test_salted_counts_equals_plain(spark, sf_dir_smoke):

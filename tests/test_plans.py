@@ -41,14 +41,14 @@ def test_linking_is_broadcast_join(spark, sf_dir_smoke):
 
 
 def test_extraction_stage_is_narrow(spark, sf_dir_smoke):
-    """mapInPandas over the scan must introduce NO shuffle."""
+    """mapInArrow over the scan must introduce NO shuffle."""
     from memex_kg_spark import pipeline
     from memex_kg_spark.operators.extraction import extract_statements
 
     d = pipeline.load_synth(spark, sf_dir_smoke)
     plan = _plan(extract_statements(d["transcripts"]))
     assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_statement_triples_fact_side_never_shuffles(spark, sf_dir_smoke):

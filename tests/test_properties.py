@@ -124,8 +124,8 @@ def test_canonical_components_matches_oracle(spark, rows):
 @_SPARK_SETTINGS
 def test_twostar_cc_matches_bfs(spark, pairs):
     """Large-star/small-star (Kiveris et al.) agrees with BFS ground
-    truth on arbitrary self-loop-free graphs — same contract as the
-    hash-min variant, diameter-independent round count."""
+    truth on arbitrary self-loop-free graphs — every node labelled with
+    its component's minimum id, in a diameter-independent round count."""
     from memex_kg_spark.operators.components import (
         connected_components_twostar)
 
@@ -157,7 +157,7 @@ def test_twostar_exhaustion_keeps_one_row_per_id(spark):
     parent-edge fixpoint, a node can still hold several parent edges;
     the final star join must not fan out into duplicate (id, component)
     rows — the one-row-per-id contract holds unconditionally (labels may
-    be pre-fixpoint, exactly like an exhausted hash-min loop)."""
+    be pre-fixpoint, as after any exhausted iteration budget)."""
     from memex_kg_spark.operators.components import (
         connected_components_twostar)
 
