@@ -129,9 +129,9 @@ def extra_queries() -> dict:
     }
 
 
-def extra_oracle_sql(sf: float = 0.01) -> dict:
+def extra_oracle_sql() -> dict:
     from ..synth.generator import synth_dir
-    p = synth_dir(sf)
+    p = synth_dir(0.01)
     return {
         "nhop_expand": sql_nhop(p),
         "text_embed_mean": SQL_TEXT_EMBED,

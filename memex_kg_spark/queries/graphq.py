@@ -104,9 +104,9 @@ def graph_queries() -> dict:
     }
 
 
-def graph_oracle_sql(sf: float = 0.01) -> dict:
+def graph_oracle_sql() -> dict:
     from ..synth.generator import synth_dir
-    p = synth_dir(sf)
+    p = synth_dir(0.01)
     return {
         "ppr_topk": sql_ppr_topk(p),
         "ppr_subgraph": sql_ppr_subgraph(p),

@@ -504,9 +504,9 @@ def kg_queries() -> dict:
     }
 
 
-def kg_oracle_sql(sf: float = 0.01) -> dict:
+def kg_oracle_sql() -> dict:
     from ..synth.generator import synth_dir
-    p = synth_dir(sf)
+    p = synth_dir(0.01)
     return {
         "kg_mentions": _wrap(p, """SELECT conv_id, turn_idx, mention_id,
             surface, norm_surface, "start", "end" FROM mentions"""),

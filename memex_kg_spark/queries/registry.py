@@ -7,8 +7,13 @@ non-SQL ops) get the weaker rows-only check.
 
 from __future__ import annotations
 
+from .extra import extra_oracle_sql, extra_queries
+from .graphq import graph_oracle_sql, graph_queries
 from .kg import kg_oracle_sql, kg_queries
 from .relational import relational_oracle_sql, relational_queries
+from .service import service_oracle_sql, service_queries
+from .textq import text_oracle_sql, text_queries
+from .vector import vector_oracle_sql, vector_queries
 
 DRIVER_ROW_BUDGET = 50  # the driver records at most this many
 # CORRECTNESS rows per round; every registered key must fit.
@@ -16,33 +21,10 @@ DRIVER_ROW_BUDGET = 50  # the driver records at most this many
 
 def all_queries() -> dict:
     out: dict = {}
-    out.update(kg_queries())
-    out.update(relational_queries())
-    try:
-        from .vector import vector_oracle_sql, vector_queries  # noqa: F401
-        out.update(vector_queries())
-    except ImportError:
-        pass
-    try:
-        from .textq import text_oracle_sql, text_queries  # noqa: F401
-        out.update(text_queries())
-    except ImportError:
-        pass
-    try:
-        from .graphq import graph_oracle_sql, graph_queries  # noqa: F401
-        out.update(graph_queries())
-    except ImportError:
-        pass
-    try:
-        from .extra import extra_oracle_sql, extra_queries  # noqa: F401
-        out.update(extra_queries())
-    except ImportError:
-        pass
-    try:
-        from .service import service_queries
-        out.update(service_queries())
-    except ImportError:
-        pass
+    for part in (kg_queries, relational_queries, vector_queries,
+                 text_queries, graph_queries, extra_queries,
+                 service_queries):
+        out.update(part())
     # The driver records AT MOST `DRIVER_ROW_BUDGET` CORRECTNESS rows per
     # round (r01/r02 both truncated at exactly 50). r2 overflowed to 63
     # keys and lost 13 rows; r3 consolidated related operators into
@@ -68,31 +50,8 @@ def all_oracle_sql() -> dict:
     from ..synth.generator import ensure_synth
     ensure_synth(0.01)
     out: dict = {}
-    out.update(kg_oracle_sql())
-    out.update(relational_oracle_sql())
-    try:
-        from .vector import vector_oracle_sql
-        out.update(vector_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from .textq import text_oracle_sql
-        out.update(text_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from .graphq import graph_oracle_sql
-        out.update(graph_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from .extra import extra_oracle_sql
-        out.update(extra_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from .service import service_oracle_sql
-        out.update(service_oracle_sql())
-    except ImportError:
-        pass
+    for part in (kg_oracle_sql, relational_oracle_sql, vector_oracle_sql,
+                 text_oracle_sql, graph_oracle_sql, extra_oracle_sql,
+                 service_oracle_sql):
+        out.update(part())
     return out

@@ -428,9 +428,9 @@ def service_queries() -> dict:
     }
 
 
-def service_oracle_sql(sf: float = 0.01) -> dict:
+def service_oracle_sql() -> dict:
     from ..synth.generator import synth_dir
-    p = synth_dir(sf)
+    p = synth_dir(0.01)
     return {
         "search_prefix": sql_search_prefix(p),
         "graph_modularity": sql_graph_modularity(p),

@@ -11,8 +11,11 @@ which keeps the per-turn dedup exact).
 ``trigger(availableNow=True)`` drains everything pending then stops —
 the incremental-batch deployment mode; a production stream would use a
 processingTime trigger against an Iceberg/Kafka source with the same
-foreachBatch body. Checkpointing gives exactly-once per micro-batch on
-top of the bucket-idempotent sink.
+foreachBatch body. The sink is idempotent per micro-batch: batch ``N``
+overwrites its own ``triples/batch_id=N/`` directory, so a batch that
+Spark replays after a crash between its write and its checkpoint commit
+replaces its first attempt instead of appending a second copy. Together
+with the checkpoint that gives exactly-once output per micro-batch.
 """
 
 from __future__ import annotations
@@ -22,9 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import pipeline
-
-TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
-                     "text string, tool string, ts timestamp")
+from ..synth.vocab import TRANSCRIPT_SCHEMA
 
 
 def run_incremental(spark: SparkSession, transcripts_dir: str,
@@ -36,8 +37,8 @@ def run_incremental(spark: SparkSession, transcripts_dir: str,
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         _, triples = pipeline.build_triples(batch_df, alias_dim, pred_dim)
-        (triples.write.mode("append")
-         .parquet(os.path.join(out_dir, "triples")))
+        (triples.write.mode("overwrite")
+         .parquet(os.path.join(out_dir, "triples", f"batch_id={epoch_id}")))
 
     stream = (spark.readStream
               .schema(TRANSCRIPT_SCHEMA)
@@ -52,4 +53,5 @@ def run_incremental(spark: SparkSession, transcripts_dir: str,
 
 
 def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "triples"))
+    return (spark.read.parquet(os.path.join(out_dir, "triples"))
+            .drop("batch_id"))

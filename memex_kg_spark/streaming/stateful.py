@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
-                     "text string, tool string, ts timestamp")
+from ..synth.vocab import TRANSCRIPT_SCHEMA
 
 
 def _update_counts(key: Any, pdfs: Iterator[pd.DataFrame],

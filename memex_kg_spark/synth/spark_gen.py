@@ -25,9 +25,7 @@ from .generator import (
     n_convs_for_sf,
     synth_dir,
 )
-
-TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
-                     "text string, tool string, ts timestamp")
+from .vocab import TRANSCRIPT_SCHEMA
 
 
 def ensure_synth_spark(spark: SparkSession, sf: float,

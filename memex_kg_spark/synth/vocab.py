@@ -27,6 +27,10 @@ N_ENTITIES = 400
 PLACE_FRACTION = 0.3  # entities with coordinates -> node_type 'Place'
 ZIPF_S = 1.1  # mention-frequency skew (hot landmarks/persons)
 
+# the transcript table (generated corpus, streaming sources)
+TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
+                     "text string, tool string, ts timestamp")
+
 # --- entity name pools (disjoint from PRED/NOISE words) -------------------
 ADJECTIVES = [
     "amber", "ancient", "azure", "bronze", "carved", "coastal", "crimson",

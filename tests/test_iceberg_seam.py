@@ -4,13 +4,16 @@ The sandbox has no Iceberg jar, so these tests drive the seam with a
 recording fake session and assert the exact DDL / DataFrameWriterV2 calls /
 MERGE statements a real catalog would receive, plus the writer's routing
 (catalog set -> every table op goes through the catalog, no parquet paths).
-The parquet shim's behavior is covered by the existing resume tests and is
-untouched when no catalog is configured.
+The parquet backend's behavior is covered by the resume tests; the two
+backends are held to one set of table calls by a signature check.
 """
+
+import inspect
 
 import pytest
 
 from memex_kg_spark.io.iceberg import IcebergTableIO
+from memex_kg_spark.io.parquet import ParquetTableIO
 
 
 class FakeResult:
@@ -49,8 +52,8 @@ class FakeDF:
     def createOrReplaceTempView(self, name):
         self.s.views[name] = self.label
 
-    def withColumn(self, name, col):
-        return FakeDF(self.s, f"{self.label}+{name}")
+    def selectExpr(self, *_):
+        return self
 
     # lineage-read chain used by committed_buckets
     def filter(self, _):
@@ -136,7 +139,7 @@ def test_ensure_tables_refuses_mismatched_bucket_count():
 def test_triples_bucket_goes_through_overwrite_partitions():
     s = FakeSpark()
     io = IcebergTableIO(s, "lake", "kg")
-    io.overwrite_triples_bucket(FakeDF(s))
+    io.overwrite_triples_bucket(3, FakeDF(s))
     assert ("overwritePartitions", "lake.kg.triples") in s.log
 
 
@@ -166,6 +169,23 @@ def test_merge_statements():
                        "_kg_cand_edges": "cand_edges"}
 
 
+def _public_methods(cls):
+    return {name: inspect.signature(fn)
+            for name, fn in inspect.getmembers(cls, inspect.isfunction)
+            if not name.startswith("_")}
+
+
+def test_backends_share_one_table_api():
+    """The writer calls its backend without knowing which one it holds,
+    so both must define the same public methods with the same
+    parameters."""
+    parquet, iceberg = (_public_methods(ParquetTableIO),
+                        _public_methods(IcebergTableIO))
+    assert sorted(parquet) == sorted(iceberg)
+    for name, sig in parquet.items():
+        assert list(sig.parameters) == list(iceberg[name].parameters), name
+
+
 def test_writer_routes_through_catalog(tmp_path):
     """ResumableKGWriter(catalog=...) must touch the catalog, never the
     parquet paths, for lineage commit / lineage read / triples read."""
@@ -175,7 +195,7 @@ def test_writer_routes_through_catalog(tmp_path):
     w = ResumableKGWriter(fake, synth_path="unused",
                           out_root=str(tmp_path / "kg"),
                           n_buckets=8, catalog="lake")
-    assert w.ice is not None
+    assert isinstance(w.io, IcebergTableIO)
     # constructor already issued the DDL
     assert any("CREATE TABLE IF NOT EXISTS lake.kg.triples" in q
                for q in sqls(fake))
@@ -198,12 +218,12 @@ def test_env_var_selects_catalog(tmp_path, monkeypatch):
     fake = FakeSpark()
     w = ResumableKGWriter(fake, synth_path="unused",
                           out_root=str(tmp_path / "kg"), n_buckets=8)
-    assert w.ice is not None and w.ice.catalog == "lake"
+    assert isinstance(w.io, IcebergTableIO) and w.io.catalog == "lake"
     monkeypatch.delenv("MEMEX_KG_CATALOG")
-    # default: parquet shim — no catalog traffic, meta file pinned on disk
+    # default: parquet backend — no catalog traffic, meta file pinned on disk
     w2 = ResumableKGWriter(fake, synth_path="unused",
                            out_root=str(tmp_path / "kg2"), n_buckets=8)
-    assert w2.ice is None
+    assert isinstance(w2.io, ParquetTableIO)
     assert (tmp_path / "kg2" / "_KG_META.json").exists()
 
 

@@ -172,6 +172,20 @@ def test_streaming_equals_batch(spark, sf_dir_smoke, batch_triples):
         n_before = streamed_triples(spark, out).count()
         run_incremental(spark, src_dir, sf_dir_smoke, out, ckpt)
         assert streamed_triples(spark, out).count() == n_before
+
+        # crash after the last batch's write, before its checkpoint
+        # commit: Spark replays that batch, and the sink must replace
+        # the batch's output rather than append a second copy
+        last = max(int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
+                   if f.isdigit())
+        assert last >= 1  # several micro-batches fired
+        os.remove(os.path.join(ckpt, "commits", str(last)))
+        crc = os.path.join(ckpt, "commits", f".{last}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        run_incremental(spark, src_dir, sf_dir_smoke, out, ckpt)
+        assert streamed_triples(spark, out).count() == n_before
+        assert _triple_set(streamed_triples(spark, out)) == batch_triples
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -192,7 +206,7 @@ def test_committed_buckets_reraises_transient_errors(spark, sf_dir_smoke):
 
         # corrupt the lineage dir so the read fails while the path
         # EXISTS: a stand-in for any transient FS/catalog read error
-        lp = w.lineage_path
+        lp = w.io.lineage_path
         shutil.rmtree(lp)
         os.makedirs(lp)
         with open(os.path.join(lp, "part-corrupt.parquet"), "w") as f:
@@ -215,13 +229,13 @@ def test_lineage_compaction_preserves_resume(spark, sf_dir_smoke):
         w.run()  # default min_files=16 > 6: no compaction yet
         before = w.committed_buckets()
         assert before == set(range(6))
-        n_files = len(glob.glob(os.path.join(w.lineage_path, "part-*")))
+        n_files = len(glob.glob(os.path.join(w.io.lineage_path, "part-*")))
         assert n_files >= 6
 
         removed = w.compact_lineage(min_files=2)
         assert removed == n_files
         assert len(glob.glob(
-            os.path.join(w.lineage_path, "part-*"))) == 1
+            os.path.join(w.io.lineage_path, "part-*"))) == 1
         assert w.committed_buckets() == before
 
         w2 = ResumableKGWriter(spark, sf_dir_smoke, tmp, n_buckets=6,
@@ -280,7 +294,7 @@ def test_lineage_with_only_temporary_is_missing(spark, sf_dir_smoke):
     try:
         w = ResumableKGWriter(spark, sf_dir_smoke, tmp, n_buckets=6,
                               run_id="crashed")
-        attempt = os.path.join(w.lineage_path, "_temporary", "0",
+        attempt = os.path.join(w.io.lineage_path, "_temporary", "0",
                                "_temporary", "attempt_0")
         os.makedirs(attempt)
         with open(os.path.join(attempt, "part-00000.parquet"), "w") as f:
