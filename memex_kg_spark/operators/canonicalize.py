@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import canonical_map
-
 
 def salted_counts(df: DataFrame, key: str, n_salts: int = 16,
                   out: str = "n") -> DataFrame:
@@ -38,7 +36,8 @@ def salted_counts(df: DataFrame, key: str, n_salts: int = 16,
 def entity_dim(alias_dim: DataFrame) -> DataFrame:
     """One row per qid with its canonical attributes (the dimension is
     alias-grained; entity attributes repeat per alias, so the first row
-    per qid is exact, not arbitrary). One derivative of the alias
+    per qid is exact, not arbitrary) and its ``canonical_id`` (the min
+    qid of its shares-an-alias component). One derivative of the alias
     dimension's session memo (``memo.alias_part``), taken from the
     driver's Arrow copy of the dimension."""
     from .memo import alias_part
@@ -48,13 +47,14 @@ def entity_dim(alias_dim: DataFrame) -> DataFrame:
 
 def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:
     """Nodes = every qid appearing as a subject or entity-typed object,
-    joined to the entity dimension, with canonical_id from the alias
-    graph's connected components (``components.canonical_map``: a
-    pyarrow contraction plus union-find on the driver) and the dynamic
-    property map (SURVEY §1.3: the reference spills every
-    harvested property/value pair onto the node,
-    db/db_connection.py:102-148; here ``props map<string,string>`` built
-    from the aligned prop_keys/prop_vals arrays).
+    joined to the one broadcast entity dimension, which carries the
+    canonical_id from the alias graph's connected components
+    (``components.canonical_components``: a pyarrow contraction plus
+    union-find on the driver), and the dynamic property map (SURVEY
+    §1.3: the reference spills every harvested property/value pair onto
+    the node, db/db_connection.py:102-148; here ``props
+    map<string,string>`` built from the aligned prop_keys/prop_vals
+    arrays).
 
     The triple side reduces to a distinct id set BEFORE any join — the
     only shuffle is on the (small) distinct ids, never on raw triples.
@@ -64,10 +64,7 @@ def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:
            .union(triples.filter(F.col("obj_type") == "entity")
                   .select(F.col("obj").alias("qid")))
            .distinct())
-    dim = entity_dim(alias_dim)
-    canon = canonical_map(alias_dim)
-    return (ids.join(F.broadcast(dim), "qid")
-            .join(F.broadcast(canon), "qid")
+    return (ids.join(F.broadcast(entity_dim(alias_dim)), "qid")
             .select("qid", "label", "node_type", "lat", "lon",
                     "canonical_id",
                     F.map_from_arrays("prop_keys", "prop_vals")

@@ -7,14 +7,15 @@ canonical cluster whose id is the minimum qid of the component.
 
 Two builds compute it, each where its input already lives:
 
-- ``canonical_components`` (behind ``canonical_map``, so behind every
-  node's ``canonical_id``) runs on the driver during set-up, over the
-  one Arrow copy of the dimension the driver holds to derive every
-  broadcast side (``memo.alias_part``). One hash-to-min round in pyarrow
-  (the local contraction of Łącki et al., "Connected Components at Scale
-  via Local Contractions", 2018) folds each alias star into its minimum
-  qid; union-find finishes the much smaller label graph. Nothing bounds
-  it but the collection of the whole dimension.
+- ``canonical_components`` (every node's ``canonical_id``, a column of
+  the entity rows that ``canonical_map`` projects) runs on the driver
+  during set-up, over the one Arrow copy of the dimension the driver
+  holds to derive every broadcast side (``memo.alias_part``), and
+  returns Arrow. One hash-to-min round in pyarrow (the local
+  contraction of Łącki et al., "Connected Components at Scale via Local
+  Contractions", 2018) folds each alias star into its minimum qid;
+  union-find finishes the much smaller label graph. Nothing bounds it
+  but the collection of the whole dimension.
 - ``connected_components_twostar`` is the distributed loop:
   large-star/small-star (Kiveris et al., "Connected Components in
   MapReduce and Beyond", SoCC'14) as DataFrame self-joins, the edge set
@@ -148,7 +149,7 @@ def alias_component_edges(alias_dim: DataFrame) -> DataFrame:
             .distinct())
 
 
-def canonical_components(alias: pa.Table, spark) -> DataFrame:
+def canonical_components(alias: pa.Table) -> pa.Table:
     """(qid, canonical_id) for every qid of the alias dimension, given
     its ``(norm_alias, qid)`` columns collected as ``alias``.
 
@@ -173,21 +174,22 @@ def canonical_components(alias: pa.Table, spark) -> DataFrame:
                            label["m"].to_pylist()))
     ids = pa.table({"qid": pc.unique(qids["qid"])}).join(
         m, "qid", join_type="left outer")
-    return spark.createDataFrame(pa.table({
+    return pa.table({
         "qid": ids["qid"],
         "canonical_id": pa.array(
             [comp.get(x, x) for x in
              pc.coalesce(ids["m"], ids["qid"]).to_pylist()],
-            ids.schema.field("qid").type)}))
+            ids.schema.field("qid").type)})
 
 
 def canonical_map(alias_dim: DataFrame) -> DataFrame:
     """qid -> canonical_id (min qid of the shares-an-alias component);
-    singleton entities map to themselves. One derivative of the alias
-    dimension's session memo (``memo.alias_part``), built by
-    ``canonical_components`` from the driver's Arrow copy and keyed on
-    the plan AND the source files, so a dimension regenerated in place
-    gets a fresh map."""
-    from .memo import alias_part
+    singleton entities map to themselves. A projection of
+    ``canonicalize.entity_dim``, whose ``canonical_id`` column
+    ``canonical_components`` builds from the driver's Arrow copy of the
+    dimension (``memo.alias_part``), keyed on the plan AND the source
+    files, so a dimension regenerated in place gets a fresh map. It runs
+    no job of its own."""
+    from .canonicalize import entity_dim
 
-    return alias_part(alias_dim, "canonical")
+    return entity_dim(alias_dim).select("qid", "canonical_id")

@@ -9,8 +9,7 @@ The reference cleans each Europeana JSON record imperatively
   then UNCONDITIONALLY overwrite with ``""`` — the ``n[k] = ""`` at
   europeana_ingestion_places.py:92 sits outside the ``"def" in v`` guard,
   so every dict-typed value ends up empty. That literal behavior is
-  reproduced here (and pinned by the oracle); the intended def-flatten is
-  ``flatten_def_intended`` for callers who want the fix.
+  reproduced here (and pinned by the oracle).
 - lat/lon folding: when both edmPlaceLatitude/edmPlaceLongitude parse and
   pass ``valid_latlon`` (ingestion/utils.py:71-81: -90<=lat<=90,
   -180<=lon<=180), they fold into ``coordinate_location`` and the raw
@@ -46,12 +45,6 @@ def flatten_def_reference(col: Column) -> Column:
     ``n[k] = ""`` at europeana_ingestion_places.py:92 clobbers the def
     extraction two lines above it)."""
     return F.when(col.isNotNull(), F.lit("")).otherwise(F.lit(""))
-
-
-def flatten_def_intended(col: Column) -> Column:
-    """dict -> first of its ``def`` entry — what :85-91 meant to do.
-    ``col`` is a map<string,array<string>>."""
-    return F.element_at(F.element_at(col, "def"), 1)
 
 
 def clean_records(records: DataFrame) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..synth.vocab import STATEMENT_PATTERN
+from .linking import alias_winners
 
 _GROUPS = ("subj_surface", "phrase", "obj_surface")
 STATEMENT_SCHEMA = pa.schema(
@@ -131,10 +132,10 @@ def statements_to_mentions(statements: DataFrame,
         )).alias("s"),
     ).select("conv_id", "turn_idx", "s.surface", "s.start")
     slots = slots.withColumn("norm_surface", F.lower("surface"))
-    from .memo import alias_part
-    # the alias gate is the dimension's distinct aliases, a memoized
-    # derivative of the dimension, so it costs no job per run
-    gate = alias_part(alias_dim, "gate")
+    # the alias gate is the dimension's distinct aliases: the memoized
+    # winners' key column, so it costs no job per run
+    gate = alias_winners(alias_dim).select(
+        F.col("norm_alias").alias("norm_surface"))
     gated = slots.join(F.broadcast(gate), "norm_surface", "left_semi")
     from pyspark.sql import Window as W
     w = W.partitionBy("conv_id", "turn_idx").orderBy("start", "surface")

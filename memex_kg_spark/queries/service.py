@@ -383,8 +383,10 @@ def q_stream_conv_counts(spark, sf_dir):
     """Per-conversation turn totals computed by the applyInPandasWithState
     streaming operator (streaming/stateful.py) draining the transcript
     corpus in 3 micro-batches — the cross-batch state path, with a plain
-    batch GROUP BY as the oracle. Input split + checkpoints live under
-    the synth dir; the split is idempotent."""
+    batch GROUP BY as the oracle. The input split lives under the synth
+    dir and is idempotent; the streaming checkpoint is a temp dir removed
+    once the query has drained (the result reads the memory sink)."""
+    import shutil
     import tempfile
     import uuid
     from ..streaming.stateful import conv_turn_counts_stateful
@@ -403,9 +405,12 @@ def q_stream_conv_counts(spark, sf_dir):
             fh.write("ok")
     ck = tempfile.mkdtemp(prefix="kg_stream_ck_")
     name = "conv_counts_" + uuid.uuid4().hex[:8]
-    return (conv_turn_counts_stateful(spark, stream_in, ck,
-                                      query_name=name)
-            .orderBy("conv_id"))
+    try:
+        return (conv_turn_counts_stateful(spark, stream_in, ck,
+                                          query_name=name)
+                .orderBy("conv_id"))
+    finally:
+        shutil.rmtree(ck, ignore_errors=True)
 
 
 def _sql_stream_conv_counts(p: str) -> str:

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from memex_kg_spark.operators.canonicalize import salted_counts
@@ -62,8 +63,6 @@ def test_salted_counts_equals_plain(spark, sf_dir_smoke):
 def test_connected_components_fixture(spark):
     """F5 fixture: two components (ring of 4 + star with hot hub of 5),
     plus two singleton-free isolates via a bridge; golden labels = min id."""
-    import pyarrow as pa
-
     edges = [
         # ring: a-b-c-d-a
         ("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"),
@@ -86,9 +85,9 @@ def test_connected_components_fixture(spark):
     alias = pa.table({
         "norm_alias": [f"e{i}" for i, e in enumerate(edges) for _ in e],
         "qid": [v for e in edges for v in e]})
-    got_drv = {r["qid"]: r["canonical_id"]
-               for r in canonical_components(alias, spark).collect()}
-    assert got_drv == want
+    cc = canonical_components(alias)
+    assert dict(zip(cc["qid"].to_pylist(),
+                    cc["canonical_id"].to_pylist())) == want
 
 
 def test_haversine_known_value(spark):
@@ -146,6 +145,28 @@ def test_synth_edge_cases():
     assert texts.str.contains("café", regex=False).any()
 
 
+_ALIAS_SCHEMA = pa.schema([
+    ("norm_alias", pa.string()), ("qid", pa.string()), ("label", pa.string()),
+    ("node_type", pa.string()), ("prior", pa.float64()),
+    ("lat", pa.float64()), ("lon", pa.float64()),
+    ("prop_keys", pa.list_(pa.string())), ("prop_vals", pa.list_(pa.string())),
+])
+
+
+def _write_alias_dim(df: pd.DataFrame, path: str) -> None:
+    """Write ``df`` as a nine-column alias dimension (the schema
+    ``load_synth`` reads), filling in the columns it lacks."""
+    import pyarrow.parquet as pq
+
+    fill = {"label": df["qid"].str.lower(), "node_type": "Knowledge",
+            "prior": 1.0, "lat": None, "lon": None,
+            "prop_keys": [[]] * len(df), "prop_vals": [[]] * len(df)}
+    df = df.assign(**{c: v for c, v in fill.items() if c not in df})
+    pq.write_table(pa.Table.from_pandas(df[_ALIAS_SCHEMA.names],
+                                        schema=_ALIAS_SCHEMA,
+                                        preserve_index=False), path)
+
+
 def test_canonical_map_follows_rewritten_dimension(spark, tmp_path):
     """A dimension rewritten in place under the same path and plan gets
     a fresh canonical map in the same session: the memo key includes
@@ -155,9 +176,9 @@ def test_canonical_map_follows_rewritten_dimension(spark, tmp_path):
     path = str(tmp_path / "alias_dim.parquet")
 
     def write(groups):
-        pd.DataFrame(
+        _write_alias_dim(pd.DataFrame(
             [(f"a{i}", q) for i, qs in enumerate(groups) for q in qs],
-            columns=["norm_alias", "qid"]).to_parquet(path, index=False)
+            columns=["norm_alias", "qid"]), path)
         return {r["qid"]: r["canonical_id"]
                 for r in canonical_map(spark.read.parquet(path)).collect()}
 
@@ -179,10 +200,10 @@ def test_alias_winners_follow_rewritten_dimension(spark, tmp_path):
     path = str(tmp_path / "alias_dim.parquet")
 
     def write(priors):
-        pd.DataFrame(
+        _write_alias_dim(pd.DataFrame(
             [("paris", q, q.lower(), "place", p) for q, p in priors.items()],
-            columns=["norm_alias", "qid", "label", "node_type", "prior"],
-        ).to_parquet(path, index=False)
+            columns=["norm_alias", "qid", "label", "node_type", "prior"]),
+            path)
         return {r["norm_alias"]: r["qid"]
                 for r in alias_winners(spark.read.parquet(path)).collect()}
 
@@ -248,12 +269,13 @@ def test_dim_memo_builds_once_under_concurrent_misses():
 
 
 def test_alias_dims_setup_job_count(spark, sf_dir_smoke, tmp_path):
-    """Set-up (the alias dimension's five broadcast derivatives) issues
-    a bounded number of Spark jobs, a count host noise cannot move: one
+    """Set-up (the alias dimension's three broadcast derivatives) issues
+    a fixed number of Spark jobs, a count host noise cannot move: one
     Arrow collection and one checkpoint per derivative handed back (the
-    gate is a projection of the winners), 5 in all; 21-23 when each
-    derivative was its own Spark plan. A second round issues none. The
-    dimension is copied so the memo starts cold."""
+    mention gate is a projection of the winners, the canonical map one
+    of the entity rows), 4 in all; 21-23 when each derivative was its
+    own Spark plan. A second round issues none. The dimension is copied
+    so the memo starts cold."""
     import shutil
 
     from memex_kg_spark import pipeline
@@ -281,7 +303,7 @@ def test_alias_dims_setup_job_count(spark, sf_dir_smoke, tmp_path):
             sc.setJobGroup(None, None)
         return sc.statusTracker().getJobIdsForGroup(group)
 
-    assert 0 < len(setup_jobs("alias-setup-cold")) <= 6
+    assert len(setup_jobs("alias-setup-cold")) == 4
     assert setup_jobs("alias-setup-warm") == []
 
 
@@ -310,7 +332,7 @@ def _adversarial_alias_dim() -> pd.DataFrame:
 def test_alias_dims_match_oracle(spark, tmp_path):
     """The driver derivation of winners, entity rows, claim props and the
     canonical map agrees with ``reference_impl`` on an adversarial
-    dimension, and a dimension of aliases alone still gates mentions."""
+    dimension, and the winners' aliases gate mentions."""
     from memex_kg_spark import pipeline
     from memex_kg_spark.operators.canonicalize import entity_dim
     from memex_kg_spark.operators.components import canonical_map
@@ -355,12 +377,10 @@ def test_alias_dims_match_oracle(spark, tmp_path):
     assert {r["qid"]: r["canonical_id"]
             for r in canonical_map(alias).collect()} == expected
 
-    only = str(tmp_path / "aliases_only.parquet")
-    dim[["norm_alias"]].to_parquet(only, index=False)
     mentions = statements_to_mentions(spark.createDataFrame(pd.DataFrame(
         {"conv_id": ["c"], "turn_idx": [0], "subj_surface": ["Tie"],
          "subj_start": [0], "obj_surface": ["nobody"], "obj_start": [8]})),
-        spark.read.parquet(only))
+        alias)
     assert [r["norm_surface"] for r in mentions.collect()] == ["tie"]
 
 

@@ -6,9 +6,10 @@ Each test pins a property that matters at 100 TB:
 - the extraction stage is narrow (no Exchange anywhere in its plan);
 - top-k queries plan as TakeOrderedAndProject (no global sort);
 - parquet scans get filters pushed down and columns pruned;
-- the connected-components driver finish hands its result back without
-  a pickled Python RDD;
-- each flagship layer adds a fixed number of shuffles.
+- the alias dimension's driver-built sides, canonical ids included, are
+  handed back without a pickled Python RDD;
+- each flagship layer adds a fixed number of shuffles, and a warm build
+  a fixed number of jobs.
 """
 
 from __future__ import annotations
@@ -91,6 +92,37 @@ def test_shuffles_per_layer(spark, sf_dir_smoke):
                         "triples": 2, "nodes": 1, "edges": 2}
 
 
+def test_jobs_per_warm_build(spark, sf_dir_smoke):
+    """Spark jobs per warm flagship build, a counter host noise cannot
+    move. One untimed build warms the session's dimension memos; the
+    counted build then persists each fan-out, writes every output to a
+    noop sink and unpersists, as each perfbench build does: 27 jobs."""
+    from memex_kg_spark import pipeline
+
+    sc = spark.sparkContext
+
+    def build_jobs(group):
+        kept = []
+
+        def keep(df):
+            kept.append(df.persist())
+            return kept[-1]
+
+        sc.setJobGroup(group, "flagship build")
+        try:
+            kg = pipeline.build_kg(spark, sf_dir_smoke, keep=keep)
+            for k in ("linked_mentions", "triples", "nodes", "edges"):
+                kg[k].write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(None, None)
+            for df in kept:
+                df.unpersist()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    build_jobs("flagship-build-untimed")
+    assert build_jobs("flagship-build-warm") == 27
+
+
 def test_topk_plans_take_ordered(spark, testdata_sf001):
     """ORDER BY + LIMIT must plan as TakeOrderedAndProject — the
     inconsistently-pushed-down LIMIT of the reference (db/db_search.py:237
@@ -135,22 +167,50 @@ def test_salted_counts_two_phase(spark, sf_dir_smoke):
     assert "_salt" in plan
 
 
-def test_cc_driver_finish_has_no_python_rdd(spark):
-    """``canonical_components`` hands its driver union-find result back
+def test_cc_driver_finish_has_no_python_rdd(spark, monkeypatch):
+    """``canonical_components`` returns Arrow, and ``_alias_parts`` hands
+    every broadcast side, the canonical ids among the entity rows, back
     as an Arrow local relation. A Python list would plan as ``Scan
     ExistingRDD`` over pickled rows and leave a Python worker pool
-    running for the rest of the session."""
+    running for the rest of the session. The plans are read as each
+    side is checkpointed, as a checkpointed frame plans as a scan of
+    its RDD."""
     import pyarrow as pa
 
     from memex_kg_spark.operators.components import canonical_components
+    from memex_kg_spark.operators.memo import _alias_parts
 
     alias = pa.table({
         "norm_alias": ["x", "x", "y", "y", "z", "z", "w", "w", "v"],
         "qid": ["q1", "q2", "q2", "q3", "q4", "q5", "q5", "q6", "q7"]})
-    cc = canonical_components(alias, spark)
-    got = {r["qid"]: r["canonical_id"] for r in cc.collect()}
-    assert got == {"q1": "q1", "q2": "q1", "q3": "q1", "q4": "q4",
-                   "q5": "q4", "q6": "q4", "q7": "q7"}
-    plan = _plan(cc)
-    assert "LocalTableScan" in plan
-    assert "ExistingRDD" not in plan
+    cc = canonical_components(alias)
+    got = dict(zip(cc["qid"].to_pylist(), cc["canonical_id"].to_pylist()))
+    want = {"q1": "q1", "q2": "q1", "q3": "q1", "q4": "q4", "q5": "q4",
+            "q6": "q4", "q7": "q7"}
+    assert got == want
+
+    n = alias.num_rows
+    no_props = pa.array([[]] * n, pa.list_(pa.string()))
+    dim = spark.createDataFrame(pa.table({
+        "norm_alias": alias["norm_alias"], "qid": alias["qid"],
+        "label": alias["qid"], "node_type": pa.array(["Knowledge"] * n),
+        "prior": pa.array([1.0] * n), "lat": pa.nulls(n, pa.float64()),
+        "lon": pa.nulls(n, pa.float64()), "prop_keys": no_props,
+        "prop_vals": no_props}))
+    plans = []
+    cls = type(dim)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    parts = _alias_parts(dim)
+    monkeypatch.undo()
+    assert sorted(parts) == ["entity", "props", "winners"]
+    assert len(plans) == 3
+    assert all("LocalTableScan" in p and "ExistingRDD" not in p
+               for p in plans)
+    assert {r["qid"]: r["canonical_id"]
+            for r in parts["entity"].collect()} == want

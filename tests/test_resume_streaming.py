@@ -360,3 +360,18 @@ def test_finalize_crash_between_nodes_and_edges_converges(
         got_rows = _graph_rows(got, want.columns)
         assert len(set(got_rows)) == len(got_rows)
         assert got_rows == _graph_rows(want, want.columns)
+
+
+def test_kg_resume_triples_raises_when_resume_skips_nothing(
+        spark, testdata_sf001, tmp_path, monkeypatch):
+    """``q_kg_resume_triples`` checks with a raising check, which
+    ``python -O`` keeps, that the resumed writer skipped the 2 committed
+    buckets: a resume that reports none skipped fails the query."""
+    from memex_kg_spark.queries.kg import q_kg_resume_triples
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(ResumableKGWriter, "run",
+                        lambda self, fail_after=None: {"skipped": 0})
+    with pytest.raises(RuntimeError, match="skipped 0 committed buckets"):
+        q_kg_resume_triples(spark, testdata_sf001)
+    assert list(tmp_path.glob("kg_resume_wh_*")) == []

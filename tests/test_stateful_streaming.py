@@ -55,3 +55,21 @@ def test_windowed_stream_equals_batch(spark, testdata_sf001, tmp_path):
     gset, wset = key(got), key(want)
     assert set(gset) <= set(wset)
     assert len(gset) >= 0.9 * len(wset)
+
+
+def test_stream_conv_counts_removes_its_checkpoint(spark, testdata_sf001,
+                                                    tmp_path, monkeypatch):
+    """``q_stream_conv_counts`` removes its temp streaming checkpoint once
+    the query has drained; its result reads the memory sink, so it still
+    holds every turn afterwards."""
+    import tempfile
+
+    from memex_kg_spark.queries.kg import synth_for
+    from memex_kg_spark.queries.service import q_stream_conv_counts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    counts = q_stream_conv_counts(spark, testdata_sf001)
+    assert list(tmp_path.glob("kg_stream_ck_*")) == []
+    n_turns = spark.read.parquet(
+        f"{synth_for(testdata_sf001)}/transcripts.parquet").count()
+    assert counts.agg(F.sum("n_turns")).first()[0] == n_turns
