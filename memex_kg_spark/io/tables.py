@@ -106,10 +106,14 @@ class ResumableKGWriter:
         separate jobs (r3 verdict: the old input-count + written-re-read
         pattern cost two extra full scans per bucket — thousands of
         redundant scans at warehouse scale). Exactly-once metric
-        semantics: ``build_triples`` persists statements through ``keep``,
-        and the claim branch's distinct shuffle is a parent stage of the
-        union stage, so the observed transcript scan executes exactly once
-        (the statement-triples branch reads the cache, never the scan).
+        semantics: the observed transcript scan sits only under the
+        statements that ``build_triples`` persists through ``keep``
+        (memory and disk, so an evicted block spills, never recomputes).
+        Both union branches of the triples read that cache, and the block
+        manager computes each cached partition once: a task asking for a
+        block another task is still writing waits and reads it. So the
+        scan executes exactly once per partition
+        (``test_concurrent_run_matches_sequential`` sums ``rows_in``).
 
         The bucket overwrites its own partition, so concurrent bucket
         writers never share staging files and a re-run cleanly replaces

@@ -13,7 +13,7 @@ claim, db/db_connection.py:150-203) with set-oriented Spark plans:
   the salted form is the general pattern for aggs without partials, and
   pipeline metrics use it so the path is exercised and tested.)
 - ``build_nodes`` / ``build_edges``: distinct + broadcast dimension join +
-  endpoint semi-join gating, deduped on (src, pred, dst).
+  endpoint semi-join gating, one dedup shuffle each.
 """
 
 from __future__ import annotations
@@ -73,13 +73,13 @@ def build_nodes(triples: DataFrame, alias_dim: DataFrame) -> DataFrame:
 
 def build_edges(triples: DataFrame, nodes: DataFrame,
                 pred_dim: DataFrame) -> DataFrame:
-    """Entity edges with endpoint-existence gating (reference J5) and
-    (src,pred,dst) dedup (reference one-edge-per-claim, U3), carrying the
+    """Entity edges with endpoint-existence gating (reference J5) and the
     multilingual label map the reference attaches to every edge
-    (``{en,fr,pt,es}``, db/db_connection.py:189-200). Locale labels come
-    from a broadcast join against the predicate dimension; predicates
-    without a locale row (claim-derived preds) fall back to the English
-    label, per reference recursive_hops_ingestion.py:50-51."""
+    (``{en,fr,pt,es}``, db/db_connection.py:189-200), from a broadcast
+    left join against the predicate dimension (no locale row: English
+    fallback, per reference recursive_hops_ingestion.py:50-51). One
+    ``distinct`` then keeps each (src,pred,dst) (reference one-edge-per-claim,
+    U3) once per distinct locale row of its pred."""
     e = (triples.filter(F.col("obj_type") == "entity")
          .select(F.col("subj").alias("src"), "pred",
                  F.col("obj").alias("dst")))
@@ -88,11 +88,9 @@ def build_edges(triples: DataFrame, nodes: DataFrame,
                 "src", "left_semi")
           .join(F.broadcast(node_ids.withColumnRenamed("qid", "dst")),
                 "dst", "left_semi")
-          .select("src", "pred", "dst")
-          .dropDuplicates(["src", "pred", "dst"]))
-    loc = (pred_dim.select("pred", "pred_fr", "pred_pt", "pred_es")
-           .distinct())
-    e = e.join(F.broadcast(loc), "pred", "left")
+          .join(F.broadcast(pred_dim.select("pred", "pred_fr", "pred_pt",
+                                            "pred_es")), "pred", "left")
+          .distinct())
     labels = F.create_map(
         F.lit("en"), F.col("pred"),
         F.lit("fr"), F.coalesce("pred_fr", F.col("pred")),

@@ -11,7 +11,8 @@ also gate mentions; ``entity_dim``, whose ``canonical_id`` column is
 ``canonical_map``; the claim dimension), and ``q_kg_nodes``' twostar
 frame, both keyed on ``df_key`` of the alias dimension;
 ``build_fulltext_index``, on ``df_key`` of the documents;
-``queries.kg.kg_artifacts``, on the corpus files' (mtime, size).
+``pipeline.load_synth`` and ``queries.kg.kg_artifacts``, both on
+``pipeline.corpus_key`` (the corpus files' path, mtime and size).
 ``df_key`` = (semanticHash, source file identity), so an input
 rewritten in place under an identical plan invalidates the entry."""
 

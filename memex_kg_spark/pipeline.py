@@ -11,14 +11,15 @@ build_graph: triples --distinct ids + dims + driver CC map--> nodes
 Shuffles each layer adds over its kept inputs (pinned by
 ``tests/test_plans.py::test_shuffles_per_layer``): statements 0 (narrow
 extraction), mentions 1 (mention_id window), linked mentions 0
-(broadcast-only linking), triples 2 (claim-side distinct, per-turn
-dedup), nodes 1 (distinct ids), edges 2 (edge dedup, locale distinct).
+(broadcast-only linking), triples 1 (per-turn dedup), nodes 1 (distinct
+ids), edges 1 (edge x locale dedup).
 Every fact-sized key is a high-cardinality composite, so AQE + salting
 keep reducers balanced even with Zipf-hot entities.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -27,14 +28,34 @@ from pyspark.sql import functions as F
 from .operators.canonicalize import build_edges, build_nodes
 from .operators.extraction import extract_statements, statements_to_mentions
 from .operators.linking import alias_winners, link_mentions
+from .operators.memo import alias_part, dim_memo
 
 QID_PATTERN = "^Q[0-9]+$"  # reference Q-id predicate, recursive_hops:187,192
 CORPUS_TABLES = ("transcripts", "alias_dim", "pred_dim")
 
 
+def corpus_key(sf_dir: str) -> tuple:
+    """``(path, st_mtime_ns, st_size)`` of every corpus file, a directory
+    table's files walked: a driver-side ``os.stat`` that starts no Spark
+    job, and changes when any file is rewritten, added or removed."""
+    files = []
+    for t in CORPUS_TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        walked = sorted(os.path.join(d, f) for d, _, fs in os.walk(p)
+                        for f in fs)
+        for f in walked or [p]:
+            st = os.stat(f)
+            files.append((f, st.st_mtime_ns, st.st_size))
+    return tuple(files)
+
+
 def load_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
-            for t in CORPUS_TABLES}
+    """The three corpus tables, memoized on the session by
+    ``corpus_key``: each parquet read infers its schema with a Spark
+    job, so only the first call per corpus state pays those three."""
+    return dim_memo(spark, "_kg_corpus_memo", corpus_key(sf_dir),
+                    lambda: {t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
+                             for t in CORPUS_TABLES})
 
 
 def stable_turns(transcripts: DataFrame) -> DataFrame:
@@ -72,7 +93,9 @@ def claim_triples(statements: DataFrame, alias_dim: DataFrame) -> DataFrame:
     """Claim-expansion triples: every entity linked anywhere in a turn
     contributes its dimension claims (the reference emitted one edge per
     Wikidata claim when visiting an entity, loop_on_properties +
-    link_father_son). Entity/literal typing via the Q-id regex."""
+    link_father_son). Entity/literal typing via the Q-id regex. A bag: a
+    qid linked in k slots of a turn repeats its claims k times; the
+    per-turn dedup drops them map-side (a turn is one transcript row)."""
     winners = alias_winners(alias_dim)
     linked = (statements
               .select("conv_id", "turn_idx",
@@ -81,10 +104,8 @@ def claim_triples(statements: DataFrame, alias_dim: DataFrame) -> DataFrame:
                       .alias("norm"))
               .join(F.broadcast(winners.select(
                   F.col("norm_alias").alias("norm"), "qid")), "norm")
-              .select("conv_id", "turn_idx", "qid")
-              .distinct())
+              .select("conv_id", "turn_idx", "qid"))
 
-    from .operators.memo import alias_part
     # the claim dimension (qid, pred, obj): a memoized derivative of the
     # alias dimension, exploded from each qid's aligned prop arrays
     props = alias_part(alias_dim, "props")

@@ -47,19 +47,18 @@ def kg_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     scan, and the localCheckpoint here is the in-process stand-in for
     that materialization (it also truncates lineage so iterative
     consumers like PPR re-plan from a flat scan). Memoized on the session
-    by ``memo.dim_memo``, keyed on the corpus files' (mtime, size): a
-    driver-side ``os.stat`` that starts no Spark job."""
+    by ``memo.dim_memo`` on ``pipeline.corpus_key``, the key
+    ``load_synth`` memoizes the corpus tables on."""
     from ..operators.memo import dim_memo
 
     p = synth_for(sf_dir)
-    key = (p,) + tuple((st.st_mtime_ns, st.st_size) for st in (
-        os.stat(f"{p}/{t}.parquet") for t in pipeline.CORPUS_TABLES))
 
     def _build():
         a = pipeline.build_kg(spark, p, keep=lambda df: df.localCheckpoint())
         return {**a, "edges": a["edges"].localCheckpoint()}
 
-    return dim_memo(spark, "_kg_artifact_memo", key, _build)
+    return dim_memo(spark, "_kg_artifact_memo", pipeline.corpus_key(p),
+                    _build)
 
 
 # --- shared DuckDB CTE text -------------------------------------------------

@@ -384,6 +384,107 @@ def test_alias_dims_match_oracle(spark, tmp_path):
     assert [r["norm_surface"] for r in mentions.collect()] == ["tie"]
 
 
+def test_triple_and_edge_dedups_match_expected_sets(spark, tmp_path):
+    """Each layer's one dedup gives the exact set: the per-turn triple
+    dedup absorbs a claim bag whose qid links in three slots of one turn
+    (subject and object of one statement, subject of another), and the
+    edge dedup after the locale join keeps one row per edge for a pred
+    with an exact duplicate locale row and two rows per edge for a pred
+    whose two locale rows disagree. A claim pred without a locale row
+    falls back to English."""
+    from memex_kg_spark import pipeline
+
+    alias_path = str(tmp_path / "alias_dim.parquet")
+    paris = (["P17", "P31"], ["Q2", "city"])
+    _write_alias_dim(pd.DataFrame(
+        [("paris", "Q1", *paris), ("the city", "Q1", *paris),
+         ("france", "Q2", ["P36"], ["Q1"])],
+        columns=["norm_alias", "qid", "prop_keys", "prop_vals"]), alias_path)
+    pred_path = str(tmp_path / "pred_dim.parquet")
+    capital = ("is capital of", "P1376", "capitale de", "capital de",
+               "capital de")
+    pd.DataFrame(
+        [capital, capital,
+         ("is in", "P17", "pays", "país", "país"),
+         ("lies in", "P17", "se trouve en", "fica em", "está en")],
+        columns=["phrase", "pred", "pred_fr", "pred_pt", "pred_es"],
+    ).to_parquet(pred_path, index=False)
+    alias, pred = (spark.read.parquet(alias_path),
+                   spark.read.parquet(pred_path))
+    statements = spark.createDataFrame(pd.DataFrame(
+        [("c", 0, "Paris", "is capital of", "France"),
+         ("c", 0, "Paris", "lies in", "the city"),
+         ("c", 1, "Paris", "is capital of", "France")],
+        columns=["conv_id", "turn_idx", "subj_surface", "phrase",
+                 "obj_surface"]))
+
+    triples = pipeline.triples_from_statements(statements, alias, pred)
+    claims = {("Q1", "P17", "Q2", "entity"), ("Q1", "P31", "city", "literal"),
+              ("Q2", "P36", "Q1", "entity")}
+    got = [tuple(r) for r in triples.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == {
+        ("c", 0, "Q1", "P1376", "Q2", "entity"),
+        ("c", 0, "Q1", "P17", "Q1", "entity"),
+        ("c", 1, "Q1", "P1376", "Q2", "entity"),
+    } | {("c", t, *c) for t in (0, 1) for c in claims}
+
+    _, edges = pipeline.build_graph(triples, alias, pred)
+    got = [(r["src"], r["pred"], r["dst"],
+            tuple(r["labels"][k] for k in ("en", "fr", "pt", "es")))
+           for r in edges.collect()]
+    capital_labels = ("P1376", "capitale de", "capital de", "capital de")
+    p17 = [("P17", "pays", "país", "país"),
+           ("P17", "se trouve en", "fica em", "está en")]
+    assert sorted(got) == sorted(
+        [("Q1", "P1376", "Q2", capital_labels),
+         ("Q2", "P36", "Q1", ("P36",) * 4)]
+        + [("Q1", "P17", dst, labels) for dst in ("Q1", "Q2")
+           for labels in p17])
+
+
+def test_load_synth_follows_rewritten_dimension(spark, sf_dir_smoke,
+                                                tmp_path):
+    """``load_synth`` is memoized per corpus state: a repeat call starts
+    no Spark job (no schema inference) and returns the same frames, and
+    an ``alias_dim.parquet`` rewritten in place is read afresh."""
+    import shutil
+
+    from memex_kg_spark.pipeline import corpus_key
+
+    for t in ("transcripts", "pred_dim"):
+        shutil.copy(f"{sf_dir_smoke}/{t}.parquet", tmp_path / f"{t}.parquet")
+    corpus = str(tmp_path)
+
+    def write(qids):
+        _write_alias_dim(pd.DataFrame({"norm_alias": ["paris"] * len(qids),
+                                       "qid": qids}),
+                         str(tmp_path / "alias_dim.parquet"))
+        return sorted(r["qid"] for r in
+                      load_synth(spark, corpus)["alias_dim"].collect())
+
+    assert write(["Q1"]) == ["Q1"]
+    sc = spark.sparkContext
+    sc.setJobGroup("load-synth-again", "repeat load_synth")
+    try:
+        again = load_synth(spark, corpus)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("load-synth-again") == []
+    assert again is load_synth(spark, corpus)
+    assert write(["Q2", "Q3"]) == ["Q2", "Q3"]
+
+    # a directory table's key covers every file inside it
+    before = corpus_key(corpus)
+    table = tmp_path / "pred_dim.parquet"
+    table.unlink()
+    table.mkdir()
+    (table / "part-0.parquet").write_bytes(b"x")
+    walked = corpus_key(corpus)
+    (table / "part-1.parquet").write_bytes(b"y")
+    assert len({before, walked, corpus_key(corpus)}) == 3
+
+
 def test_fulltext_index_follows_rewritten_docs(spark, tmp_path):
     """The fulltext index is memoized per documents table through
     ``memo.dim_memo`` keyed on ``df_key``: a table rewritten in place

@@ -9,7 +9,7 @@ Each test pins a property that matters at 100 TB:
 - the alias dimension's driver-built sides, canonical ids included, are
   handed back without a pickled Python RDD;
 - each flagship layer adds a fixed number of shuffles, and a warm build
-  a fixed number of jobs.
+  and a warm writer bucket a fixed number of jobs.
 """
 
 from __future__ import annotations
@@ -89,14 +89,15 @@ def test_shuffles_per_layer(spark, sf_dir_smoke):
     shuffles = {k: len(re.findall(r"\bExchange\b", p))
                 for k, p in layers.items()}
     assert shuffles == {"statements": 0, "mentions": 1, "linked_mentions": 0,
-                        "triples": 2, "nodes": 1, "edges": 2}
+                        "triples": 1, "nodes": 1, "edges": 1}
 
 
 def test_jobs_per_warm_build(spark, sf_dir_smoke):
     """Spark jobs per warm flagship build, a counter host noise cannot
-    move. One untimed build warms the session's dimension memos; the
-    counted build then persists each fan-out, writes every output to a
-    noop sink and unpersists, as each perfbench build does: 27 jobs."""
+    move. One untimed build warms the session's corpus and dimension
+    memos, so the counted build infers no parquet schema; it persists
+    each fan-out, writes every output to a noop sink and unpersists, as
+    each perfbench build does: 22 jobs."""
     from memex_kg_spark import pipeline
 
     sc = spark.sparkContext
@@ -120,7 +121,31 @@ def test_jobs_per_warm_build(spark, sf_dir_smoke):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     build_jobs("flagship-build-untimed")
-    assert build_jobs("flagship-build-warm") == 27
+    assert build_jobs("flagship-build-warm") == 22
+
+
+def test_jobs_per_writer_bucket(spark, sf_dir_smoke, tmp_path):
+    """Spark jobs per warm ``ResumableKGWriter.process_bucket``, a counter
+    host noise cannot move. One untimed bucket warms the session's
+    corpus and dimension memos; the counted bucket then rewrites the
+    same partition, with one shuffle (the per-turn dedup) and no schema
+    inference: 8 jobs."""
+    from memex_kg_spark.io.tables import ResumableKGWriter
+
+    w = ResumableKGWriter(spark, sf_dir_smoke, str(tmp_path / "kg"),
+                          n_buckets=2)
+    sc = spark.sparkContext
+
+    def bucket_jobs(group):
+        sc.setJobGroup(group, "writer bucket")
+        try:
+            w.process_bucket(0)
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bucket_jobs("writer-bucket-untimed")
+    assert bucket_jobs("writer-bucket-warm") == 8
 
 
 def test_topk_plans_take_ordered(spark, testdata_sf001):
