@@ -1,25 +1,28 @@
-"""Session-scoped memoization: the package's one memo helper, and the
-alias dimension's one memo built with it.
+"""Session-scoped memoization: the package's one memo helper, its one
+input-identity key, and the alias dimension's one memo built with them.
 
 Dimension-side computations are tiny but each build is a fixed
 driver-side cost — a shuffle + localCheckpoint + broadcast build — paid
 per pipeline run. A long-running cluster job computes them once; paying
 them 4-5x per run flattens the N->4N scaling curve (fixed cost C in
-T = W/N + C dominates as N grows). Users: ``alias_part``, one entry per
-alias dimension holding three frames (``alias_winners``, whose aliases
-also gate mentions; ``entity_dim``, whose ``canonical_id`` column is
-``canonical_map``; the claim dimension), and ``q_kg_nodes``' twostar
-frame, both keyed on ``df_key`` of the alias dimension;
-``build_fulltext_index``, on ``df_key`` of the documents;
-``pipeline.load_synth`` and ``queries.kg.kg_artifacts``, both on
-``pipeline.corpus_key`` (the corpus files' path, mtime and size).
-``df_key`` = (semanticHash, source file identity), so an input
-rewritten in place under an identical plan invalidates the entry."""
+T = W/N + C dominates as N grows). Every entry is keyed on ``files_key``
+(each input file's path, mtime and size), so an input rewritten in
+place invalidates it: ``df_key`` (semanticHash + ``files_key`` of the
+input files) keys ``alias_part`` (the alias dimension's three frames:
+``alias_winners``, also the mention gate; ``entity_dim``, whose
+``canonical_id`` column is ``canonical_map``; the claim dimension),
+``q_kg_nodes``' twostar frame and ``build_fulltext_index``;
+``pipeline.load_synth`` and ``queries.kg.kg_artifacts`` key on
+``files_key`` of the three corpus tables. Limit: ``os`` cannot stat a
+path on another filesystem (``hdfs://``, ``s3a://``), so it is keyed by
+name and a remote corpus rewritten during a session goes unseen: one
+corpus state per writer run."""
 
 from __future__ import annotations
 
 import os
 import threading
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pyarrow as pa
@@ -29,15 +32,28 @@ from pyspark.sql import DataFrame
 _MEMO_LOCK = threading.Lock()  # guards the per-session dicts, not builds
 
 
+def files_key(paths) -> tuple:
+    """``(path, st_mtime_ns, st_size)`` of every file under each of
+    ``paths``, directories walked, by ``os.stat`` (no Spark job). A
+    ``file:`` URI is stat'ed as the local path it names; a missing local
+    path raises; a path on another filesystem gives ``(path,)``."""
+    files = []
+    for p in paths:
+        url = urlsplit(p)
+        if url.scheme not in ("", "file"):
+            files.append((p,))
+            continue
+        local = unquote(url.path) if url.scheme else p
+        walked = sorted(os.path.join(d, f) for d, _, fs in os.walk(local)
+                        for f in fs)
+        for f in walked or [local]:
+            st = os.stat(f)
+            files.append((p + f[len(local):], st.st_mtime_ns, st.st_size))
+    return tuple(files)
+
+
 def df_key(df: DataFrame) -> tuple:
-    try:
-        files = tuple(sorted(
-            (f, os.path.getmtime(f.replace("file:", "")),
-             os.path.getsize(f.replace("file:", "")))
-            for f in df.inputFiles()))
-    except OSError:
-        files = ()
-    return (df.semanticHash(), files)
+    return (df.semanticHash(), files_key(sorted(df.inputFiles())))
 
 
 class _Entry:

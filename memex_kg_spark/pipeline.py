@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline (the flagship plan), in two halves.
 
-build_triples: transcripts --window sort--> statements (mapInArrow)
+build_triples: transcripts --narrow mapInArrow--> statements
     --broadcast alias winners--> statement + claim triples --per-turn
     dedup--> triples. The resumable writer runs it per bucket, streaming
     per micro-batch.
@@ -19,7 +19,6 @@ keep reducers balanced even with Zipf-hot entities.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,34 +27,23 @@ from pyspark.sql import functions as F
 from .operators.canonicalize import build_edges, build_nodes
 from .operators.extraction import extract_statements, statements_to_mentions
 from .operators.linking import alias_winners, link_mentions
-from .operators.memo import alias_part, dim_memo
+from .operators.memo import alias_part, dim_memo, files_key
 
 QID_PATTERN = "^Q[0-9]+$"  # reference Q-id predicate, recursive_hops:187,192
 CORPUS_TABLES = ("transcripts", "alias_dim", "pred_dim")
 
 
-def corpus_key(sf_dir: str) -> tuple:
-    """``(path, st_mtime_ns, st_size)`` of every corpus file, a directory
-    table's files walked: a driver-side ``os.stat`` that starts no Spark
-    job, and changes when any file is rewritten, added or removed."""
-    files = []
-    for t in CORPUS_TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        walked = sorted(os.path.join(d, f) for d, _, fs in os.walk(p)
-                        for f in fs)
-        for f in walked or [p]:
-            st = os.stat(f)
-            files.append((f, st.st_mtime_ns, st.st_size))
-    return tuple(files)
-
-
 def load_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The three corpus tables, memoized on the session by
-    ``corpus_key``: each parquet read infers its schema with a Spark
-    job, so only the first call per corpus state pays those three."""
-    return dim_memo(spark, "_kg_corpus_memo", corpus_key(sf_dir),
-                    lambda: {t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
-                             for t in CORPUS_TABLES})
+    """The three corpus tables under ``sf_dir`` (a local path or any
+    Hadoop URI Spark reads: ``file://``, ``hdfs://``, ``s3a://``),
+    memoized on the session by ``memo.files_key`` of the three tables:
+    each parquet read infers its schema with a Spark job, so only the
+    first call per corpus state pays those three. A remote corpus is
+    keyed by its table paths alone (see ``memo``)."""
+    paths = {t: f"{sf_dir}/{t}.parquet" for t in CORPUS_TABLES}
+    return dim_memo(spark, "_kg_corpus_memo", files_key(paths.values()),
+                    lambda: {t: spark.read.parquet(p)
+                             for t, p in paths.items()})
 
 
 def stable_turns(transcripts: DataFrame) -> DataFrame:

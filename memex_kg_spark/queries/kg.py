@@ -47,9 +47,10 @@ def kg_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     scan, and the localCheckpoint here is the in-process stand-in for
     that materialization (it also truncates lineage so iterative
     consumers like PPR re-plan from a flat scan). Memoized on the session
-    by ``memo.dim_memo`` on ``pipeline.corpus_key``, the key
-    ``load_synth`` memoizes the corpus tables on."""
-    from ..operators.memo import dim_memo
+    by ``memo.dim_memo`` on ``memo.files_key`` of the three corpus
+    tables, the key ``load_synth`` memoizes them on, so a rewritten
+    local corpus file rebuilds."""
+    from ..operators.memo import dim_memo, files_key
 
     p = synth_for(sf_dir)
 
@@ -57,8 +58,8 @@ def kg_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         a = pipeline.build_kg(spark, p, keep=lambda df: df.localCheckpoint())
         return {**a, "edges": a["edges"].localCheckpoint()}
 
-    return dim_memo(spark, "_kg_artifact_memo", pipeline.corpus_key(p),
-                    _build)
+    key = files_key(f"{p}/{t}.parquet" for t in pipeline.CORPUS_TABLES)
+    return dim_memo(spark, "_kg_artifact_memo", key, _build)
 
 
 # --- shared DuckDB CTE text -------------------------------------------------

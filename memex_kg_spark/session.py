@@ -2,9 +2,10 @@
 
 Local-mode knobs mirror what a 1000-executor deployment would set cluster-
 wide: AQE on (runtime re-plan + skew-join splitting), shuffle partitions
-sized to cores (not the 200 default), Arrow enabled for the pandas-UDF
-extraction stage, UTC session timezone so DuckDB-oracle timestamp
-comparisons are exact.
+sized to cores (not the 200 default), Arrow enabled for the driver's
+``toPandas``/``createDataFrame`` transfers, 10,000-row Arrow batches
+for the ``mapInArrow`` extraction stage, UTC session timezone so
+DuckDB-oracle timestamp comparisons are exact.
 """
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 
 BASELINE.json mandates the input shape: an Iceberg/parquet table of
 multi-turn transcripts ``(conv_id:string, turn_idx:int32, role:string,
-text:string, tool:string, ts:timestamp)``. No such table ships with the
-sandbox testdata, so this module synthesises one deterministically
+text:string, tool:string, ts:timestamp)``, ``ts`` zone-less (Spark's
+``timestamp_ntz``). No such table ships with the sandbox testdata, so
+this module synthesises one deterministically
 (seed=42, pure function of the conversation index) at any scale:
 
 - ``gen_conv_batch(conv_indices)`` — pandas DataFrame for a batch of

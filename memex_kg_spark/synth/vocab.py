@@ -29,7 +29,7 @@ ZIPF_S = 1.1  # mention-frequency skew (hot landmarks/persons)
 
 # the transcript table (generated corpus, streaming sources)
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
-                     "text string, tool string, ts timestamp")
+                     "text string, tool string, ts timestamp_ntz")
 
 # --- entity name pools (disjoint from PRED/NOISE words) -------------------
 ADJECTIVES = [

@@ -1,23 +1,12 @@
 #!/usr/bin/env bash
 # Package memex_kg_spark and run the KG-construction job the way the
 # north rule specifies: spark-submit --py-files <zip>.  On a cluster,
-# swap --master for yarn/k8s; nothing else changes.
+# set MASTER to yarn/k8s/spark://...; nothing else changes: the job
+# sizes its shuffle partitions from the cluster's default parallelism,
+# and SYNTH_DIR may be any Hadoop URI (hdfs://, s3a://, file://).
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${MASTER:-local[8]}"
-# match the configuration the published bench numbers were measured
-# under: max(32, 2*cores) shuffle partitions (bench.py stage_run)
-if [ -z "${SHUFFLE_PARTITIONS:-}" ]; then
-  CORES="$(echo "$MASTER" | sed -n 's/^local\[\([0-9]*\)\]$/\1/p')"
-  if [ "$MASTER" = 'local[*]' ]; then
-    CORES="$(nproc 2>/dev/null || echo '')"  # local[*] = all host cores
-  fi
-  if [ -n "$CORES" ] && [ $(( CORES * 2 )) -gt 32 ]; then
-    SHUFFLE_PARTITIONS=$(( CORES * 2 ))
-  else
-    SHUFFLE_PARTITIONS=32
-  fi
-fi
 SYNTH="${1:?usage: spark_submit.sh SYNTH_DIR OUT_DIR [N_BUCKETS]}"
 OUT="${2:?usage: spark_submit.sh SYNTH_DIR OUT_DIR [N_BUCKETS]}"
 BUCKETS="${3:-8}"
@@ -32,8 +21,6 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
                 z.write(p, p)
 ")
 exec spark-submit --master "$MASTER" \
-    --conf spark.sql.adaptive.enabled=true \
     --py-files "$ZIP" \
     "$REPO/scripts/submit_pipeline.py" \
-    --synth "$SYNTH" --out "$OUT" --n-buckets "$BUCKETS" \
-    --shuffle-partitions "$SHUFFLE_PARTITIONS"
+    --synth "$SYNTH" --out "$OUT" --n-buckets "$BUCKETS"

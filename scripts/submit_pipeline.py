@@ -16,8 +16,9 @@ Usage (see scripts/spark_submit.sh for the packaged invocation):
         --n-buckets 8 --run-id run-1
 
 On a real cluster only --master changes (yarn / k8s / spark://...);
-the job itself is master-agnostic.  Re-running after a crash resumes
-from committed lineage (anti-join of pending buckets vs lineage rows).
+the job itself is master-agnostic (--synth may be any Hadoop URI).
+Re-running after a crash resumes from committed lineage (anti-join of
+pending buckets vs lineage rows).
 """
 import argparse
 import json
@@ -27,21 +28,22 @@ import sys
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--synth", required=True,
-                    help="transcript corpus dir (conv_id, turn_idx, role, "
-                         "text, tool, ts)")
+                    help="corpus dir, a local path or any Hadoop URI "
+                         "(transcripts, alias_dim, pred_dim tables)")
     ap.add_argument("--out", required=True, help="warehouse output root")
     ap.add_argument("--n-buckets", type=int, default=8)
     ap.add_argument("--run-id", default="run-1")
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
     a = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    b = SparkSession.builder.appName("memex-kg-construct")
-    if a.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions",
-                     str(a.shuffle_partitions))
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = SparkSession.builder.appName("memex-kg-construct").getOrCreate()
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    # two reducers per cluster core, at least 32 (AQE coalesces, never
+    # splits), unless the deployment sets it (--conf, spark-defaults.conf)
+    parts = int(sc.getConf().get("spark.sql.shuffle.partitions",
+                                 str(max(32, 2 * sc.defaultParallelism))))
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
 
     # Import AFTER the session exists so the module resolves from the
     # --py-files zip on executors exactly as it does on the driver.
@@ -56,6 +58,7 @@ def main() -> None:
         "n_triples": w.triples().count(),
         "n_nodes": nodes.count(),
         "n_edges": edges.count(),
+        "shuffle_partitions": parts,
     }
     print("SUBMIT_SUMMARY=" + json.dumps(summary))
     spark.stop()

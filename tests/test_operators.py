@@ -16,6 +16,7 @@ from memex_kg_spark.operators.components import (
 from memex_kg_spark.operators.extraction import (
     extract_statements,
     extract_statements_sql,
+    statements_to_mentions,
 )
 from memex_kg_spark.functions.geo import haversine_km
 from memex_kg_spark.pipeline import load_synth
@@ -49,15 +50,34 @@ def test_pandas_vs_sql_extraction(spark, sf_dir_smoke):
         assert key(a) == key(b)
 
 
-def test_salted_counts_equals_plain(spark, sf_dir_smoke):
+def test_salted_counts_equals_plain(spark, sf_dir_smoke, tmp_path):
+    """The salted two-phase count equals the plain ``groupBy`` count, on
+    the corpus' roles and on skewed mentions: one surface form fills
+    >= 30% of the gated slots (the hot key salting exists for)."""
     tr = load_synth(spark, sf_dir_smoke)["transcripts"]
-    plain = (tr.groupBy("role").count()
-             .withColumnRenamed("count", "n").toPandas())
-    salted = salted_counts(tr, "role", n_salts=8).toPandas()
-    a = plain.sort_values("role").reset_index(drop=True)
-    b = salted.sort_values("role").reset_index(drop=True)
-    assert (a["role"] == b["role"]).all()
-    assert (a["n"].astype(int) == b["n"].astype(int)).all()
+    cold = ["Lyon", "Rome", "Milan", "Oslo", "Bern"]
+    statements = spark.createDataFrame(
+        [(f"c{i % 4}", i, "Paris" if i % 4 else cold[i % 5], 0,
+          cold[i % 5], 12) for i in range(20)],
+        "conv_id string, turn_idx int, subj_surface string, subj_start int,"
+        " obj_surface string, obj_start int")
+    path = str(tmp_path / "alias_dim.parquet")
+    names = ["paris"] + [c.lower() for c in cold]
+    _write_alias_dim(pd.DataFrame({"norm_alias": names,
+                                   "qid": [f"Q{i}" for i in range(6)]}),
+                     path)
+    mentions = statements_to_mentions(statements, spark.read.parquet(path))
+    hot = mentions.filter(F.col("norm_surface") == "paris").count()
+    assert hot / mentions.count() >= 0.3
+
+    for df, key in ((tr, "role"), (mentions, "norm_surface")):
+        plain = (df.groupBy(key).count()
+                 .withColumnRenamed("count", "n").toPandas())
+        salted = salted_counts(df, key, n_salts=8).toPandas()
+        a = plain.sort_values(key).reset_index(drop=True)
+        b = salted.sort_values(key).reset_index(drop=True)
+        assert (a[key] == b[key]).all()
+        assert (a["n"].astype(int) == b["n"].astype(int)).all()
 
 
 def test_connected_components_fixture(spark):
@@ -450,7 +470,11 @@ def test_load_synth_follows_rewritten_dimension(spark, sf_dir_smoke,
     an ``alias_dim.parquet`` rewritten in place is read afresh."""
     import shutil
 
-    from memex_kg_spark.pipeline import corpus_key
+    from memex_kg_spark.operators.memo import files_key
+    from memex_kg_spark.pipeline import CORPUS_TABLES
+
+    def key(corpus):
+        return files_key(f"{corpus}/{t}.parquet" for t in CORPUS_TABLES)
 
     for t in ("transcripts", "pred_dim"):
         shutil.copy(f"{sf_dir_smoke}/{t}.parquet", tmp_path / f"{t}.parquet")
@@ -475,14 +499,72 @@ def test_load_synth_follows_rewritten_dimension(spark, sf_dir_smoke,
     assert write(["Q2", "Q3"]) == ["Q2", "Q3"]
 
     # a directory table's key covers every file inside it
-    before = corpus_key(corpus)
+    before = key(corpus)
     table = tmp_path / "pred_dim.parquet"
     table.unlink()
     table.mkdir()
     (table / "part-0.parquet").write_bytes(b"x")
-    walked = corpus_key(corpus)
+    walked = key(corpus)
     (table / "part-1.parquet").write_bytes(b"y")
-    assert len({before, walked, corpus_key(corpus)}) == 3
+    assert len({before, walked, key(corpus)}) == 3
+
+
+def test_files_key_stats_local_files_and_names_remote_ones(tmp_path,
+                                                          monkeypatch):
+    """``memo.files_key``: a ``file:`` URI is stat'ed as the local path
+    it names, a path on another filesystem contributes its name without
+    touching the local disk, and a missing local path raises."""
+    import os
+
+    import pytest
+
+    from memex_kg_spark.operators.memo import files_key
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    (table / "part-0.parquet").write_bytes(b"x")
+    st = os.stat(table / "part-0.parquet")
+    for p in (str(table), f"file://{table}"):
+        assert files_key([p]) == (
+            (f"{p}/part-0.parquet", st.st_mtime_ns, st.st_size),)
+    with pytest.raises(FileNotFoundError):
+        files_key([str(tmp_path / "missing.parquet")])
+
+    def no_disk(*a, **k):
+        raise AssertionError("stat'ed a remote path")
+
+    remote = "hdfs://nn:8020/corpus/alias_dim.parquet"
+    monkeypatch.setattr(os, "stat", no_disk)
+    monkeypatch.setattr(os, "walk", no_disk)
+    assert files_key([remote]) == ((remote,),)
+
+
+def test_build_kg_reads_a_file_uri_corpus(spark, sf_dir_smoke):
+    """The corpus may be a URI as well as a path: ``build_kg`` over
+    ``file://`` + the corpus dir reads through that URI and gives the
+    same triples as over the plain path."""
+    from memex_kg_spark.pipeline import build_kg
+
+    uri = "file://" + sf_dir_smoke
+    assert all(f.startswith("file:") for f in
+               load_synth(spark, uri)["transcripts"].inputFiles())
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj", "obj_type"]
+    plain = build_kg(spark, sf_dir_smoke)["triples"].select(cols)
+    got = build_kg(spark, uri)["triples"].select(cols)
+    assert got.count() == plain.count() > 0
+    assert got.exceptAll(plain).isEmpty() and plain.exceptAll(got).isEmpty()
+
+
+def test_load_synth_transcripts_match_declared_schema(spark, sf_dir_smoke):
+    """Batch reads (schema inferred) and the streaming readers (declared
+    ``TRANSCRIPT_SCHEMA``) type the transcripts alike: ``ts`` is the
+    zone-less ``timestamp_ntz`` every corpus writer produces."""
+    from memex_kg_spark.synth.vocab import TRANSCRIPT_SCHEMA
+
+    path = f"{sf_dir_smoke}/transcripts.parquet"
+    declared = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
+    assert (load_synth(spark, sf_dir_smoke)["transcripts"].schema
+            == declared.schema)
 
 
 def test_fulltext_index_follows_rewritten_docs(spark, tmp_path):

@@ -34,6 +34,8 @@ def test_spark_submit_pyfiles_and_resume(tmp_path):
     s1 = _run(out)
     assert s1["processed"] == 4 and s1["skipped"] == 0
     assert s1["n_triples"] > 0 and s1["n_nodes"] > 0 and s1["n_edges"] > 0
+    # max(32, 2 * defaultParallelism) at local[4]
+    assert s1["shuffle_partitions"] == 32
 
     # idempotent resume: every bucket already committed in lineage
     s2 = _run(out)
